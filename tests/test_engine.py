@@ -72,6 +72,27 @@ def test_failed_query_keeps_previous_result(dataset):
     assert dataset.result.row_count == 7
 
 
+def _is_cached(df) -> bool:
+    level = df.storageLevel  # the JVM cache manager's entry for the plan
+    return level.useMemory or level.useDisk
+
+
+def test_rerun_same_sql_keeps_result_cached(dataset):
+    # the re-run's cache entry is the old result's (equal plans): replacing
+    # the old result must not evict it
+    first = dataset.query("SELECT * FROM data")
+    first.search("URGENT")
+    for _ in range(2):
+        rs = dataset.query("SELECT * FROM data")
+        assert _is_cached(rs._base)
+    assert not _is_cached(first._filtered)  # the old search result is freed
+    assert rs.page(3, 10) == dataset.page(3, 10)
+    # a failing query still keeps the (cached) previous result
+    with pytest.raises(Exception):
+        dataset.query("SELECT no_such_column FROM data")
+    assert dataset.result is rs and _is_cached(rs._base)
+
+
 def test_query_after_failure_still_works(dataset):
     rs = dataset.query("SELECT count(*) AS n FROM data")
     assert rs.page(1, 1)[0]["n"] == 1500

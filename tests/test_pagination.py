@@ -59,3 +59,36 @@ def test_page_all(spark):
     p = Paginator(df, 30, PAGE_ALL)
     assert p.total_pages == 1
     assert len(p.first().collect()) == 30
+
+
+@pytest.fixture(scope="module")
+def result(spark):
+    from vscode_parquet_visualizer_spark.engine import ResultSet
+
+    rs = ResultSet(spark.range(0, 1000, 1, 4), name="plan_shape")
+    yield rs
+    rs.unpersist()
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_deep_unsorted_page_reads_a_row_id_span(result):
+    plan = _plan(result.page_df(5, 100))
+    assert "TakeOrderedAndProject(limit=100, orderBy=" in plan
+    assert "offset=" not in plan
+    assert "(__row_id#" in plan.split("InMemoryTableScan")[1]  # batch pruning
+    assert [r.id for r in result.page_df(5, 100).collect()] == list(range(400, 500))
+
+
+def test_sorted_and_all_pages_keep_their_plans(result):
+    assert "Filter" not in _plan(result.page_df(1, PAGE_ALL))
+    assert "TakeOrdered" not in _plan(result.page_df(1, PAGE_ALL))
+    result.sort("id", "desc")
+    try:
+        plan = _plan(result.page_df(5, 100))
+        assert "TakeOrderedAndProject(limit=500, offset=400," in plan
+        assert "Filter" not in plan
+    finally:
+        result.sort(None)

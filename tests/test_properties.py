@@ -12,7 +12,12 @@ from vscode_parquet_visualizer_spark.functions.serialization import (
     safe_column_name,
     serialize_value,
 )
-from vscode_parquet_visualizer_spark.operators.pagination import page_count
+from vscode_parquet_visualizer_spark.operators.pagination import (
+    ROW_ID,
+    Paginator,
+    page_count,
+    row_id_span,
+)
 from vscode_parquet_visualizer_spark.plans.dialect import (
     rewrite_pg_cast,
     transpile,
@@ -784,3 +789,85 @@ def test_join_fuzz_spark_matches_duckdb(spark, rng):
         )
 
     assert rs(got) == rs(duck), sql
+
+
+# Position-indexed pages: an unsorted page reads one ``__row_id`` span
+# through the (partition, rows) index instead of Spark's
+# ``offset().limit()``; both must return the same rows on any partition
+# layout, empty partitions and a part-filled last page included.
+
+_PART_SIZES = st.lists(st.integers(min_value=0, max_value=30), min_size=1, max_size=8)
+
+
+@given(_PART_SIZES, st.integers(min_value=0, max_value=250), st.integers(min_value=1, max_value=40))
+def test_row_id_span_holds_exactly_the_page(sizes, offset, n):
+    parts = [(p, rows) for p, rows in enumerate(sizes) if rows]
+    ids = [(p << 33) + i for p, rows in parts for i in range(rows)]
+    lo, hi = row_id_span(parts, offset, n)
+    assert [i for i in ids if lo <= i < hi] == ids[offset : offset + n]
+
+
+def _partitioned_frame(spark, sizes):
+    """One partition per entry of ``sizes`` holding that many rows (0 is
+    an empty partition); every third row of a partition is tagged 'hit'."""
+    from pyspark.sql import functions as F
+
+    rows = F.element_at(F.array(*[F.lit(s) for s in sizes]), F.col("id").cast("int") + 1)
+    return spark.range(0, len(sizes), 1, len(sizes)).select(
+        F.col("id").alias("part"),
+        F.posexplode(F.array_repeat(F.lit(0), rows)),
+    ).select(
+        F.concat_ws("-", "part", "pos").alias("label"),
+        F.when(F.col("pos") % 3 == 0, "hit").otherwise("miss").alias("tag"),
+    )
+
+
+def _labels(df):
+    return [r["label"] for r in df.collect()]
+
+
+@_settings(max_examples=25, deadline=None)
+@_given(_PART_SIZES, st.integers(min_value=1, max_value=25), st.data())
+def test_indexed_result_pages_match_offset_pages(spark, sizes, size, data):
+    from vscode_parquet_visualizer_spark.engine import ResultSet
+
+    frame = _partitioned_frame(spark, sizes)
+    rows = [(f"{p}-{i}", "hit" if i % 3 == 0 else "miss") for p, s in enumerate(sizes) for i in range(s)]
+    rs = ResultSet(frame, name="prop_pages")
+    try:
+        for term in ("", "hit"):  # the base result, then a searched one
+            rs.search(term)
+            want = [label for label, tag in rows if term in tag]
+            assert rs.current_count == len(want)
+            indexed = rs.paginator(size)
+            assert indexed.partition_rows is not None
+            plain = Paginator(indexed.df, indexed.total_rows, size)
+            n = data.draw(st.integers(min_value=1, max_value=indexed.total_pages))
+            page = want[(n - 1) * size : n * size]
+            assert _labels(indexed.goto(n).drop(ROW_ID)) == page
+            assert _labels(plain.goto(n).drop(ROW_ID)) == page
+    finally:
+        rs.unpersist()
+
+
+@_settings(max_examples=10, deadline=None)
+@_given(_PART_SIZES, st.integers(min_value=1, max_value=25), st.sampled_from(["parquet", "csv"]), st.data())
+def test_indexed_data_pages_match_offset_pages(spark, sizes, size, fmt, data):
+    import tempfile
+
+    from vscode_parquet_visualizer_spark.engine import Engine, _with_row_id
+
+    with tempfile.TemporaryDirectory() as tmp:
+        path = f"{tmp}/frame"
+        _partitioned_frame(spark, sizes).write.format(fmt).option("header", True).save(path)
+        options = {"sep": ",", "header": True} if fmt == "csv" else {}
+        ds = Engine(spark=spark).open(path, fmt=fmt, **options)
+        try:
+            assert ds.row_count() == sum(sizes)
+            plain = Paginator(_with_row_id(ds.df).orderBy(ROW_ID), ds.row_count(), size)
+            n = data.draw(st.integers(min_value=1, max_value=plain.total_pages))
+            want = _labels(plain.goto(n).drop(ROW_ID))
+            assert [r["label"] for r in ds.page(n, size)] == want
+            assert len(want) == min(size, sum(sizes) - (n - 1) * size)
+        finally:
+            ds.close()

@@ -9,7 +9,8 @@ SparkSession:
 - ``Dataset.query(sql)`` ≈ startQuery (src/worker.ts:92-134): transpile the
   dialect, build the DataFrame, **materialize** it (cache + count — the
   CTAS-equivalent, src/worker.ts:83-90), attach a stable ``__row_id`` so
-  pagination is deterministic, and only then swap the ``query_result``
+  pagination is deterministic (and, counted per partition, a position
+  index for unsorted pages), and only then swap the ``query_result``
   binding — a failing query leaves the previous result intact (atomic
   replace, CHANGELOG.md:205).
 - ``ResultSet.page/sort/search/export/schema`` ≈ the paginator + search +
@@ -50,6 +51,7 @@ from vscode_parquet_visualizer_spark.operators.pagination import (
     PAGE_ALL,
     ROW_ID,
     Paginator,
+    partition_rows,
 )
 from vscode_parquet_visualizer_spark.plans import dialect
 from vscode_parquet_visualizer_spark.session import get_spark
@@ -99,10 +101,12 @@ class ResultSet:
         self.settings = settings or Settings()
         self._base = _with_row_id(df).persist(StorageLevel.MEMORY_AND_DISK)
         with scheduler_pool(df.sparkSession, POOL_QUERY):
-            self.row_count = self._base.count()  # eager: the CTAS moment
+            # eager: the CTAS moment; the per-partition count is the index
+            self._base_parts = partition_rows(self._base)
+        self.row_count = sum(rows for _, rows in self._base_parts)
         self.name = name
         self._filtered: DataFrame | None = None
-        self._filtered_count: int | None = None
+        self._filtered_parts: list[tuple[int, int]] | None = None
         self._search_term: str = ""
         self._sort_field: str | None = None
         self._sort_dir: str = sort_ops.ASC
@@ -128,11 +132,14 @@ class ResultSet:
     def _current(self) -> DataFrame:
         return self._filtered if self._filtered is not None else self._base
 
+    def _current_parts(self) -> list[tuple[int, int]]:
+        if self._filtered is not None:
+            return self._filtered_parts  # type: ignore[return-value]
+        return self._base_parts
+
     @property
     def current_count(self) -> int:
-        if self._filtered is not None:
-            return self._filtered_count  # type: ignore[return-value]
-        return self.row_count
+        return sum(rows for _, rows in self._current_parts())
 
     # -- interaction (A7-A9) --------------------------------------------
     def sort(self, field: str | None, direction: str = sort_ops.ASC) -> None:
@@ -140,25 +147,32 @@ class ResultSet:
 
     def search(self, term: str) -> int:
         """Materialize the filtered result (reference CTAS to
-        filtered_query_result, src/worker.ts:151-180); returns match count."""
+        filtered_query_result, src/worker.ts:151-180); returns match count.
+        The matches get a fresh, dense ``__row_id`` so they carry their own
+        position index; a filter keeps partition order, so the new ids keep
+        the old relative order."""
         if self._filtered is not None:
             self._filtered.unpersist()
-            self._filtered, self._filtered_count = None, None
+            self._filtered, self._filtered_parts = None, None
         self._search_term = term
         if term != "":
-            flt = search_ops.search(self._base, term).persist(
-                StorageLevel.MEMORY_AND_DISK
-            )
-            self._filtered = flt
+            flt = _with_row_id(
+                search_ops.search(self._base.drop(ROW_ID), term)
+            ).persist(StorageLevel.MEMORY_AND_DISK)
             with scheduler_pool(flt.sparkSession, POOL_INTERACTIVE):
-                self._filtered_count = flt.count()
+                self._filtered_parts = partition_rows(flt)
+            self._filtered = flt
         return self.current_count
 
     def _ordered(self) -> DataFrame:
         return sort_ops.sort(self._current(), self._sort_field, self._sort_dir)
 
     def paginator(self, page_size: int = 20) -> Paginator:
-        return Paginator(self._ordered(), self.current_count, page_size)
+        # the position index orders by __row_id alone: unsorted pages only
+        parts = self._current_parts() if self._sort_field is None else None
+        return Paginator(
+            self._ordered(), self.current_count, page_size, partition_rows=parts
+        )
 
     def page(self, page_number: int = 1, page_size: int = 20) -> list[dict[str, Any]]:
         """One page of JSON-safe rows — the webview row contract."""
@@ -182,10 +196,14 @@ class ResultSet:
         with scheduler_pool(self._base.sparkSession, POOL_INTERACTIVE):
             export_ops.export(self._ordered().drop(ROW_ID), path, fmt, **kwargs)
 
-    def unpersist(self) -> None:
+    def unpersist(self, keep_base: bool = False) -> None:
+        """Drop the cached result; ``keep_base`` drops only the search
+        result (the base cache entry is shared with a successor whose plan
+        is the same — re-running the same SQL)."""
         if self._filtered is not None:
             self._filtered.unpersist()
-        self._base.unpersist()
+        if not keep_base:
+            self._base.unpersist()
 
 
 _dataset_counter = 0
@@ -217,11 +235,13 @@ class Dataset:
         note_catalog_change()  # ``data`` re-bound: stale gate probes out
         self._result: ResultSet | None = None
         self._row_count: int | None = None
+        self._parts: list[tuple[int, int]] | None = None
 
     # -- row count: footer fast path for parquet (A6) ---------------------
     def row_count(self) -> int:
-        """Cached: parquet reads footers (O(1)); CSV/JSON pay one COUNT(*)
-        once, mirroring the reference's init-time count for non-parquet
+        """Cached: parquet reads footers (O(1)); CSV/JSON pay one count job
+        once — the page index's, which it sums — mirroring the
+        reference's init-time count for non-parquet
         (src/duckdb-backend.ts:86-95)."""
         if self._row_count is None:
             if self.format == "parquet" and not self.path.startswith("s3a://"):
@@ -230,17 +250,27 @@ class Dataset:
                 except Exception:
                     pass
             if self._row_count is None:
-                self._row_count = self.df.count()
+                self._row_count = sum(rows for _, rows in self._partition_rows())
         return self._row_count
+
+    def _partition_rows(self) -> list[tuple[int, int]]:
+        if self._parts is None:
+            self._parts = partition_rows(_with_row_id(self.df))
+        return self._parts
 
     # -- data tab: page directly against the file, no materialization -----
     def page(self, page_number: int = 1, page_size: int = 20) -> list[dict[str, Any]]:
         """Direct-from-file paging (readFromFile=true path, src/worker.ts:46):
-        opening a huge file never loads it fully — sort-by-row-id + limit
-        plans as TakeOrdered (top-k), so early pages stay cheap while page
-        boundaries survive file-listing/split changes between calls."""
+        opening a huge file never loads it fully. Page 1 is a top-k on the
+        row id; a deeper page reads one ``__row_id`` span through the
+        position index, built by one job on the first deep page and kept
+        for the life of this Dataset. Row ids follow the file split
+        layout, so a file rewritten under an open Dataset gives stale
+        pages, just as it gives a stale cached ``row_count``."""
         anchored = _with_row_id(self.df).orderBy(ROW_ID)
         pager = Paginator(anchored, self.row_count(), page_size)
+        if page_size != PAGE_ALL and 1 < page_number <= pager.total_pages:
+            pager.partition_rows = self._partition_rows()
         return serialize_rows(
             pager.goto(page_number).drop(ROW_ID).collect(),
             settings=self.engine.settings,
@@ -303,7 +333,10 @@ class Dataset:
         )  # eager count; raises on bad SQL
         new_result.query_ms = (time.perf_counter() - t0) * 1000.0
         if self._result is not None:
-            self._result.unpersist()
+            # the same plan re-run shares the old cache entry: keep it
+            self._result.unpersist(
+                keep_base=new_result._base.sameSemantics(self._result._base)
+            )
         self._result = new_result
         return new_result
 
