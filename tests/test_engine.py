@@ -2,8 +2,15 @@
 (SURVEY.md §3: open → default query → page → sort → search → export)."""
 
 import pytest
+from pyspark import StorageLevel
+from pyspark.sql import functions as F
 
-from vscode_parquet_visualizer_spark.engine import Engine
+from vscode_parquet_visualizer_spark.engine import (
+    _COMPRESSED,
+    Engine,
+    ResultSet,
+    _with_row_id,
+)
 
 
 @pytest.fixture(scope="module")
@@ -91,6 +98,101 @@ def test_rerun_same_sql_keeps_result_cached(dataset):
     with pytest.raises(Exception):
         dataset.query("SELECT no_such_column FROM data")
     assert dataset.result is rs and _is_cached(rs._base)
+
+
+def test_runtime_failure_drops_the_new_cache_entry(dataset):
+    # the plan fails in the materializing action, after persist(): its
+    # cache entry must go, the previous result must stay
+    conf = dataset.engine.spark.conf
+    before = conf.get(_COMPRESSED, None)
+    rs = dataset.query("SELECT * FROM data")
+    boom = "SELECT o_orderkey, raise_error('boom') AS x FROM data"
+    with pytest.raises(Exception, match="boom"):
+        dataset.query(boom)
+    probe = _with_row_id(dataset.query(boom, materialize=False))
+    assert probe.storageLevel == StorageLevel.NONE
+    assert dataset.result is rs and _is_cached(rs._base)
+    assert conf.get(_COMPRESSED, None) == before
+
+
+def _cache_bytes(df) -> int:
+    """Stored bytes (memory + disk) of the cache entry holding ``df``."""
+    rdd = df._jdf.queryExecution().withCachedData().cacheBuilder().cachedColumnBuffers()
+    infos = df.sparkSession.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(i.memSize() + i.diskSize() for i in infos if i.id() == rdd.id())
+
+
+def test_result_caches_are_uncompressed(spark):
+    # a constant column compresses to almost nothing; uncompressed it
+    # keeps its 4 bytes a row
+    frame = spark.range(0, 200_000, 1, 4).select(F.lit(7).alias("c"))
+    rs = ResultSet(frame, name="uncompressed_probe")
+    try:
+        assert rs.search("7") == 200_000
+        result_bytes = [_cache_bytes(rs._base), _cache_bytes(rs._filtered)]
+    finally:
+        rs.unpersist()
+    plain = _with_row_id(frame).persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        plain.count()
+        plain_bytes = _cache_bytes(plain)
+    finally:
+        plain.unpersist()
+    assert plain_bytes > 0
+    assert min(result_bytes) >= 3 * plain_bytes
+
+
+@pytest.mark.parametrize("start", [None, "true"])
+def test_materialization_leaves_compression_conf_alone(spark, start):
+    conf = spark.conf
+    saved = conf.get(_COMPRESSED, None)
+    if start is None:
+        conf.unset(_COMPRESSED)
+    else:
+        conf.set(_COMPRESSED, start)
+    try:
+        rs = ResultSet(spark.range(0, 100, 1, 2), name="conf_probe")
+        rs.search("3")
+        rs.unpersist()
+        assert conf.get(_COMPRESSED, None) == start
+    finally:
+        if saved is None:
+            conf.unset(_COMPRESSED)
+        else:
+            conf.set(_COMPRESSED, saved)
+
+
+def test_concurrent_materializations_restore_the_conf(spark):
+    import threading
+
+    start = spark.conf.get(_COMPRESSED, None)
+    errors = []
+
+    def work(k):
+        try:
+            for i in range(4):
+                rs = ResultSet(spark.range(0, 100 + 10 * k + i, 1, 2), name=f"conc_{k}")
+                rs.search("5")
+                rs.unpersist()
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    threads = [threading.Thread(target=work, args=(k,)) for k in range(2)]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert errors == []
+    assert spark.conf.get(_COMPRESSED, None) == start
+
+
+def test_close_drops_the_dataset_views(engine, sf_dir):
+    ds = engine.open(f"{sf_dir}/region.parquet")
+    ds.query("SELECT * FROM data")
+    ds.close()
+    names = {t.name for t in engine.spark.catalog.listTables()}
+    assert ds.view not in names
+    assert ds.result_view not in names
 
 
 def test_query_after_failure_still_works(dataset):

@@ -92,3 +92,32 @@ def test_sorted_and_all_pages_keep_their_plans(result):
         assert "Filter" not in plan
     finally:
         result.sort(None)
+
+
+def test_first_unsorted_page_reads_a_row_id_span(result):
+    plan = _plan(result.page_df(1, 100))
+    assert "TakeOrderedAndProject(limit=100, orderBy=" in plan
+    assert "offset=" not in plan
+    assert "(__row_id#" in plan.split("InMemoryTableScan")[1]
+    assert [r.id for r in result.page_df(1, 100).collect()] == list(range(100))
+
+
+def test_dataset_first_page_is_one_top_k_job(spark, sf_dir):
+    from vscode_parquet_visualizer_spark.engine import Engine
+
+    ds = Engine(spark=spark).open(f"{sf_dir}/orders.parquet")
+    sc = spark.sparkContext
+    sc.setJobGroup("first_page_probe", "Dataset.page(1, n)")
+    try:
+        rows = ds.page(1, 100)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(rows) == 100
+    assert len(sc.statusTracker().getJobIdsForGroup("first_page_probe")) == 1
+    assert ds._parts is None  # no position index for the first page
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plan = executions.last().physicalPlanDescription()  # formatted
+    assert "Arguments: 100, [__row_id" in plan  # TakeOrderedAndProject
+    assert "Filter" not in plan
+    ds.close()

@@ -17,10 +17,11 @@ The row id doubles as a position index. ``monotonically_increasing_id`` is
 ``(partition << 33) + offset-in-partition``, so one ``(partition, rows)``
 list (``partition_rows``: one aggregate job) maps any position to a row id.
 A page in row-id order is a contiguous run of positions, hence one
-``__row_id`` span (``row_id_span``), and the page reads
-``filter(span).limit(n)``: a cached scan skips every column batch outside
-the span, an uncached scan returns at most n rows per partition, and a
-deep page costs about what the first one does. Pages under a user sort
+``__row_id`` span (``row_id_span``), and every page of an indexed frame,
+the first one included, reads ``filter(span).limit(n)``: a cached scan
+skips every column batch outside the span, an uncached scan returns at
+most n rows per partition, and a deep page costs about what the first
+one does. Pages under a user sort
 have no such index and keep ``offset().limit()``, which Catalyst plans as
 a top-(offset+n) sort whose cost grows with the offset (as it does in
 every engine, including the reference's LIMIT/OFFSET SQL).
@@ -101,9 +102,9 @@ class Paginator:
         if self.page_size == PAGE_ALL:
             return self.df
         offset = (self.page_number - 1) * self.page_size
-        if not offset:
-            return self.df.limit(self.page_size)
         if self.partition_rows is None:
+            if not offset:
+                return self.df.limit(self.page_size)
             return self.df.offset(offset).limit(self.page_size)
         lo, hi = row_id_span(self.partition_rows, offset, self.page_size)
         row_id = F.col(ROW_ID)
