@@ -11,6 +11,8 @@ from vscode_parquet_visualizer_spark.engine import (
     ResultSet,
     _with_row_id,
 )
+from vscode_parquet_visualizer_spark.operators import search as search_ops
+from vscode_parquet_visualizer_spark.operators.pagination import ROW_ID
 
 
 @pytest.fixture(scope="module")
@@ -122,9 +124,20 @@ def _cache_bytes(df) -> int:
     return sum(i.memSize() + i.diskSize() for i in infos if i.id() == rdd.id())
 
 
+def test_result_caches_are_deserialized(spark):
+    rs = ResultSet(spark.range(0, 100, 1, 2), name="deser_probe")
+    try:
+        rs.search("3")
+        assert rs._base.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+        assert rs._filtered.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
+    finally:
+        rs.unpersist()
+
+
 def test_result_caches_are_uncompressed(spark):
     # a constant column compresses to almost nothing; uncompressed it
-    # keeps its 4 bytes a row
+    # keeps its 4 bytes a row. The plain cache has the same storage
+    # level, so the ratio measures columnar compression alone.
     frame = spark.range(0, 200_000, 1, 4).select(F.lit(7).alias("c"))
     rs = ResultSet(frame, name="uncompressed_probe")
     try:
@@ -132,7 +145,7 @@ def test_result_caches_are_uncompressed(spark):
         result_bytes = [_cache_bytes(rs._base), _cache_bytes(rs._filtered)]
     finally:
         rs.unpersist()
-    plain = _with_row_id(frame).persist(StorageLevel.MEMORY_AND_DISK)
+    plain = _with_row_id(frame).persist(StorageLevel.MEMORY_AND_DISK_DESER)
     try:
         plain.count()
         plain_bytes = _cache_bytes(plain)
@@ -140,6 +153,88 @@ def test_result_caches_are_uncompressed(spark):
         plain.unpersist()
     assert plain_bytes > 0
     assert min(result_bytes) >= 3 * plain_bytes
+
+
+def _search_probe(rs, term):
+    """A fresh plan equal to the search result ``rs.search(term)`` builds:
+    its storage level is the cache manager's entry for that search."""
+    return _with_row_id(search_ops.search(rs._base.drop(ROW_ID), term))
+
+
+def test_failed_search_keeps_the_previous_search(dataset, monkeypatch, tmp_path):
+    import csv
+
+    import vscode_parquet_visualizer_spark.engine as engine_mod
+
+    rs = dataset.query("SELECT * FROM data")
+    n = rs.search("URGENT")
+    first_page = rs.page(1, 10)
+
+    def boom(df):
+        raise RuntimeError("boom")
+
+    monkeypatch.setattr(engine_mod, "partition_rows", boom)
+    with pytest.raises(RuntimeError, match="boom"):
+        rs.search("1996")
+    monkeypatch.undo()
+    assert 0 < n < rs.row_count and rs.current_count == n
+    assert rs.page(1, 10) == first_page
+    rs.export(str(tmp_path / "kept.csv"), "csv")
+    with open(tmp_path / "kept.csv", newline="") as fh:
+        rows = list(csv.reader(fh))[1:]
+    assert len(rows) == n and all("URGENT" in ",".join(r) for r in rows)
+    assert _is_cached(rs._filtered)
+    assert _search_probe(rs, "1996").storageLevel == StorageLevel.NONE
+
+
+def test_same_search_twice_keeps_its_cache(dataset):
+    # the re-search's cache entry is the old one (equal plans): replacing
+    # the old search result must not evict it
+    rs = dataset.query("SELECT * FROM data")
+    n = rs.search("URGENT")
+    page = rs.page(2, 10)
+    assert rs.search("URGENT") == n
+    assert _is_cached(rs._filtered) and rs.page(2, 10) == page
+    rs.search("")
+    assert _search_probe(rs, "URGENT").storageLevel == StorageLevel.NONE
+
+
+def test_concurrent_page_reads_match_serial_reads(spark):
+    # deserialized cached batches are shared objects: two threads paging
+    # one result at once (several batches per partition, pages straddling
+    # batch edges) must read what one thread reads alone
+    import threading
+
+    frame = spark.range(0, 60_000, 1, 3).select(
+        "id", F.concat(F.lit("r"), F.col("id").cast("string")).alias("s")
+    )
+    rs = ResultSet(frame, name="concurrent_pages")
+    try:
+        for term, pages in (("", [1, 3, 7, 10, 13, 17, 21]), ("7", [1, 2, 4, 6, 8])):
+            rs.search(term)  # the base result, then a searched one
+
+            def read(order):
+                return {p: rs.page(p, 2_900) for p in order}
+
+            want = read(pages)
+            got, errors = [None, None], []
+
+            def work(k):
+                try:
+                    got[k] = read(pages if k == 0 else pages[::-1])
+                except Exception as e:  # surfaced by the assert below
+                    errors.append(e)
+
+            threads = [threading.Thread(target=work, args=(k,)) for k in range(2)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+            assert not any(t.is_alive() for t in threads)
+            assert errors == []
+            assert got == [want, want]
+    finally:
+        rs.unpersist()
 
 
 @pytest.mark.parametrize("start", [None, "true"])

@@ -871,3 +871,88 @@ def test_indexed_data_pages_match_offset_pages(spark, sizes, size, fmt, data):
             assert len(want) == min(size, sum(sizes) - (n - 1) * size)
         finally:
             ds.close()
+
+
+# Result-cache differential: everything a user reads from a ResultSet —
+# page 1, a deep unsorted page, a sorted page, a search and a CSV export —
+# equals the same read computed from the uncached frame, on every atomic
+# type plus nested and binary columns, NULL, NaN, -0.0, unicode, and 1-8
+# partitions with empty ones. Rows are compared by ``repr`` so NaN and the
+# sign of zero count.
+
+
+def _nullable(values):
+    return st.none() | values
+
+
+_FLOATS = st.floats(allow_nan=True, allow_infinity=True) | st.sampled_from([-0.0, float("nan")])
+_TEXT = st.text(
+    alphabet=st.sampled_from(list("aZ09 -.:,\"'\né€中🎉")), max_size=6
+)
+_CACHE_COLUMNS = [
+    ("b", "boolean", st.booleans()),
+    ("i8", "tinyint", st.integers(-(2**7), 2**7 - 1)),
+    ("i16", "smallint", st.integers(-(2**15), 2**15 - 1)),
+    ("i32", "int", st.integers(-(2**31), 2**31 - 1)),
+    ("i64", "bigint", st.integers(-(2**63), 2**63 - 1)),
+    ("f32", "float", st.floats(width=32, allow_nan=True, allow_infinity=True) | st.just(-0.0)),
+    ("f64", "double", _FLOATS),
+    ("dec", "decimal(12,3)", st.decimals(min_value=-(10**8), max_value=10**8, places=3)),
+    ("s", "string", _TEXT),
+    ("bin", "binary", st.binary(max_size=5)),
+    ("d", "date", st.dates(min_value=dt.date(1900, 1, 1), max_value=dt.date(2100, 1, 1))),
+    ("ts", "timestamp", st.datetimes(min_value=dt.datetime(1971, 1, 1), max_value=dt.datetime(2100, 1, 1))),
+    ("ntz", "timestamp_ntz", st.datetimes(min_value=dt.datetime(1900, 1, 1), max_value=dt.datetime(2100, 1, 1))),
+    ("iv", "interval day to second", st.timedeltas(min_value=dt.timedelta(days=-999), max_value=dt.timedelta(days=999))),
+    ("arr", "array<int>", st.lists(_nullable(st.integers(-9, 9)), max_size=3)),
+    ("m", "map<string,double>", st.dictionaries(_TEXT, _nullable(_FLOATS), max_size=2)),
+    ("st", "struct<a:int,b:string>", st.tuples(_nullable(st.integers(-9, 9)), _nullable(_TEXT))),
+]
+_CACHE_SCHEMA = ", ".join(f"{name} {ddl}" for name, ddl, _ in _CACHE_COLUMNS)
+_CACHE_ROWS = st.lists(st.tuples(*[_nullable(v) for _, _, v in _CACHE_COLUMNS]), max_size=40)
+_SORTABLE = [name for name, ddl, _ in _CACHE_COLUMNS if not ddl.startswith("map")]
+
+
+def _read_csv(path):
+    with open(path, encoding="utf-8") as fh:
+        return fh.read()
+
+
+@_settings(max_examples=12, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@_given(_CACHE_ROWS, st.integers(min_value=1, max_value=8), st.data())
+def test_result_cache_reads_match_the_uncached_frame(spark, rows, parts, data):
+    import tempfile
+
+    from vscode_parquet_visualizer_spark.engine import ResultSet, _with_row_id
+    from vscode_parquet_visualizer_spark.operators import export as export_ops
+    from vscode_parquet_visualizer_spark.operators import search as search_ops
+    from vscode_parquet_visualizer_spark.operators import sort as sort_ops
+
+    frame = spark.createDataFrame(spark.sparkContext.parallelize(rows, parts), _CACHE_SCHEMA)
+    size = data.draw(st.integers(min_value=1, max_value=7), label="page size")
+    field = data.draw(st.sampled_from(_SORTABLE), label="sort field")
+    direction = data.draw(st.sampled_from([sort_ops.ASC, sort_ops.DESC]), label="direction")
+    term = data.draw(st.text(alphabet="0159-.:aZé€ ", min_size=1, max_size=2), label="term")
+
+    def page(df, n, count):
+        return repr(Paginator(df, count, size).goto(n).drop(ROW_ID).collect())
+
+    rs = ResultSet(frame, name="prop_cache")
+    try:
+        with tempfile.TemporaryDirectory() as tmp:
+            for searched in ("", term):  # the base result, then a searched one
+                count = rs.search(searched)
+                plain = _with_row_id(search_ops.search(frame, searched))
+                assert count == plain.count() == rs.current_count
+                pages = page_count(count, size)
+                deep = data.draw(st.integers(min_value=1, max_value=pages), label="deep page")
+                for order in (None, field):
+                    rs.sort(order, direction)
+                    ordered = sort_ops.sort(plain, order, direction)
+                    for n in sorted({1, deep}):
+                        assert repr(rs.page_df(n, size).collect()) == page(ordered, n, count)
+                    rs.export(f"{tmp}/cached.csv", "csv")
+                    export_ops.export(ordered.drop(ROW_ID), f"{tmp}/plain.csv", "csv")
+                    assert _read_csv(f"{tmp}/cached.csv") == _read_csv(f"{tmp}/plain.csv")
+    finally:
+        rs.unpersist()

@@ -7,8 +7,8 @@ SparkSession:
   view ``data`` (reference substitutes ``FROM data`` → ``read_parquet(path)``
   per query, src/worker.ts:247-266; a real temp view makes that a no-op).
 - ``Dataset.query(sql)`` ≈ startQuery (src/worker.ts:92-134): transpile the
-  dialect, build the DataFrame, **materialize** it (uncompressed columnar
-  cache + per-partition count — the CTAS-equivalent,
+  dialect, build the DataFrame, **materialize** it (deserialized,
+  uncompressed columnar cache + per-partition count — the CTAS-equivalent,
   src/worker.ts:83-90), attach a stable ``__row_id`` so
   pagination is deterministic (and, counted per partition, a position
   index for unsorted pages), and only then swap the ``query_result``
@@ -18,18 +18,27 @@ SparkSession:
   COPY flows (§2 A7-A9, A13-A18), all reading the cached result, never
   re-running the user query.
 
-Scale notes: materialization uses MEMORY_AND_DISK (a 100 TB result spills
-rather than OOMs; on a cluster you'd swap persist() for a checkpoint to a
-scratch table — same orchestration shape). Result caches (query and
-search) are built without columnar compression: a result sits on the
-user's critical path and is read a few pages deep, so the encoding
-search Spark runs on every column is not worth its time. On a 600k-row
-lineitem (4 cores) the cache-build job is about 45% cheaper (~820 →
-~445 ms) and the cache about 40% larger (17.0 → 23.8 MB); a warm deep
-or sorted page, which decodes the whole cache, costs ~10% more.
-MEMORY_AND_DISK still spills what does not fit. Every other cache in the
-session keeps the session's compression setting. Pages collect
-≤ page_size rows to the driver; everything else stays distributed.
+Scale notes: result caches (query and search) are persisted
+MEMORY_AND_DISK_DESER, built without columnar compression: a result sits
+on the user's critical path and is read a page at a time, so its column
+batches stay on the heap as objects and a page's ``__row_id`` filter
+skips every batch outside its span by the batch stats, without decoding
+it. Against the serialized, LZ4-compressed MEMORY_AND_DISK blocks it
+replaces (4 cores, 3g heap): on a 600k-row lineitem the cache is 2.17×
+larger (23.8 → 51.7 MB) and the session benchmark's page p50 falls from
+~130 to ~95 ms and its query p50 from ~730 to ~600 ms (the build skips
+Kryo and LZ4); at sf1 (6M rows, 244 → 517 MB of cache) an unsorted page
+takes 0.11-0.17 s instead of ~0.4 s. A sorted page still runs a
+top-(offset+n) sort over the cache, whose cost grows with the offset:
+at sf1 under a 3g heap a sorted middle page fails, its per-task top-k
+results too large to fetch (SESSION_SCALE_sf1.json). Cache blocks that
+do not fit in the heap spill to disk, serialized, rather than OOMing, as
+long as the heap fits the machine (session.get_spark sizes the local
+heap to a quarter of RAM); on a cluster you'd swap persist() for a
+checkpoint to a scratch table, the same orchestration shape. Every
+other cache in the session stays MEMORY_AND_DISK with the session's
+compression setting. Pages collect ≤ page_size rows to the driver;
+everything else stays distributed.
 """
 
 from __future__ import annotations
@@ -70,12 +79,13 @@ from vscode_parquet_visualizer_spark.sources import registry
 DEFAULT_QUERY = "SELECT * FROM data LIMIT 1000;"  # reference package.json:62
 
 # FAIR scheduler pools (spark.scheduler.mode=FAIR, session._DEFAULTS):
-# the reference runs a paging worker and a query worker per document so
-# neither starves the other (src/tabular-document-editor.ts:154-186).
-# Here every interactive job (page/search/export) runs in the
-# "interactive" pool and query materialization in "query" — with FAIR
-# scheduling the pools split executor slots, so a long user query and a
-# page fetch issued from another thread make progress concurrently.
+# the reference runs a paging worker and a query worker per document
+# (src/tabular-document-editor.ts:154-186). Here query materialization
+# runs in the "query" pool and every interactive job (page/search/export)
+# in "interactive". No allocation file configures them: Spark creates each
+# on first use with FIFO, weight 1 and minShare 0, so a page job gets an
+# equal share of the executor slots next to a running materialization,
+# but no priority over it.
 POOL_QUERY = "query"
 POOL_INTERACTIVE = "interactive"
 
@@ -97,8 +107,12 @@ _persist_lock = threading.Lock()
 
 
 def _persist_result(df: DataFrame) -> DataFrame:
-    """``df.persist(MEMORY_AND_DISK)`` with the columnar cache built
-    uncompressed. Spark snapshots the compression conf when ``persist()``
+    """``df.persist(MEMORY_AND_DISK_DESER)`` with the columnar cache
+    built uncompressed: the one place a result cache's layout is chosen.
+    Deserialized batches let a page skip the batches outside its
+    ``__row_id`` span instead of decoding the whole partition; the price
+    is a cache about 2.2× the serialized, LZ4-compressed one (module
+    docstring). Spark snapshots the compression conf when ``persist()``
     registers the cache entry, so the switch wraps that call alone; the
     lock keeps concurrent callers from restoring each other's value, so
     the session conf is the same before and after."""
@@ -107,7 +121,7 @@ def _persist_result(df: DataFrame) -> DataFrame:
         prev = conf.get(_COMPRESSED, None)
         conf.set(_COMPRESSED, "false")
         try:
-            return df.persist(StorageLevel.MEMORY_AND_DISK)
+            return df.persist(StorageLevel.MEMORY_AND_DISK_DESER)
         finally:
             if prev is None:
                 conf.unset(_COMPRESSED)
@@ -154,7 +168,6 @@ class ResultSet:
         self.name = name
         self._filtered: DataFrame | None = None
         self._filtered_parts: list[tuple[int, int]] | None = None
-        self._search_term: str = ""
         self._sort_field: str | None = None
         self._sort_dir: str = sort_ops.ASC
         self.query_ms: float | None = None
@@ -197,15 +210,18 @@ class ResultSet:
         filtered_query_result, src/worker.ts:151-180); returns match count.
         The matches get a fresh, dense ``__row_id`` so they carry their own
         position index; a filter keeps partition order, so the new ids keep
-        the old relative order."""
-        if self._filtered is not None:
-            self._filtered.unpersist()
-            self._filtered, self._filtered_parts = None, None
-        self._search_term = term
+        the old relative order. Atomic like ``Dataset.query``: the new
+        matches are cached and counted before the old ones are dropped, so
+        a search that fails keeps the previous search result."""
+        flt, parts = None, None
         if term != "":
             flt = _with_row_id(search_ops.search(self._base.drop(ROW_ID), term))
-            self._filtered_parts = _materialize(flt, POOL_INTERACTIVE)
-            self._filtered = flt
+            parts = _materialize(flt, POOL_INTERACTIVE)
+        old = self._filtered
+        self._filtered, self._filtered_parts = flt, parts
+        # the same term re-searched shares the old cache entry: keep it
+        if old is not None and not (flt is not None and flt.sameSemantics(old)):
+            old.unpersist()
         return self.current_count
 
     def _ordered(self) -> DataFrame:
@@ -477,7 +493,10 @@ class Dataset:
 class Engine:
     """One engine instance ≈ one SparkSession (the reference spawns one
     DuckDB per worker thread; Spark multiplexes concurrent jobs in one
-    session — FAIR pools would give the query-tab/data-tab isolation)."""
+    session). Query materialization and interactive jobs run in separate
+    FAIR pools, which Spark creates unconfigured: a page fetched from
+    another thread shares the executors with a running query, but gets
+    no priority over it."""
 
     def __init__(
         self,

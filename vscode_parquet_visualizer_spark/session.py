@@ -130,6 +130,14 @@ _DEFAULTS = {
 }
 
 
+def local_heap(ram_bytes: int) -> str:
+    """Default local-mode heap: a quarter of the machine's RAM, at least
+    1g and at most 48g. The JVM then keeps room for its off-heap memory,
+    the Python workers and the page cache, and a cache that outgrows the
+    heap spills to disk instead of the kernel killing the process."""
+    return f"{max(1, min(48, ram_bytes // 2**30 // 4))}g"
+
+
 def get_spark(
     app_name: str = "vscode-parquet-visualizer-spark",
     master: str | None = None,
@@ -155,9 +163,10 @@ def get_spark(
         # OOMs as soon as a cached table outgrows toy scale. Size to the
         # machine (pre-JVM setting — first session in the process wins).
         # On a real cluster the submitter sets memory; untouched there.
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
         conf.setdefault(
             "spark.driver.memory",
-            os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"),
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM", local_heap(ram)),
         )
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
