@@ -330,19 +330,24 @@ def test_range_running_aggs_use_group_broadcast(spark, monkeypatch):
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_range_running_aggs_group_budget_falls_back_to_kernel(
+def test_range_running_aggs_group_budget_falls_back_to_window_finish(
     spark, monkeypatch
 ):
     # a group table over SPARK_GRAFT_RAGG_BCAST_MAX rows cannot be
     # broadcast: the route must fall back to the positional finish
-    # (r14: the JVM tie-aware window finish; the Arrow kernel behind
-    # SPARK_GRAFT_RAGG_ROWS_ROUTE=kernel), correct at any order-key NDV.
+    # (the JVM tie-aware window finish), correct at any order-key NDV
+    # for every measure kind.
     from vscode_parquet_visualizer_spark.operators import rank
 
     monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)  # auto-restored
     sql = """
-        SELECT uid, sum(uid) OVER (PARTITION BY g ORDER BY k) AS rs
+        SELECT uid,
+               sum(uid) OVER w AS rs,
+               avg(k)   OVER w AS ra,
+               min(uid) OVER w AS rmin,
+               count(k) OVER w AS rc
         FROM ties
+        WINDOW w AS (PARTITION BY g ORDER BY k)
     """
     monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
     want = _rows(spark, sql)
@@ -355,39 +360,6 @@ def test_range_running_aggs_group_budget_falls_back_to_kernel(
     # SINGLE window — the RANGE frame's peers are the tie group, so the
     # r14 second (tie-last) window and its extra in-task sort are gone
     assert plan.count("Window") == 1, plan
-    assert sorted(tuple(r) for r in df.collect()) == want
-    # the kernel escape hatch still answers identically
-    monkeypatch.setenv("SPARK_GRAFT_RAGG_ROWS_ROUTE", "kernel")
-    df2 = run_sql(spark, sql)
-    assert "MapInArrow" in df2._jdf.queryExecution().executedPlan().toString()
-    assert sorted(tuple(r) for r in df2.collect()) == want
-
-
-def test_range_tie_finish_escape_hatch_matches(spark, monkeypatch):
-    # SPARK_GRAFT_RAGG_TIE_FINISH=last restores the r14 two-window
-    # formulation; it must answer row-identically to the r15
-    # single-window RANGE finish (and plan TWO windows where the
-    # default plans one)
-    from vscode_parquet_visualizer_spark.operators import rank
-
-    monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
-    sql = """
-        SELECT uid,
-               sum(uid) OVER w AS rs,
-               avg(k)   OVER w AS ra,
-               min(uid) OVER w AS rmin,
-               count(k) OVER w AS rc
-        FROM ties
-        WINDOW w AS (PARTITION BY g ORDER BY k)
-    """
-    want = sorted(tuple(r) for r in run_sql(spark, sql).collect())
-    monkeypatch.setenv("SPARK_GRAFT_RAGG_TIE_FINISH", "last")
-    df = run_sql(spark, sql)
-    assert (
-        df._jdf.queryExecution().executedPlan().toString().count("Window")
-        == 2
-    )
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
@@ -446,30 +418,8 @@ def test_range_ndv_preprobe_skips_group_table_build(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
     assert _rows(spark, sql) == want
     # nothing persisted: the probe skipped the group-table build, and
-    # the default substrate strategy (recompute) does not cache either
+    # the window finish re-executes its sort rather than caching it
     assert len(substrates) == 0
-
-
-def test_ragg_substrate_strategies_agree(spark, monkeypatch):
-    # r15: the substrate sharing strategy (recompute default vs the r14
-    # salted cache) must be invisible in results — both rely on the
-    # same deterministic re-derivation of __rpid/__rmid
-    from vscode_parquet_visualizer_spark.operators import rank
-
-    monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
-    sql = """
-        SELECT uid,
-               sum(k)   OVER (PARTITION BY g ORDER BY k, uid
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rs,
-               avg(uid) OVER (PARTITION BY g ORDER BY k) AS ta
-        FROM ties
-    """
-    monkeypatch.setenv("SPARK_GRAFT_RAGG_SUBSTRATE", "recompute")
-    a = sorted(tuple(r) for r in run_sql(spark, sql).collect())
-    monkeypatch.setenv("SPARK_GRAFT_RAGG_SUBSTRATE", "cache")
-    b = sorted(tuple(r) for r in run_sql(spark, sql).collect())
-    assert a == b
 
 
 def test_rows_running_aggs_use_jvm_window_finish(spark, monkeypatch):
@@ -498,18 +448,12 @@ def test_rows_running_aggs_use_jvm_window_finish(spark, monkeypatch):
     assert "MapInArrow" not in plan, "all-ROWS specs must skip the kernel"
     assert "Window" in plan, "in-task running values come from WindowExec"
     assert sorted(tuple(r) for r in df.collect()) == want
-    # the env escape hatch restores the Arrow kernel, same rows
-    monkeypatch.setenv("SPARK_GRAFT_RAGG_ROWS_ROUTE", "kernel")
-    df2 = run_sql(spark, sql)
-    plan2 = df2._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" in plan2
-    assert sorted(tuple(r) for r in df2.collect()) == want
 
 
 def test_mixed_rows_range_running_aggs_jvm_finish(spark, monkeypatch):
     # ROWS and RANGE specs in ONE window clause: the JVM finish computes
-    # ROWS per-row and RANGE via the tie-group-last window, both over
-    # the same substrate — no kernel. Tie-heavy NULL-bearing data.
+    # ROWS per-row and RANGE through a RANGE-frame window, both over the
+    # same substrate. Tie-heavy NULL-bearing data.
     sql = """
         SELECT uid,
                sum(k)   OVER (PARTITION BY g ORDER BY k, uid
@@ -738,3 +682,67 @@ def test_large_offset_lag_plans_blocked_shape(spark, monkeypatch):
     assert "__blk" in plan, "large offset must use the blocked window"
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan
     assert sorted(tuple(r) for r in df.collect()) == want
+
+
+# ---- window-partition keys: one lossless rendering on both substrates ----
+
+_ROWS_SUM = (
+    "sum(uid) OVER (PARTITION BY s ORDER BY uid "
+    "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS c"
+)
+_RN_RANK = (
+    "row_number() OVER (PARTITION BY {p} ORDER BY uid) AS rn, "
+    "rank() OVER (PARTITION BY {p} ORDER BY uid) AS rk"
+)
+
+
+@pytest.mark.parametrize(
+    "ddl,keys,select",
+    [
+        # key columns, then the key of the first and the second window
+        # partition: they differ only in a byte an earlier string
+        # rendering used as a separator or NULL sentinel, or (-0.0/0.0)
+        # they are one partition to WindowExec
+        ("s string", [("a\x00b",), ("a\x1eb",)], _ROWS_SUM),
+        ("s string", [(None,), ("\x1eNULL",)], _ROWS_SUM),
+        ("s string", [(None,), ("\x00NULL",)], _RN_RANK.format(p="s")),
+        (
+            "s string, s2 string",
+            [("a\x1fb", "c"), ("a", "b\x1fc")],
+            _RN_RANK.format(p="s, s2"),
+        ),
+        ("s double", [(-0.0,), (0.0,)], _RN_RANK.format(p="s")),
+        ("s array<string>", [(["a, b"],), (["a", "b"],)],
+         _RN_RANK.format(p="s")),
+        ("s array<double>", [([-0.0],), ([0.0],)], _RN_RANK.format(p="s")),
+        ("s struct<x: double>", [((-0.0,),), ((0.0,),)],
+         _RN_RANK.format(p="s")),
+    ],
+    ids=["nul_vs_rs", "null_vs_rs_sentinel", "null_vs_nul_sentinel",
+         "separator_in_value", "negative_zero", "separator_in_array",
+         "negative_zero_in_array", "negative_zero_in_struct"],
+)
+def test_partition_keys_never_merge_or_split(spark, monkeypatch, ddl, keys,
+                                             select):
+    # the lowered routes must neither merge nor split window partitions
+    from vscode_parquet_visualizer_spark.plans import rank_sql
+
+    rows = [(uid, *keys[uid // 10 % 2]) for uid in range(40)]
+    spark.createDataFrame(
+        rows, f"uid int, {ddl}"
+    ).createOrReplaceTempView("keyt")
+    sql = f"SELECT uid, {select} FROM keyt"
+    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    want = _rows(spark, sql)
+    lowered = []
+    real = rank_sql.try_rewrite_rank
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        lowered.append(out is not None)
+        return out
+
+    monkeypatch.setattr(rank_sql, "try_rewrite_rank", spy)
+    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    assert _rows(spark, sql) == want
+    assert any(lowered), "the query must take the distributed route"

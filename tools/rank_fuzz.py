@@ -1,7 +1,17 @@
 """Differential fuzz for the window-family lowering (plans/rank_sql.py):
 random window queries over a ties/NULL-heavy table, executed FORCED
 onto the distributed operators (SPARK_GRAFT_RANK=distributed) vs the
-plain WindowExec plan, sorted rows compared exactly.
+plain WindowExec plan, sorted rows compared exactly. Spark's own
+WindowExec is the reference implementation.
+
+The string partition column ``h`` carries NUL, \x1e, \x1f and
+sentinel-looking values, so any lossy window-partition key rendering
+shows up as merged or split partitions.
+
+A query counts as lowered when ``plans.rank_sql.try_rewrite_rank``
+returned a frame for it; the rest fell back to WindowExec. (The plan
+alone cannot tell: the distributed running-aggregate routes plan a
+``Window`` of their own.)
 
 Determinism rules baked into the generator: every ORDER BY ends with
 the unique uid tiebreak (so value-carrying functions are deterministic
@@ -21,6 +31,7 @@ sys.path.insert(0, REPO)
 
 from pyspark.sql import functions as F  # noqa: E402
 
+from vscode_parquet_visualizer_spark.plans import rank_sql  # noqa: E402
 from vscode_parquet_visualizer_spark.plans.sql_gateway import run_sql  # noqa: E402
 from vscode_parquet_visualizer_spark.session import get_spark  # noqa: E402
 
@@ -29,10 +40,14 @@ CUME = "ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
 
 VALS = ["uid", "k", "v", "tm"]  # tm: TIME(6) — r14 fuzz coverage for
 INTS = ["uid", "k"]             # Spark 4.1's TimeType surface
+# h values: pairs that differ only in a byte a string key rendering
+# might use as a separator or NULL sentinel
+H_VALS = ["0", "1", "2", "a\x00b", "a\x1eb", "a\x1fb", "\x1eNULL",
+          "\x00NULL"]
 
 
 def gen_query(rng: random.Random) -> str:
-    parts = rng.choice([[], ["g"], ["g", "h"]])
+    parts = rng.choice([[], ["g"], ["h"], ["g", "h"]])
     okeys = rng.choice([["uid"], ["k", "uid"], ["k DESC", "uid"],
                         ["k DESC NULLS FIRST", "uid"],
                         ["v", "uid"], ["v DESC", "uid DESC"],
@@ -119,20 +134,15 @@ def gen_query(rng: random.Random) -> str:
     return sql
 
 
-def main():
-    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 1
-    rng = random.Random(seed)
-    spark = get_spark(
-        shuffle_partitions=6, extra_conf={"spark.ui.enabled": "false"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+def make_table(spark) -> None:
+    """Register the 400-row ``fz`` fuzz table as a temp view."""
+    h_vals = F.array(*[F.lit(v) for v in H_VALS])
     spark.range(400).select(
         F.when(F.col("id") % 10 == 0, None).otherwise(
             F.col("id") % 4
         ).alias("g"),
         F.when(F.col("id") % 11 == 0, None).otherwise(
-            (F.col("id") % 3).cast("string")
+            F.element_at(h_vals, (F.col("id") % len(H_VALS) + 1).cast("int"))
         ).alias("h"),
         F.when(F.col("id") % 7 == 0, None).otherwise(
             F.col("id") % 5
@@ -148,31 +158,63 @@ def main():
         ).alias("tm"),
         F.col("id").alias("uid"),
     ).createOrReplaceTempView("fz")
-    bad = skipped = 0
-    for i in range(n):
-        sql = gen_query(rng)
-        try:
-            os.environ["SPARK_GRAFT_RANK"] = "window"
-            want = sorted(tuple(r) for r in run_sql(spark, sql).collect())
-            os.environ["SPARK_GRAFT_RANK"] = "distributed"
-            df = run_sql(spark, sql)
-            lowered = (
-                "Window"
-                not in df._jdf.queryExecution().executedPlan().toString()
-            )
-            got = sorted(tuple(r) for r in df.collect())
-        except Exception as exc:
-            print(f"[{i}] ERROR {exc}\n  {sql}")
-            bad += 1
-            continue
-        if not lowered:
-            skipped += 1
-        if got != want:
-            bad += 1
-            diff = [(a, b) for a, b in zip(got, want) if a != b][:2]
-            print(f"[{i}] MISMATCH ({len(diff)} shown) {diff}\n  {sql}")
+
+
+def fuzz(spark, n: int, seed: int, log=print) -> dict:
+    """Run ``n`` generated queries at ``seed``; return the counts
+    ``{"bad", "lowered", "fell_back"}``. A query is bad when it errors
+    or its distributed rows differ from WindowExec's."""
+    rng = random.Random(seed)
+    make_table(spark)
+    returned = []  # per try_rewrite_rank call: did it lower?
+    real = rank_sql.try_rewrite_rank
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        returned.append(out is not None)
+        return out
+
+    prev_mode = os.environ.get("SPARK_GRAFT_RANK")
+    rank_sql.try_rewrite_rank = spy
+    counts = {"bad": 0, "lowered": 0, "fell_back": 0}
+    try:
+        for i in range(n):
+            sql = gen_query(rng)
+            try:
+                os.environ["SPARK_GRAFT_RANK"] = "window"
+                want = sorted(tuple(r) for r in run_sql(spark, sql).collect())
+                os.environ["SPARK_GRAFT_RANK"] = "distributed"
+                returned.clear()
+                got = sorted(tuple(r) for r in run_sql(spark, sql).collect())
+            except Exception as exc:
+                log(f"[{i}] ERROR {exc}\n  {sql}")
+                counts["bad"] += 1
+                continue
+            counts["lowered" if any(returned) else "fell_back"] += 1
+            if got != want:
+                counts["bad"] += 1
+                diff = [(a, b) for a, b in zip(got, want) if a != b][:2]
+                log(f"[{i}] MISMATCH ({len(diff)} shown) {diff}\n  {sql}")
+    finally:
+        rank_sql.try_rewrite_rank = real
+        if prev_mode is None:
+            os.environ.pop("SPARK_GRAFT_RANK", None)
+        else:
+            os.environ["SPARK_GRAFT_RANK"] = prev_mode
+    return counts
+
+
+def main():
+    n = int(sys.argv[1]) if len(sys.argv) > 1 else 100
+    seed = int(sys.argv[2]) if len(sys.argv) > 2 else 1
+    spark = get_spark(
+        shuffle_partitions=6, extra_conf={"spark.ui.enabled": "false"}
+    )
+    spark.sparkContext.setLogLevel("ERROR")
+    c = fuzz(spark, n, seed)
     print(
-        f"done: {n} queries, {bad} bad, {skipped} fell back to WindowExec"
+        f"done: {n} queries, {c['bad']} bad, {c['lowered']} lowered, "
+        f"{c['fell_back']} fell back to WindowExec"
     )
     spark.stop()
 

@@ -15,7 +15,7 @@ row position):
 1. ``repartitionByRange`` + ``sortWithinPartitions`` on
    (partition keys, order keys) — one PARALLEL range-shuffle sort, the
    only data-sized movement.
-2. ``monotonically_increasing_id`` on the sorted, locally-checkpointed
+2. ``monotonically_increasing_id`` on the sorted, persisted
    result is per-Spark-partition consecutive, so the local index of a
    row within its (spark partition, window partition) group is
    ``mid - min(mid)`` of the group.
@@ -31,11 +31,12 @@ row position):
    work per task is bounded by the range partitioner, not by key
    cardinality.
 
-The stats groupBy runs on an ENGINE-rendered string key column (one
-``concat_ws`` of ``CAST(col AS STRING)``), never on driver-side Python
-``str()`` renderings — Python ``str(True)``/``str(1e-07)`` differ from
-Spark's ``true``/``1.0E-7``, which would silently miss the map lookup
-for boolean/float/timestamp partition columns.
+The stats groupBy runs on an ENGINE-rendered string key column
+(:func:`render_key`, shared with the running-aggregate routes), never
+on driver-side Python ``str()`` renderings — Python
+``str(True)``/``str(1e-07)`` differ from Spark's ``true``/``1.0E-7``,
+which would silently miss the map lookup for boolean/float/timestamp
+partition columns.
 
 Semantics: ``__rn`` is ``row_number()`` under a TOTAL order — callers
 must include a unique tiebreaker in ``order_cols`` (rank/dense_rank
@@ -49,8 +50,16 @@ import os
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 _SEP = "\x1f"
+
+# to_json options for nested key values: timestamps keep every
+# microsecond (the default format stops at milliseconds)
+_JSON_KEY_OPTS = {
+    "timestampFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSSXXX",
+    "timestampNTZFormat": "yyyy-MM-dd'T'HH:mm:ss.SSSSSS",
+}
 
 # Above this many (spark pid × window partition) stats groups the
 # create_map literal stops being free: the expression tree itself is
@@ -80,7 +89,9 @@ def _persist_substrate(df: DataFrame) -> DataFrame:
     checkpoints coexisted, and the route degrading 9 s → 33-57 s
     across a min-of-4 session (plans/r14 ragg evidence). The columnar
     cache stores compressed batches (~10× fewer objects) and serves
-    both the stats pass and the kernel pass from ONE sort.
+    with_row_numbers' stats pass and its row-number fix-up from ONE
+    sort (and the group-broadcast route's count, window and join from
+    one group table).
 
     Consistency of ``spark_partition_id``/``monotonically_increasing_id``
     across the two passes still holds: the cached RDD's partitioning is
@@ -88,6 +99,59 @@ def _persist_substrate(df: DataFrame) -> DataFrame:
     the SAME shuffle files (local mode keeps them), re-deriving
     identical ids from an identical sorted partition."""
     return persist_salted(df)
+
+
+def _zero_normalized(col: Column, t: T.DataType) -> Column:
+    """``col`` with every float -0.0, nested ones included, made 0.0 —
+    WindowExec groups -0.0 and 0.0 as one partition key."""
+    if isinstance(t, (T.FloatType, T.DoubleType)):
+        return F.when(col == 0.0, F.lit(0.0).cast(t)).otherwise(col)
+    if isinstance(t, T.ArrayType):
+        return F.transform(col, lambda x: _zero_normalized(x, t.elementType))
+    if isinstance(t, T.StructType):
+        return F.when(
+            col.isNotNull(),
+            F.struct(
+                *[
+                    _zero_normalized(col[f.name], f.dataType).alias(f.name)
+                    for f in t.fields
+                ]
+            ),
+        )
+    return col
+
+
+def render_key(schema: T.StructType, cols: list[str]) -> Column:
+    """ENGINE-rendered, LOSSLESS string key of ``cols``: two rows render
+    equal exactly when WindowExec puts them in the same window
+    partition (or peer group). Both distributed substrates group, look
+    up and window on this one string.
+
+    Injective by construction: each non-NULL value renders as
+    ``<char length>:<text>`` and a NULL as ``N`` (not a digit), so the
+    concatenation parses back one way — no separator or sentinel a value
+    could contain. The text is ``CAST(col AS STRING)`` of the value with
+    -0.0 made 0.0 (all NaNs already cast to ``NaN``), except binary
+    (``hex``: its bytes need not be valid UTF-8) and nested types
+    (``to_json``, which escapes nested strings; microsecond timestamp
+    format)."""
+    pieces = []
+    for c in cols:
+        t = schema[c].dataType
+        col = _zero_normalized(F.col(c), t)
+        if isinstance(t, T.BinaryType):
+            text = F.hex(col)
+        elif isinstance(t, (T.ArrayType, T.StructType, T.MapType)):
+            text = F.to_json(col, _JSON_KEY_OPTS)
+        else:
+            text = col.cast("string")
+        pieces.append(
+            F.coalesce(
+                F.concat(F.length(text).cast("string"), F.lit(":"), text),
+                F.lit("N"),
+            )
+        )
+    return F.concat(*pieces) if pieces else F.lit("")
 
 
 def with_row_numbers(
@@ -106,16 +170,8 @@ def with_row_numbers(
     sort_exprs = [F.col(c) for c in partition_cols] + list(order_cols)
     # ENGINE-rendered window-partition key: grouping and lookup both use
     # this exact string, so no driver-side Python rendering of values
-    # ever happens (Python str(True)='True' vs Spark 'true' etc.).
-    # NULL keys: concat_ws SKIPS null columns, so encode NULL as a
-    # sentinel before concatenation.
-    wkey = F.concat_ws(
-        _SEP,
-        *[
-            F.coalesce(F.col(c).cast("string"), F.lit("\x00NULL"))
-            for c in partition_cols
-        ],
-    )
+    # ever happens (Python str(True)='True' vs Spark 'true' etc.)
+    wkey = render_key(df.schema, partition_cols)
     sorted_df = (
         df.repartitionByRange(parts, *sort_exprs)
         .sortWithinPartitions(*sort_exprs)
@@ -259,9 +315,9 @@ def attach_window_columns(
         # running aggregates (± whole-partition aggs) ONLY: skip the
         # with_row_numbers substrate entirely (r14 verdict item 1) — a
         # running agg needs segment carry-ins, not a global row number;
-        # the dedicated path sorts once (checkpointed, shared by its
-        # bounded stats pass and the kernel) with no data-sized
-        # movement after the sort
+        # the dedicated path sorts on the order keys only, and its
+        # bounded stats pass and window finish each re-execute that
+        # sort (no cache build)
         r = _attach_running_aggs(
             df,
             partition_cols,
@@ -283,7 +339,7 @@ def attach_window_columns(
 
     # running aggregates FIRST: the segmented-prefix pass relies on r
     # still being the direct (range-partitioned, sorted, narrow-lineage,
-    # checkpointed) output of with_row_numbers — the keyed joins below
+    # persisted) output of with_row_numbers — the keyed joins below
     # would destroy that
     if ragg_specs:
         r = _attach_running_aggs(
@@ -504,7 +560,7 @@ def _attach_lag_leads_blocked(
 # Max group-table rows the RANGE-frame running-agg route will broadcast
 # (≈ 64 B/row of keys+partials → a few hundred MB of built hash relation
 # at the cap, far under Spark's 8 GiB broadcast limit). Above it the
-# kernel route takes over — the cost of finding out is one map-side-
+# window finish takes over — the cost of finding out is one map-side-
 # aggregated shuffle of partials, paid once.
 _RAGG_BCAST_MAX = int(os.environ.get("SPARK_GRAFT_RAGG_BCAST_MAX", 4_000_000))
 
@@ -543,7 +599,8 @@ def _attach_running_aggs_grouped(
        Spark's partial (map-side) aggregation means the shuffle moves
        group partials, not rows.
     2. If the group count exceeds ``_RAGG_BCAST_MAX`` return None (the
-       caller runs the positional kernel instead — correct at any NDV).
+       caller runs the positional window finish instead — correct at
+       any NDV).
     3. One WindowExec pass over the bounded group table computes each
        group's running value (per-partition task size is capped by the
        broadcast budget, so the one-task-per-window-partition wall
@@ -560,7 +617,7 @@ def _attach_running_aggs_grouped(
     normalized equality, matching WindowExec peer semantics. Integral
     measures accumulate exactly in int64; float measures sum under a
     different addition tree than a sequential window — the same
-    documented class as every distributed sum (and as the kernel).
+    documented class as every distributed sum.
     """
     from pyspark.sql.window import Window
 
@@ -569,18 +626,14 @@ def _attach_running_aggs_grouped(
         if c not in keys:
             keys.append(c)
     aggs = []
-    kinds = []
     for j, (_i, fn, col) in enumerate(measure_specs):
         if fn == "count":
-            kinds.append("int")
             aggs.append(F.count(col).alias(f"__gc{j}"))
             continue
         t = r.select(col.alias("__kp")).schema[0].dataType.simpleString()
         if t in ("tinyint", "smallint", "int", "bigint"):
-            kinds.append("int")
             cast = col.cast("long")
         elif t in ("float", "double"):
-            kinds.append("float")
             cast = col.cast("double")
         else:
             raise ValueError(f"running aggregate over unsupported type {t}")
@@ -616,7 +669,7 @@ def _attach_running_aggs_grouped(
         # budget cannot plausibly be under it; closer calls fall
         # through to the exact gate
         if ndv > int(_RAGG_BCAST_MAX * 1.2):
-            return None  # kernel route: correct at any order-key NDV
+            return None  # window finish: correct at any order-key NDV
     gt = _persist_substrate(
         r.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
     )
@@ -624,7 +677,7 @@ def _attach_running_aggs_grouped(
         # eager release (r14 ADVICE): the abandoned group table must not
         # occupy the columnar cache until 4 later builds retire it
         release_salted(gt)
-        return None  # kernel route: correct at any order-key NDV
+        return None  # window finish: correct at any order-key NDV
     w = (
         Window.partitionBy(*[F.col(c) for c in partition_cols])
         .orderBy(*sort_cols)
@@ -673,56 +726,41 @@ def _finish_running_aggs_window(
     ops: list[str],
     kinds: list[str],
     carries: dict,
-    overrides_by_pid: dict | None = None,
-    tie_order: list[Column] | None = None,
+    overrides_by_pid: dict,
+    tie_order: list[Column],
 ) -> DataFrame:
     """JVM finish for running aggregates (r14 optimization round,
     guide §4 "eliminate the Python boundary").
 
-    The Arrow kernel's cost at sf10 was dominated by moving every row
-    JVM→Python→JVM (measured: ~19 s kernel stage wall with the Python
-    compute itself at 0.3 s/task). The same two-pass structure — sorted
-    substrate + bounded stats pass + inter-task carries — finishes
-    entirely JVM-side:
-
     1. the driver-folded carries (already computed by the stats pass)
        become a tiny broadcast-joined relation on (__rpid, __rwkey) —
-       #tasks × key-NDV rows, the same driver state the kernel shipped;
+       #tasks × key-NDV rows;
     2. Spark's own WindowExec over (PARTITION BY __rwkey, __rpid ORDER
        BY __rmid) computes the in-task running values — the partition
        key includes the task id, so every window group is at most one
        substrate partition: bounded memory, full parallelism, no
        one-task-per-window-partition wall;
-    3. the carry combines with the in-task value per measure with the
-       kernel's exact semantics (NULL until the frame has seen a value;
-       integral sums accumulate in int64; avg divides the exact int64
-       sum by the total count once);
-    4. a RANGE-frame (tie-inclusive) spec is computed in ONE window
-       (r15, r14 verdict item 3): ``agg(m) OVER (PARTITION BY key, task
-       ORDER BY <order sort keys> RANGE UNBOUNDED PRECEDING..CURRENT
-       ROW)`` — the RANGE frame's peer rows ARE the tie group, so the
-       frame already ends at the tie group's last row and the r14
-       two-step (ROWS running value + ``last(...)`` over a second
-       (key, task, tie)-partitioned window, costing an extra full
-       in-task sort) is gone. The ordering is the substrate's own
-       order-key sort expressions (``tie_order``), so the one sort this
-       window pays is the same (key, task, order-keys) sort the r14
-       shape paid FIRST of two. Tie groups spanning a task boundary
-       (driver-detected; a rendered-key guard in practice, see the
-       override block in the caller) arrive as a broadcast-joined
-       override relation on (task, key, tie) whose absolute (count,
-       value) replaces the local result — the same replacement the
-       kernel's np.where override performed. When ``tie_order`` is not
-       supplied, the r14 two-window formulation remains as fallback.
+    3. the carry combines with the in-task value per measure (NULL
+       until the frame has seen a value; integral sums accumulate in
+       int64; avg divides the exact int64 sum by the total count once);
+    4. a RANGE-frame (tie-inclusive) spec is computed in the SAME
+       window distribution (r15, r14 verdict item 3): ``agg(m) OVER
+       (PARTITION BY key, task ORDER BY <tie_order> RANGE UNBOUNDED
+       PRECEDING..CURRENT ROW)`` — the RANGE frame's peer rows ARE the
+       tie group, so the frame already ends at the tie group's last
+       row. ``tie_order`` is the substrate's own order-key sort, so a
+       pure-RANGE clause plans ONE Window and ONE in-task sort. Tie
+       groups spanning a task boundary (driver-detected; see the guard
+       in the caller) arrive as a broadcast-joined override relation on
+       (task, key, tie) whose absolute (count, value) replaces the
+       local result.
 
     Measured at sf10 (OPTIMIZATION_r14.md): rows-frame running sum
     12.66 s (Arrow kernel, interleaved min-of-5) → 7.25 s; the
     WindowExec here costs one hash exchange of the substrate, which
     the JVM-only pipeline more than buys back from the removed
-    row↔Arrow conversion. ``SPARK_GRAFT_RAGG_ROWS_ROUTE=kernel``
-    forces the Arrow kernel.
+    row↔Arrow conversion.
     """
-    from pyspark.sql import types as T
     from pyspark.sql.window import Window as _W
 
     n_meta = len(ops)
@@ -760,8 +798,7 @@ def _finish_running_aggs_window(
         )
     # boundary-spanning tie groups: absolute (count, value) overrides,
     # broadcast-joined on (task, key, tie) — empty in practice (the
-    # range partitioner colocates equal sort keys; this is the rendered-
-    # key-collision guard the kernel also carried)
+    # range partitioner colocates equal sort keys)
     has_ov = F.lit(False)
     if need_tie and overrides_by_pid:
         ofields = [
@@ -803,37 +840,14 @@ def _finish_running_aggs_window(
         .orderBy("__rmid")
         .rowsBetween(_W.unboundedPreceding, _W.currentRow)
     )
-    # single-window tie formulation (r15): RANGE frame over the actual
-    # order-key sort expressions — peers (equal order keys) share one
-    # frame that ends at the tie group's last row, which IS the
-    # tie-inclusive running value. Same (key, task) distribution as
-    # ``w``; a pure-RANGE clause therefore plans exactly ONE Window and
-    # ONE in-task sort (plans/r15/ragg_range_overbudget_after.txt).
-    # SPARK_GRAFT_RAGG_TIE_FINISH=last restores the r14 two-window
-    # (tie-last) formulation — kept as the A/B + differential escape
-    # hatch, same policy as SPARK_GRAFT_RAGG_ROWS_ROUTE=kernel
-    use_range = (
-        need_tie
-        and tie_order is not None
-        and os.environ.get("SPARK_GRAFT_RAGG_TIE_FINISH", "range")
-        != "last"
-    )
+    # RANGE frame over the order-key sort expressions: peers (equal
+    # order keys) share one frame that ends at the tie group's last
+    # row, which IS the tie-inclusive running value. Same (key, task)
+    # distribution as ``w``
     w_rng = (
         _W.partitionBy("__rwkey", "__rpid")
         .orderBy(*tie_order)
         .rangeBetween(_W.unboundedPreceding, _W.currentRow)
-        if use_range
-        else None
-    )
-    # r14 fallback (no order expressions supplied): tie-group-last
-    # window: same (key, task) distribution — Spark plans a sort, not a
-    # second exchange
-    w_tie = (
-        _W.partitionBy("__rwkey", "__rpid", "__rtkey")
-        .orderBy("__rmid")
-        .rowsBetween(_W.unboundedPreceding, _W.unboundedFollowing)
-        if need_tie and not use_range
-        else None
     )
     out_cols: dict[str, Column] = {}
     for j in range(n_meta):
@@ -842,37 +856,19 @@ def _finish_running_aggs_window(
         m = F.col(f"__rm{j}").cast(acc_t)
         cv, cc = F.col(f"__cv{j}"), F.col(f"__cc{j}")
         tie = not rows_frame[j]
-        w_j = w_rng if (tie and use_range) else w
+        w_j = w_rng if tie else w
         if op in ("sum", "avg"):
             in_v = F.sum(m).over(w_j)
-            comb = (
+            val = (
                 F.when(cv.isNull(), in_v)
                 .when(in_v.isNull(), cv)
                 .otherwise(cv + in_v)
             )
-            if tie and not use_range:
-                comb = F.last(comb).over(w_tie)
             if op == "avg":
                 tot_c = F.coalesce(cc, F.lit(0)) + F.count(m).over(w_j)
-                if tie and not use_range:
-                    tot_c = F.last(tot_c).over(w_tie)
                 # exact int64 (or sequential f64) sum, ONE division;
                 # total count 0 → NULL, the not-yet-seen-a-value state
-                val = F.when(tot_c > 0, comb.cast("double") / tot_c)
-                if tie and overrides_by_pid:
-                    oval = F.when(
-                        F.col(f"__oc{j}") > 0,
-                        F.col(f"__ov{j}").cast("double")
-                        / F.col(f"__oc{j}"),
-                    )
-                    val = F.when(has_ov, oval).otherwise(val)
-            else:
-                val = comb
-                if tie and overrides_by_pid:
-                    oval = F.when(
-                        F.col(f"__oc{j}") > 0, F.col(f"__ov{j}")
-                    )
-                    val = F.when(has_ov, oval).otherwise(val)
+                val = F.when(tot_c > 0, val.cast("double") / tot_c)
         else:
             in_v = (F.min if op == "min" else F.max)(m).over(w_j)
             pick = F.least if op == "min" else F.greatest
@@ -881,14 +877,13 @@ def _finish_running_aggs_window(
                 .when(in_v.isNull(), cv)
                 .otherwise(pick(cv, in_v))
             )
-            if tie:
-                if not use_range:
-                    val = F.last(val).over(w_tie)
-                if overrides_by_pid:
-                    oval = F.when(
-                        F.col(f"__oc{j}") > 0, F.col(f"__ov{j}")
-                    )
-                    val = F.when(has_ov, oval).otherwise(val)
+        if tie and overrides_by_pid:
+            ov = F.col(f"__ov{j}")
+            if op == "avg":
+                ov = ov.cast("double") / F.col(f"__oc{j}")
+            val = F.when(has_ov, F.when(F.col(f"__oc{j}") > 0, ov)).otherwise(
+                val
+            )
         out_cols[f"__rv{j}"] = val.cast(
             "long" if kind == "int" and op != "avg" else "double"
         )
@@ -914,69 +909,55 @@ def _attach_running_aggs(
     partition_cols: list[str],
     order_cols: list[str],
     specs: list[tuple[str, tuple]],
-    sort_cols: list[Column] | None = None,
+    sort_cols: list[Column],
     num_partitions: int | None = None,
     presorted: bool = False,
 ) -> DataFrame:
-    """Running (cumulative) sum/min/max/count/avg without WindowExec —
-    the distributed SEGMENTED PREFIX over ONE materialized sort
-    (r14 optimization-round rebuild; measured structure at sf10 in
-    OPTIMIZATION_r14.md):
+    """Running (cumulative) sum/min/max/count/avg without WindowExec's
+    one-task-per-window-partition wall.
 
-    1. One range-shuffle sort on (partition keys, order keys),
-       persisted in the COLUMNAR cache (``_persist_substrate`` — the
-       r14 optimization round replaced ``localCheckpoint``'s ~3 GB of
-       deserialized row objects and its per-build leak with compressed
-       cached batches plus retirement of superseded substrates) — the
-       only data-sized movement, materialized ONCE and shared by every
-       later pass
-       (``presorted=True`` skips it: the input is with_row_numbers'
-       checkpointed output in the mixed-family case). The r14-build
-       predecessor computed the stats pass as a second subtree of a
-       single plan counting on ReuseExchange — which never fires
-       (per-branch column pruning makes the exchange subtrees differ),
-       so the scan + range shuffle + its sampling job all ran TWICE
-       (measured: 2 sampling jobs + 251 MB + 191 MB exchange writes at
-       sf10; plans/r14/ragg evidence).
-    2. One BOUNDED stats pass over the checkpoint —
-       ``groupBy(__rpid, __rwkey)`` → per-measure partials, collected
-       to the driver: ``#tasks × key NDV`` rows, constant in data size
-       (the routing gate only sends low-NDV partitions here; same
-       driver-state class as with_row_numbers' stats). Carry-ins are
-       folded driver-side and shipped to the kernel via one tiny
-       ``sparkContext.broadcast`` — no per-row join columns.
-    3. One Arrow-batched ``mapInPandas`` pass computes vectorized
-       group-wise cumulatives within each sorted partition and adds
-       the carry — integral measures accumulate in exact int64, floats
-       in float64 (the addition tree differs from a sequential window
-       by partial-sum grouping — same class of reordering every
-       distributed sum performs). SQL NULL semantics: a NULL measure
-       contributes nothing and the running value is NULL until the
-       frame has seen a value.
+    All-RANGE specs first try the group-broadcast route
+    (:func:`_attach_running_aggs_grouped`); ROWS specs, and RANGE specs
+    whose group table outgrows ``_RAGG_BCAST_MAX``, take the distributed
+    SEGMENTED PREFIX (measured structure at sf10 in OPTIMIZATION_r14.md
+    and OPTIMIZATION_r15.md):
+
+    1. One range-shuffle sort on the order keys — the only data-sized
+       movement (``presorted=True`` skips it: the input is
+       with_row_numbers' persisted output in the mixed-family case).
+       The stats pass and the finish are separate actions, so each
+       re-executes the sort plan rather than sharing a cache: building
+       the columnar cache of the sorted frame measured ≥10× the cost of
+       the extra sort (OPTIMIZATION_r15.md). The re-execution is
+       DETERMINISTIC — fixed-seed range sampling over identical input
+       splits, a stable local sort, ``__rpid``/``__rmid`` derived from
+       the sorted partitions — so both actions see the same ids.
+    2. One BOUNDED stats pass — ``groupBy(__rpid, __rwkey)`` →
+       per-measure partials, collected to the driver: ``#tasks × key
+       NDV`` rows, constant in data size (the routing gate only sends
+       low-NDV partitions here). Carry-ins are folded driver-side,
+       exactly (Python ints never overflow).
+    3. The JVM window finish (:func:`_finish_running_aggs_window`):
+       Spark's own WindowExec over (PARTITION BY __rwkey, __rpid)
+       computes each task's local running values and combines them
+       with the broadcast carries — integral measures accumulate in
+       exact int64, floats in float64 (the addition tree differs from a
+       sequential window by partial-sum grouping — the same class of
+       reordering every distributed sum performs). SQL NULL semantics:
+       a NULL measure contributes nothing and the running value is NULL
+       until the frame has seen a value.
     4. A spec with ``rows_frame=False`` (the SQL DEFAULT frame, RANGE
-       UNBOUNDED PRECEDING..CURRENT ROW) is tie-inclusive: every peer
-       row (same partition + order keys) shares the value of its tie
-       group's LAST row. The kernel resolves this LOCALLY by holding
-       back each batch's trailing (possibly incomplete) tie group
-       until the group is complete (memory bound: the largest single
-       tie group — the same peers-buffer bound WindowExec pays), and
-       propagating each group's last value backward vectorized. Tie
-       groups that span task boundaries — there are at most #tasks of
-       them, one per boundary — get their group-end value computed
-       driver-side from the stats pass plus (only when a group ends
-       MID-task) one filtered leading-run aggregate over the
-       checkpoint, and applied as per-task OVERRIDES through the same
-       broadcast. This replaces the r14-build ``max_by … OVER
-       (PARTITION BY partition+order keys)`` fixup, which re-shuffled
-       and re-sorted the ENTIRE dataset after the kernel (measured:
-       271 MB exchange + final window stage at sf10 — the whole gap
-       between the range-frame and rows-frame routes).
+       UNBOUNDED PRECEDING..CURRENT ROW) is tie-inclusive: the finish
+       orders by the order-key sort expressions under a RANGE frame, so
+       every peer row (same partition + order keys) shares its tie
+       group's value. Peers are equal on every sort key, so the range
+       partitioner never splits a tie group across tasks.
 
-    ``count(*)`` rides the same kernel as a constant-1 measure.
-    Decimal measures raise (caught by the gateway → loud fallback).
+    ``__rwkey``/``__rtkey`` are :func:`render_key` strings of the
+    partition and order keys. ``count(*)`` rides as a constant-1
+    measure. Decimal measures raise (caught by the gateway → loud
+    fallback).
     """
-    from pyspark.sql import types as T
-
     spark = r.sparkSession
     measure_specs = []  # (spec index, fn, measure Column)
     for i, (_, spec) in enumerate(specs):
@@ -991,38 +972,21 @@ def _attach_running_aggs(
     # GROUP, never on its position — so aggregate per group (map-side
     # partials, tiny shuffle), run the cumulative over the bounded
     # group table, and broadcast-join the values back. No range sort,
-    # no cache, no row ids, no Python kernel, no boundary-chain
-    # machinery. Falls back to the kernel when any spec is ROWS-frame
-    # (needs true positions) or the group table outgrows the broadcast
-    # budget (high-NDV order keys at scale).
-    if sort_cols is not None and all(not spec[3] for _, spec in specs):
+    # no row ids, no boundary-chain machinery. Falls through to the
+    # window finish when any spec is ROWS-frame (needs true positions)
+    # or the group table outgrows the broadcast budget (high-NDV order
+    # keys at scale).
+    if all(not spec[3] for _, spec in specs):
         out = _attach_running_aggs_grouped(
             r, partition_cols, order_cols, specs, measure_specs, sort_cols
         )
         if out is not None:
             return out
-    # the KERNEL's group key must be NUL-FREE: pandas (2.x) hashes
-    # object strings as C strings, so factorize/groupby silently MERGE
-    # any two keys that differ only after a \x00 byte — the \x00NULL
-    # sentinel collided every NULL-keyed group with its neighbors
-    # (found by tools/rank_fuzz.py). Use a \x1e-based sentinel and
-    # translate embedded NULs in data values to \x1e (a same-class
-    # collision corner, but an explicit one — not silent mis-grouping
-    # of every NULL key).
-    def _render_keys(cols: list[str]) -> Column:
-        pieces = []
-        for c in cols:
-            col = F.col(c)
-            # float/double: normalize -0.0 → 0.0 before rendering, so
-            # peer grouping matches Spark/DuckDB semantics (WindowExec
-            # normalizes floating keys; "-0.0" ≠ "0.0" as strings)
-            if isinstance(r.schema[c].dataType, (T.FloatType, T.DoubleType)):
-                col = F.when(col == 0.0, F.lit(0.0).cast(r.schema[c].dataType)).otherwise(col)
-            pieces.append(F.coalesce(col.cast("string"), F.lit("\x1eNULL")))
-        return F.translate(F.concat_ws(_SEP, *pieces), "\x00", "\x1e")
 
-    wkey = _render_keys(partition_cols)
-    mcols = {"__rpid": F.spark_partition_id(), "__rwkey": wkey}
+    mcols = {
+        "__rpid": F.spark_partition_id(),
+        "__rwkey": render_key(r.schema, partition_cols),
+    }
     meta = []  # (measure col name, combine op)
     for j, (i, fn, col) in enumerate(measure_specs):
         if fn == "count":
@@ -1031,71 +995,23 @@ def _attach_running_aggs(
         else:
             mcols[f"__rm{j}"] = col
             meta.append((f"__rm{j}", fn))
-    range_outs = [(out, spec) for out, spec in specs if not spec[3]]
-    need_tie = bool(range_outs)
-    # JVM window finish (r14 optimization round): after the stats pass
-    # below, the per-row running values come from Spark's own WindowExec
-    # over (rendered key, task id) instead of the Arrow kernel — ROWS
-    # specs directly, RANGE specs via the tie-group-last window plus
-    # the driver-computed boundary overrides. The kernel stays
-    # reachable behind SPARK_GRAFT_RAGG_ROWS_ROUTE=kernel.
-    use_window_finish = os.environ.get(
-        "SPARK_GRAFT_RAGG_ROWS_ROUTE", "window"
-    ) != "kernel"
+    need_tie = any(not spec[3] for _, spec in specs)
     if need_tie:
-        # tie (peer) identity = the rendered ORDER keys; __rmid orders
-        # rows globally (range partition ids increase with the range,
-        # the local counter with the local sort) for the stats pass's
-        # first/last-row-of-task identification — consistent across
-        # the stats and kernel/window passes because both read the SAME
-        # checkpointed blocks
-        mcols["__rtkey"] = _render_keys(order_cols)
-        mcols["__rmid"] = F.monotonically_increasing_id()
-    elif use_window_finish:
-        mcols["__rmid"] = F.monotonically_increasing_id()
+        # tie (peer) identity = the rendered ORDER keys
+        mcols["__rtkey"] = render_key(r.schema, order_cols)
+    # __rmid orders rows globally (range partition ids increase with
+    # the range, the local counter with the local sort): the finish's
+    # in-task order, and the stats pass's first/last-row-of-task marker
+    mcols["__rmid"] = F.monotonically_increasing_id()
     if presorted:
         s = r.withColumns(mcols)
     else:
         parts = num_partitions or spark.sparkContext.defaultParallelism
-        built = (
+        s = (
             r.repartitionByRange(parts, *sort_cols)
             .sortWithinPartitions(*sort_cols)
             .withColumns(mcols)
         )
-        # Substrate sharing strategy (r15, measured — guide §1/§5). The
-        # stats pass and the finish pass are SEPARATE ACTIONS, so they
-        # can only share the sort through a materialization. Two ways:
-        #
-        # - "recompute" (default): no materialization — each action
-        #   re-executes the ~2 stage sort plan. Costs one extra scan +
-        #   range shuffle per query; correct because the re-execution is
-        #   DETERMINISTIC (fixed-seed range sampling over identical
-        #   input splits, stable local sort, __rpid/__rmid derived from
-        #   the sorted partitions) — the exact determinism class the
-        #   cache strategy already relied on for evicted-partition
-        #   recompute (see _persist_substrate).
-        # - "cache" (SPARK_GRAFT_RAGG_SUBSTRATE=cache): the r14 shape —
-        #   one salted columnar-cache materialization serves both
-        #   passes. Preferable when the input scan is the dominant cost
-        #   (very wide rows, cold remote storage); at 100 TB this is a
-        #   deployment decision, hence a conf.
-        #
-        # Measured on this round's box (sf10 orders, 15 M rows, quiet,
-        # isolated): sort+renders run 2.4 s warm, while BUILDING the
-        # columnar cache of the same frame costs 22 s (first build) to
-        # 120 s (cache churn) — Spark's cache writer appends row-by-row
-        # through per-column builders, ~µs/cell, and GC churn compounds
-        # it (full bisect in OPTIMIZATION_r15.md). Paying ≤2 extra
-        # 2.4 s sorts beats one 22-120 s cache build by an order of
-        # magnitude; the r14 box measured the build at ~6 s, where the
-        # choice is near-even — both postures stay one env var apart.
-        if (
-            os.environ.get("SPARK_GRAFT_RAGG_SUBSTRATE", "recompute")
-            == "cache"
-        ):
-            s = _persist_substrate(built)
-        else:
-            s = built
     dtypes = dict(s.dtypes)
     kinds = []
     for j in range(len(meta)):
@@ -1114,19 +1030,6 @@ def _attach_running_aggs(
             F.sum if op in ("sum", "avg") else (F.min if op == "min" else F.max)
         )
 
-    import numpy as _np
-
-    def _fill(op, kind):
-        if op in ("sum", "avg"):
-            return 0 if kind == "int" else 0.0
-        if kind == "int":
-            return (
-                int(_np.iinfo("int64").max)
-                if op == "min"
-                else int(_np.iinfo("int64").min)
-            )
-        return float("inf") if op == "min" else float("-inf")
-
     def _combine(op, a, b):
         """Fold partial ``b`` into accumulated ``a`` (None = no values
         yet). Driver-side, exact: Python ints never overflow."""
@@ -1139,7 +1042,7 @@ def _attach_running_aggs(
         return min(a, b) if op == "min" else max(a, b)
 
     # ---- bounded stats pass (#tasks × key NDV rows, constant in data)
-    aggs = [F.count(F.lit(1)).alias("__an")]
+    aggs = []
     for j, (name, op) in enumerate(meta):
         aggs.append(_agg_fn(op)(name).alias(f"__av{j}"))
         aggs.append(F.count(name).alias(f"__ac{j}"))
@@ -1157,10 +1060,8 @@ def _attach_running_aggs(
     # per measure, values exact Python numbers
     carries: dict[tuple[int, str], list[tuple[int, object]]] = {}
     state: dict[tuple[str, int], tuple[int, object]] = {}
-    stat_by_key = {}
     for row in sorted(stats, key=lambda x: (x["__rwkey"], x["__rpid"])):
         k = (row["__rpid"], row["__rwkey"])
-        stat_by_key[k] = row
         entry = []
         for j in range(n_meta):
             c0, v0 = state.get((row["__rwkey"], j), (0, None))
@@ -1178,10 +1079,11 @@ def _attach_running_aggs(
     # back to every earlier row. The range partitioner colocates equal
     # sort keys, and peers ARE equal on every sort key (order-only sort:
     # peers share the order keys; presorted mixed path: partition+order)
-    # — so spans cannot arise from partitioning and this block is a
-    # GUARD for the rendered-key collision corners (\x1e classes). Cost
-    # when no boundary tkeys match — always, in practice: a few driver
-    # comparisons over the ≤ #tasks-row first/last table, no extra job.
+    # — so spans cannot arise from partitioning, and with render_key
+    # injective no rendered-key collision can fake one either: this
+    # block is a GUARD with no known trigger. Cost when no boundary
+    # tkeys match — always, in practice: a few driver comparisons over
+    # the ≤ #tasks-row first/last table, no extra job.
     overrides_by_pid: dict[int, list[tuple[str, str, list]]] = {}
     if need_tie and stats:
         first: dict[int, tuple] = {}  # pid -> (mid, tkey)
@@ -1209,7 +1111,7 @@ def _attach_running_aggs(
                     ch.add(p)
         if chains:
             # per-(pid, wkey, tkey) partials of the boundary runs: one
-            # filtered aggregate over the checkpoint, output bounded by
+            # filtered aggregate over the substrate, output bounded by
             # chain-pids × key NDV
             keyset = [
                 f"{p}{_SEP}{t}" for t, ch in chains.items() for p in ch
@@ -1234,7 +1136,7 @@ def _attach_running_aggs(
                 )[row["__rpid"]] = row
             for (w, t), per_pid in groups.items():
                 if len(per_pid) < 2:
-                    continue  # whole group inside one task: kernel-local
+                    continue  # whole group inside one task: finish-local
                 q = max(per_pid)
                 # group-end value = running prefix of wkey w up to the
                 # end of q's t-run: carries(q, w) covers every earlier
@@ -1254,285 +1156,10 @@ def _attach_running_aggs(
                         (w, t, entry)
                     )
 
-    if use_window_finish:
-        return _finish_running_aggs_window(
-            spark, s, specs, measure_specs, ops, kinds, carries,
-            overrides_by_pid, tie_order=sort_cols,
-        )
-
-    bc = spark.sparkContext.broadcast((carries, overrides_by_pid))
-
-    meta2 = [
-        (f"__rm{j}", ops[j], kinds[j], f"__rv{j}") for j in range(n_meta)
-    ]
-    # per-SPEC output column; spec j's frame decides row- vs tie-level
-    rows_frame_flags = [bool(spec[3]) for _, spec in specs]
-    out_struct = T.StructType(
-        s.schema.fields
-        + [
-            T.StructField(
-                f"__rv{j}",
-                T.LongType()
-                if kinds[j] == "int" and ops[j] != "avg"
-                else T.DoubleType(),
-            )
-            for j in range(n_meta)
-        ]
+    return _finish_running_aggs_window(
+        spark, s, specs, measure_specs, ops, kinds, carries,
+        overrides_by_pid, sort_cols,
     )
-    names = [f.name for f in out_struct.fields]
-
-    col_idx = {f.name: i for i, f in enumerate(s.schema.fields)}
-    i_pid, i_wk = col_idx["__rpid"], col_idx["__rwkey"]
-    i_tk = col_idx.get("__rtkey")
-    m_idx = [col_idx[f"__rm{j}"] for j in range(n_meta)]
-
-    def gen(batches):
-        """Arrow-native kernel (r14 optimization round: mapInPandas →
-        mapInArrow, guide §4.2). The pandas kernel boxed EVERY cell of
-        EVERY column into Python objects per batch — at sf10 that is
-        ~60 M string objects for the passthrough + key columns alone,
-        and the measured kernel stage spent ~19 s wall with only ~165 s
-        of JVM CPU (all the rest Python-side conversion). Here the
-        passthrough columns never leave Arrow (zero-copy re-emit), the
-        group keys are dictionary-encoded to int codes in C, and all
-        numeric work runs on unboxed int64/float64 numpy arrays
-        (int64 paths stay in the int64 domain end to end — Arrow gives
-        the nullable ints natively, no pandas float64 detour)."""
-        import numpy as np
-        import pandas as pd
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        carries_d, ov_by_pid = bc.value
-        # per-key [count, value|None] accumulated over PRIOR batches of
-        # this spark partition; initialized at first sight from the
-        # broadcast carries (the inter-task prefix)
-        carry: dict[str, list] = {}
-        pid: int | None = None
-        ov: list = []
-        out_types = [
-            pa.int64()
-            if kinds[j] == "int" and ops[j] != "avg"
-            else pa.float64()
-            for j in range(n_meta)
-        ]
-
-        def empty_out(b):
-            return pa.RecordBatch.from_arrays(
-                list(b.columns)
-                + [pa.array([], type=t) for t in out_types],
-                names=names,
-            )
-
-        def process(b):
-            n = b.num_rows
-            enc = pc.dictionary_encode(b.column(i_wk))
-            codes = enc.indices.to_numpy()
-            uniques = enc.dictionary.to_pylist()
-            for k in uniques:
-                if k not in carry:
-                    e = carries_d.get((pid, k))
-                    carry[k] = (
-                        [list(x) for x in e]
-                        if e
-                        else [[0, None] for _ in range(n_meta)]
-                    )
-            if need_tie:
-                # tie (peer) group = equal (wkey, tkey) PAIR; under the
-                # order-only sort a wkey's rows interleave with other
-                # wkeys inside one tkey run, so groups are NOT
-                # contiguous — group by the pair code, positional
-                # 'last' still is the group's last row in running order
-                enc_t = pc.dictionary_encode(b.column(i_tk))
-                tkcodes = enc_t.indices.to_numpy()
-                tkuniq = enc_t.dictionary.to_pylist()
-                gid = codes.astype("int64") * len(tkuniq) + tkcodes
-            out_arrays = []
-            for mname, op, kind, oname in meta2:
-                j = int(oname[4:])
-                arr = b.column(m_idx[j])
-                if kind == "int":
-                    arr = pc.cast(arr, pa.int64())
-                else:
-                    arr = pc.cast(arr, pa.float64())
-                valid = np.asarray(pc.is_valid(arr))
-                fill = _fill(op, kind)
-                # fill in the INT64 domain — ±(2^63-1) sentinels are
-                # not float64-representable; Arrow keeps them exact
-                vals = pc.fill_null(arr, fill).to_numpy()
-                cnt_local = (
-                    pd.Series(valid.astype("int64"))
-                    .groupby(codes)
-                    .cumsum()
-                    .to_numpy()
-                )
-                sv = pd.Series(vals).groupby(codes)
-                if op in ("sum", "avg"):
-                    cum = sv.cumsum().to_numpy()
-                elif op == "min":
-                    cum = sv.cummin().to_numpy()
-                else:
-                    cum = sv.cummax().to_numpy()
-                ccnt_u = np.array(
-                    [carry[k][j][0] for k in uniques], dtype="int64"
-                )
-                cval_u = np.array(
-                    [
-                        carry[k][j][1]
-                        if carry[k][j][1] is not None
-                        else fill
-                        for k in uniques
-                    ],
-                    dtype="int64" if kind == "int" else "float64",
-                )
-                ccnt = ccnt_u.take(codes)
-                cval = cval_u.take(codes)
-                if op in ("sum", "avg"):
-                    outv = cum + cval
-                elif op == "min":
-                    outv = np.minimum(cum, cval)
-                else:
-                    outv = np.maximum(cum, cval)
-                total_cnt = cnt_local + ccnt
-                if not rows_frame_flags[j]:
-                    # RANGE frame: every peer row shares the tie
-                    # group's LAST value (groups are contiguous in the
-                    # sorted batch, whole by holdback); task-spanning
-                    # groups take the driver-computed override
-                    gb_g = pd.Series(outv).groupby(gid)
-                    outv = gb_g.transform("last").to_numpy()
-                    total_cnt = (
-                        pd.Series(total_cnt)
-                        .groupby(gid)
-                        .transform("last")
-                        .to_numpy()
-                    )
-                    for w, t, entry in ov:
-                        if w not in carry or t not in tkuniq:
-                            continue
-                        try:
-                            uw = uniques.index(w)
-                        except ValueError:
-                            continue
-                        omask = (codes == uw) & (
-                            tkcodes == tkuniq.index(t)
-                        )
-                        if omask.any():
-                            cnt_o, val_o = entry[j]
-                            total_cnt = np.where(
-                                omask, cnt_o, total_cnt
-                            )
-                            if val_o is not None:
-                                outv = np.where(omask, val_o, outv)
-                null_mask = total_cnt == 0
-                if op == "avg":
-                    with np.errstate(divide="ignore", invalid="ignore"):
-                        res_np = np.true_divide(
-                            outv.astype("float64"), total_cnt
-                        )
-                elif kind == "int":
-                    res_np = np.asarray(outv, dtype="int64")
-                else:
-                    res_np = np.asarray(outv, dtype="float64")
-                out_arrays.append(
-                    pa.array(
-                        res_np, type=out_types[j], mask=null_mask
-                    )
-                )
-                # fold the batch's per-key totals into the carry —
-                # per-group partials on int codes, C-speed, exact
-                # (np.add.at accumulates int64 in int64)
-                g = len(uniques)
-                counts_u = np.bincount(
-                    codes[valid], minlength=g
-                ).astype("int64")
-                dt = "int64" if kind == "int" else "float64"
-                if op in ("sum", "avg"):
-                    tot_u = np.zeros(g, dtype=dt)
-                    np.add.at(
-                        tot_u, codes[valid], vals[valid]
-                    )
-                elif op == "min":
-                    tot_u = np.full(g, _fill("min", kind), dtype=dt)
-                    np.minimum.at(tot_u, codes[valid], vals[valid])
-                else:
-                    tot_u = np.full(g, _fill("max", kind), dtype=dt)
-                    np.maximum.at(tot_u, codes[valid], vals[valid])
-                for u, k in enumerate(uniques):
-                    cnt = int(counts_u[u])
-                    if cnt == 0:
-                        continue
-                    c0, v0 = carry[k][j]
-                    tv = tot_u[u]
-                    tv = int(tv) if kind == "int" else float(tv)
-                    if v0 is None:
-                        nv = tv
-                    elif op in ("sum", "avg"):
-                        nv = v0 + tv
-                    elif op == "min":
-                        nv = min(v0, tv)
-                    else:
-                        nv = max(v0, tv)
-                    carry[k][j] = [c0 + cnt, nv]
-            return pa.RecordBatch.from_arrays(
-                list(b.columns) + out_arrays, names=names
-            )
-
-        def concat(a, c):
-            return (
-                pa.Table.from_batches([a, c])
-                .combine_chunks()
-                .to_batches()[0]
-            )
-
-        hold = None
-        for b in batches:
-            if pid is None and b.num_rows:
-                pid = b.column(i_pid)[0].as_py()
-                ov = ov_by_pid.get(pid, [])
-            if hold is not None:
-                b = concat(hold, b)
-                hold = None
-            if b.num_rows == 0:
-                yield empty_out(b)
-                continue
-            if need_tie:
-                # hold back the trailing rows whose peer group may
-                # continue in later batches. Order-only sort: the whole
-                # trailing tkey RUN (wkeys interleave inside a run);
-                # presorted (partition+order) sort: the last (wkey,
-                # tkey) group. Both masks are contiguous tails under
-                # their sort, bounded by the largest order-key run —
-                # the same buffer bound WindowExec pays per peer set.
-                tk_col = b.column(i_tk)
-                tail = pc.equal(tk_col, tk_col[b.num_rows - 1])
-                if presorted:
-                    wk_col = b.column(i_wk)
-                    tail = pc.and_(
-                        tail, pc.equal(wk_col, wk_col[b.num_rows - 1])
-                    )
-                ntail = pc.sum(pc.cast(tail, pa.int64())).as_py() or 0
-                if ntail >= b.num_rows:
-                    hold = b
-                    continue
-                split = b.num_rows - ntail
-                hold = b.slice(split)
-                b = b.slice(0, split)
-            yield process(b)
-        if hold is not None and hold.num_rows:
-            yield process(hold)
-
-    r2 = s.mapInArrow(gen, schema=out_struct)
-
-    # route per-spec kernel outputs (the kernel already resolved ROWS
-    # vs RANGE/tie semantics — no post-pass, no second data shuffle)
-    for j, (i, fn, col) in enumerate(measure_specs):
-        r2 = r2.withColumn(specs[i][0], F.col(f"__rv{j}"))
-    drop = ["__rpid", "__rwkey"] + [f"__rm{j}" for j in range(n_meta)]
-    drop += [f"__rv{j}" for j in range(n_meta)]
-    if need_tie:
-        drop += ["__rtkey", "__rmid"]
-    return r2.drop(*drop)
 
 
 def _attach_partition_aggs(
