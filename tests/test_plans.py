@@ -179,8 +179,10 @@ def test_ann_join_does_not_duplicate_python_udf(spark, sf_dir, monkeypatch):
 
     Round 15: bucketization is size-routed (similarity.py
     `_bucketize_all_tables`) — below the JVM-route budget there are ZERO
-    Python nodes; the duplication guard is now exercised by forcing the
-    GEMM route, where the pin stays exactly 2 (one per join side)."""
+    Python nodes; the duplication guard is exercised on the GEMM route,
+    where the pin stays exactly 2 (one per join side). The test moves
+    `_LSH_JVM_MAX_BYTES` to pin each route."""
+    from vscode_parquet_visualizer_spark.operators import similarity
     from vscode_parquet_visualizer_spark.operators.similarity import (
         ivf_neighbors,
         lsh_neighbors,
@@ -201,12 +203,14 @@ def test_ann_join_does_not_duplicate_python_udf(spark, sf_dir, monkeypatch):
     # being duplicated by an injected IsNotNull.
     plan = simple_plan(ivf_neighbors(emb, queries, threshold=0.9))
     assert plan.count("ArrowEvalPython") == 0  # fully JVM-side
-    # r15 default at gate scale: the JVM bucketization route — no Python
+    # both bucketization routes pinned by the JVM-route ceiling, not by
+    # the fixture's size estimate. JVM route: no Python
+    monkeypatch.setattr(similarity, "_LSH_JVM_MAX_BYTES", 1 << 63)
     plan = simple_plan(lsh_neighbors(emb, queries, threshold=0.9, dim=64))
     assert plan.count("ArrowEvalPython") == 0
-    # forced GEMM route: the duplication guard must hold the count at
-    # exactly one ArrowEvalPython per join side
-    monkeypatch.setenv("SPARK_GRAFT_LSH_ROUTE", "gemm")
+    # GEMM route: the duplication guard must hold the count at exactly
+    # one ArrowEvalPython per join side
+    monkeypatch.setattr(similarity, "_LSH_JVM_MAX_BYTES", -1)
     plan = simple_plan(lsh_neighbors(emb, queries, threshold=0.9, dim=64))
     assert plan.count("ArrowEvalPython") == 2  # corpus + query bucketize
 

@@ -333,7 +333,7 @@ def test_range_running_aggs_use_group_broadcast(spark, monkeypatch):
 def test_range_running_aggs_group_budget_falls_back_to_window_finish(
     spark, monkeypatch
 ):
-    # a group table over SPARK_GRAFT_RAGG_BCAST_MAX rows cannot be
+    # a group table over _RAGG_BCAST_MAX rows cannot be
     # broadcast: the route must fall back to the positional finish
     # (the JVM tie-aware window finish), correct at any order-key NDV
     # for every measure kind.
@@ -530,8 +530,8 @@ def test_size_scaled_auto_route_lag(spark, monkeypatch):
     monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
     want = _rows(spark, sql)
     monkeypatch.setenv("SPARK_GRAFT_RANK", "auto")
-    monkeypatch.setenv("SPARK_GRAFT_RANK_SIZE_GATE", "1")
-    monkeypatch.setenv("SPARK_GRAFT_TASK_BUDGET", "1")
+    monkeypatch.setattr(rank_sql, "_SIZE_GATE", 1)
+    monkeypatch.setattr(rank_sql, "_TASK_BUDGET", 1)
     rank_sql.note_catalog_change()
     with warnings.catch_warnings():
         warnings.simplefilter("ignore")
@@ -541,7 +541,7 @@ def test_size_scaled_auto_route_lag(spark, monkeypatch):
     assert win_lines and all("__blk" in ln for ln in win_lines), plan
     assert sorted(tuple(r) for r in df.collect()) == want
     # huge budget: auto keeps the plain window plan, warning loudly
-    monkeypatch.setenv("SPARK_GRAFT_TASK_BUDGET", str(1 << 60))
+    monkeypatch.setattr(rank_sql, "_TASK_BUDGET", 1 << 60)
     rank_sql.note_catalog_change()
     with pytest.warns(RuntimeWarning, match="opt-in"):
         df2 = run_sql(spark, sql)
@@ -725,8 +725,6 @@ _RN_RANK = (
 def test_partition_keys_never_merge_or_split(spark, monkeypatch, ddl, keys,
                                              select):
     # the lowered routes must neither merge nor split window partitions
-    from vscode_parquet_visualizer_spark.plans import rank_sql
-
     rows = [(uid, *keys[uid // 10 % 2]) for uid in range(40)]
     spark.createDataFrame(
         rows, f"uid int, {ddl}"
@@ -734,6 +732,13 @@ def test_partition_keys_never_merge_or_split(spark, monkeypatch, ddl, keys,
     sql = f"SELECT uid, {select} FROM keyt"
     monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
     want = _rows(spark, sql)
+    assert _lowered_rows(spark, monkeypatch, sql) == want
+
+
+def _lowered_rows(spark, monkeypatch, sql):
+    """``_rows`` in distributed mode, asserting the query lowered."""
+    from vscode_parquet_visualizer_spark.plans import rank_sql
+
     lowered = []
     real = rank_sql.try_rewrite_rank
 
@@ -744,5 +749,71 @@ def test_partition_keys_never_merge_or_split(spark, monkeypatch, ddl, keys,
 
     monkeypatch.setattr(rank_sql, "try_rewrite_rank", spy)
     monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
-    assert _rows(spark, sql) == want
+    rows = _rows(spark, sql)
     assert any(lowered), "the query must take the distributed route"
+    return rows
+
+
+# ---- running aggregates: tie groups never span a task, and it is checked ----
+
+
+@pytest.mark.parametrize(
+    "extra",
+    ["", "rank() OVER (PARTITION BY g ORDER BY k) AS rk, "],
+    ids=["order_sorted", "presorted_mixed"],
+)
+@pytest.mark.parametrize(
+    "keys",
+    [
+        [1.0],  # every row one tie group
+        [-0.0, 0.0, 1.0],  # one peer group to WindowExec
+        [float("nan"), 1.0, 2.0],  # NaN sorts last and ties with NaN
+        [None, 1.0],  # NULL order keys are peers
+    ],
+    ids=["all_tie", "negative_zero", "nan", "null"],
+)
+def test_range_running_sum_adversarial_ties(spark, monkeypatch, keys, extra):
+    # the window finish (no group-broadcast route) over 4 range
+    # partitions must complete every tie group inside one task. With
+    # rank() beside it the finish runs on with_row_numbers' (partition,
+    # order)-sorted substrate, where adjacent tasks share an order key
+    # across two window partitions — not a spanning tie group
+    from vscode_parquet_visualizer_spark.operators import rank
+
+    assert spark.sparkContext.defaultParallelism >= 4
+    rows = [(uid, uid % 2, keys[uid % len(keys)]) for uid in range(400)]
+    spark.createDataFrame(
+        rows, "uid int, g int, k double"
+    ).createOrReplaceTempView("tiet")
+    sql = (
+        f"SELECT uid, {extra}"
+        "sum(uid) OVER (PARTITION BY g ORDER BY k) AS ts, "
+        "count(*) OVER (PARTITION BY g ORDER BY k) AS tc FROM tiet"
+    )
+    monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
+    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    want = _rows(spark, sql)
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)  # no fallback
+        assert _lowered_rows(spark, monkeypatch, sql) == want
+
+
+def test_running_aggs_tie_group_spanning_tasks_raises(spark, monkeypatch):
+    # a presorted substrate whose tie group spans tasks (here: one tie
+    # group hash-scattered over 4 tasks) cannot be finished per task —
+    # the edge check must raise, not return wrong running values
+    from vscode_parquet_visualizer_spark.operators import rank
+
+    monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 0)  # one group: skip it
+    df = spark.range(100).select(
+        F.lit(0).alias("g"), F.lit(1).alias("k"), F.col("id").alias("uid")
+    ).repartition(4, "uid")
+    with pytest.raises(ValueError, match="tie group spans tasks"):
+        rank._attach_running_aggs(
+            df,
+            ["g"],
+            ["k"],
+            [("ts", ("ragg", "sum", F.col("uid"), False))],
+            sort_cols=[F.col("k").asc_nulls_last()],
+            presorted=True,
+        )

@@ -77,14 +77,14 @@ def test_bucketize_routes_agree(embeddings, monkeypatch):
     # inside each plane projection (left-fold vs BLAS), which can only
     # matter for a projection within ulps of zero.
     kw = dict(dim=64, bits=8, tables=4, seed=42)
-    monkeypatch.setenv("SPARK_GRAFT_LSH_ROUTE", "jvm")
+    monkeypatch.setattr(sim, "_LSH_JVM_MAX_BYTES", 1 << 63)  # always JVM
     jvm = sim._bucketize_all_tables(
         embeddings, "vec_id", "id", "embedding", **kw
     )
     plan = jvm._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "EvalPython" not in plan
     jvm_rows = {(r["id"], r["table"], r["bucket"]) for r in jvm.collect()}
-    monkeypatch.setenv("SPARK_GRAFT_LSH_ROUTE", "gemm")
+    monkeypatch.setattr(sim, "_LSH_JVM_MAX_BYTES", -1)  # always GEMM
     gemm = sim._bucketize_all_tables(
         embeddings, "vec_id", "id", "embedding", **kw
     )
@@ -136,11 +136,11 @@ def test_near_dup_routes_agree(embeddings, monkeypatch):
     # the size guard may pick either at scale
     corpus = embeddings.filter(F.col("vec_id") < 500)
     kw = dict(threshold=0.5, dim=64, bits=4, tables=2)
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_ROUTE", "grouped")
+    monkeypatch.setattr(sim, "_NEARDUP_BUCKET_MAX_BYTES", 1 << 63)
     grouped = {
         tuple(r) for r in sim.embedding_near_dup_pairs(corpus, **kw).collect()
     }
-    monkeypatch.setenv("SPARK_GRAFT_NEARDUP_ROUTE", "join")
+    monkeypatch.setattr(sim, "_NEARDUP_BUCKET_MAX_BYTES", -1)
     df = sim.embedding_near_dup_pairs(corpus, **kw)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ObjectHashAggregate" not in plan, "join route must not group"
@@ -217,7 +217,7 @@ def test_ivf_prebuilt_index_matches_inline(spark, sf_dir):
 def test_fast_path_null_query_vector_falls_through(spark, monkeypatch):
     # r13 size gate routes tiny corpora to HOF; force the
     # unrolled attempt so this test keeps exercising its guard
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     # a NULL query vector crashed the unrolled scorer (len(None));
     # now it falls through to the HOF path, whose NULL scores are
     # filtered — the non-NULL query still gets its neighbors
@@ -237,7 +237,7 @@ def test_fast_path_null_query_vector_falls_through(spark, monkeypatch):
 def test_fast_path_null_element_falls_through(spark, monkeypatch):
     # r13 size gate routes tiny corpora to HOF; force the
     # unrolled attempt so this test keeps exercising its guard
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     corpus = spark.createDataFrame(
         [(i, [float(i + 1), 1.0]) for i in range(4)],
         ["vec_id", "embedding"],
@@ -253,7 +253,7 @@ def test_fast_path_null_element_falls_through(spark, monkeypatch):
 def test_fast_path_mixed_dims_falls_through(spark, monkeypatch):
     # r13 size gate routes tiny corpora to HOF; force the
     # unrolled attempt so this test keeps exercising its guard
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     # inconsistent query dims previously sized el[] from the first
     # query, silently truncating the others
     corpus = spark.createDataFrame(
@@ -274,7 +274,7 @@ def test_fast_path_mixed_dims_falls_through(spark, monkeypatch):
 def test_fast_path_corpus_dim_mismatch_scores_null(spark, monkeypatch):
     # r13 size gate routes tiny corpora to HOF; force the
     # unrolled attempt so this test keeps exercising its guard
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     # a corpus vector of a different dimension must score NULL (as the
     # HOF path does), not a silently truncated dot product
     corpus = spark.createDataFrame(
@@ -291,7 +291,7 @@ def test_fast_path_corpus_dim_mismatch_scores_null(spark, monkeypatch):
 def test_fast_path_backslash_and_quote_query_ids(spark, monkeypatch):
     # r13 size gate routes tiny corpora to HOF; force the
     # unrolled attempt so this test keeps exercising its guard
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     # string ids flow through a selectExpr literal: backslashes and
     # quotes must round-trip exactly
     corpus = spark.createDataFrame(
@@ -313,7 +313,6 @@ def test_size_gate_routes_small_corpus_to_hof(spark, monkeypatch, tmp_path):
     Catalyst reports real scan sizes only for file sources (a LogicalRDD
     from createDataFrame stats as Long.Max → unrolled, the scale-safe
     unknown-size default)."""
-    monkeypatch.delenv("SPARK_GRAFT_TOPK", raising=False)
     p = str(tmp_path / "corpus.parquet")
     spark.createDataFrame(
         [(i, [float(i + 1), 1.0, 0.5]) for i in range(20)],
@@ -328,7 +327,7 @@ def test_size_gate_routes_small_corpus_to_hof(spark, monkeypatch, tmp_path):
     # tiny corpus: auto mode must plan the HOF join, not the unrolled
     # stack projection (which would add a take() job first)
     assert "stack(" not in auto._jdf.queryExecution().toString()
-    monkeypatch.setenv("SPARK_GRAFT_TOPK", "unrolled")
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 0)
     forced = sim.brute_force_topk(corpus, queries, k=3)
     assert "stack(" in forced._jdf.queryExecution().toString()
     key = lambda r: (r["query_id"], r["rank"])
@@ -337,17 +336,21 @@ def test_size_gate_routes_small_corpus_to_hof(spark, monkeypatch, tmp_path):
     )
 
 
-def test_size_gate_threshold_env(spark, monkeypatch):
-    # dropping the byte threshold to 1 makes any corpus "large":
-    # auto mode engages the unrolled scorer
-    monkeypatch.delenv("SPARK_GRAFT_TOPK", raising=False)
-    monkeypatch.setenv("SPARK_GRAFT_TOPK_UNROLL_MIN_BYTES", "1")
-    corpus = spark.createDataFrame(
+def test_size_gate_threshold(spark, monkeypatch, tmp_path):
+    # a parquet corpus reports its real (tiny) size, so the default
+    # threshold keeps the HOF join; dropping the threshold to 1 byte
+    # makes the same corpus "large" and engages the unrolled scorer
+    p = str(tmp_path / "corpus.parquet")
+    spark.createDataFrame(
         [(0, [1.0, 1.0])], ["vec_id", "embedding"]
-    )
+    ).write.mode("overwrite").parquet(p)
+    corpus = spark.read.parquet(p)
     queries = spark.createDataFrame(
         [(9, [1.0, 0.0])], ["query_id", "embedding"]
     )
+    auto = sim.brute_force_topk(corpus, queries, k=1)
+    assert "stack(" not in auto._jdf.queryExecution().toString()
+    monkeypatch.setattr(sim, "_TOPK_UNROLL_MIN_BYTES", 1)
     out = sim.brute_force_topk(corpus, queries, k=1)
     assert "stack(" in out._jdf.queryExecution().toString()
     assert [r["neighbor_id"] for r in out.collect()] == [0]

@@ -158,16 +158,16 @@ def test_stream_stream_interval_join_matches_batch(spark, sf_dir, stream, batch_
     "name", ["q61_streaming_dedup", "q70_stream_stream_join", "q72_streaming_sessions"]
 )
 def test_workload_stream_batch_short_circuit(spark, sf_dir, name, monkeypatch):
-    """The static-input short-circuit (SPARK_GRAFT_STREAMING=auto → batch
-    plan) must be row-for-row equal to the forced streaming plan — the
+    """The static-input short-circuit (the default ``_STREAM_MODE``,
+    batch plan) must be row-for-row equal to the streaming plan — the
     'both ways' gate for the round-4 batch short-circuit."""
     from vscode_parquet_visualizer_spark import workload
 
-    monkeypatch.setenv("SPARK_GRAFT_STREAMING", "batch")
+    assert workload._STREAM_MODE == "batch"
     batch_rows = sorted(
         tuple(r) for r in workload.QUERIES[name](spark, sf_dir).collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_STREAMING", "stream")
+    monkeypatch.setattr(workload, "_STREAM_MODE", "stream")
     stream_rows = sorted(
         tuple(r) for r in workload.QUERIES[name](spark, sf_dir).collect()
     )

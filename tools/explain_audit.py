@@ -97,25 +97,22 @@ def main() -> None:
     # |queries|x|corpus| scored set. Both scorer routes audited: the
     # sf0.1 corpus (~0.5 MiB) auto-routes to the single-stage HOF cross
     # join (its BNLJ broadcasts the 3-row query side — bounded by
-    # construction); forcing SPARK_GRAFT_TOPK=unrolled shows the
-    # >=32 MiB route, where the codegen'd literal-dot projection
-    # removes the BNLJ and the take()-fed stack scans the corpus once.
+    # construction); a zero unroll threshold shows the >=32 MiB route,
+    # where the codegen'd literal-dot projection removes the BNLJ and
+    # the take()-fed stack scans the corpus once.
     cases["similarity top-k, small-corpus route (HOF, 3-row BNLJ build side)"] = (
         brute_force_topk(emb, queries, k=10)
     )
-    import os as _os
+    from vscode_parquet_visualizer_spark.operators import similarity as _sim
 
-    _prev_topk = _os.environ.get("SPARK_GRAFT_TOPK")
-    _os.environ["SPARK_GRAFT_TOPK"] = "unrolled"
+    _prev_min = _sim._TOPK_UNROLL_MIN_BYTES
+    _sim._TOPK_UNROLL_MIN_BYTES = 0
     try:
         cases["similarity top-k, large-corpus route (unrolled codegen, no BNLJ)"] = (
             brute_force_topk(emb, queries, k=10)
         )
     finally:
-        if _prev_topk is None:
-            _os.environ.pop("SPARK_GRAFT_TOPK", None)
-        else:
-            _os.environ["SPARK_GRAFT_TOPK"] = _prev_topk
+        _sim._TOPK_UNROLL_MIN_BYTES = _prev_min
 
     from vscode_parquet_visualizer_spark.operators.positional import (
         positional_join,

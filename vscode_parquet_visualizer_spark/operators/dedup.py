@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from vscode_parquet_visualizer_spark.operators.scale import plan_bytes
+
 # Mersenne prime for the minhash permutation family
 # h_i(x) = (a_i * x + b_i) mod P. 2^31-1 keeps every product a_i·x below
 # 2^62 so the modular arithmetic is exact in int64 on both the JVM and
@@ -93,12 +95,7 @@ def _parallelize(df: DataFrame, per_partition_bytes: int = 4 << 20) -> DataFrame
     cluster exactly like the old always-repartition(target) did."""
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        size = 1 << 60
+    size = plan_bytes(df, 1 << 60)
     want = max(1, min(target, size // per_partition_bytes + 1))
     if want >= target:
         if df.rdd.getNumPartitions() >= target:
@@ -119,16 +116,6 @@ def _minhash_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
         (rnd.randrange(1, _MERSENNE), rnd.randrange(0, _MERSENNE))
         for _ in range(num_hashes)
     ]
-
-
-def minhash_signature(
-    shingle_col: F.Column, num_hashes: int = 64, seed: int = 42
-) -> F.Column:
-    """K minhash values from a shingle array. Prefer ``minhash_from_hashed``
-    in pipelines (see simhash note on HOFs and recompute)."""
-    return minhash_from_hashed(
-        F.transform(shingle_col, lambda s: F.abs(F.xxhash64(s))), num_hashes, seed
-    )
 
 
 def minhash_from_hashed(
@@ -562,12 +549,7 @@ def segment_dedup(
     if key not in ("auto", "segment", "hash"):
         raise ValueError(f"segment_dedup: unknown key mode {key!r}")
     if key == "auto":
-        try:
-            size = int(
-                df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-            )
-        except Exception:
-            size = -1
+        size = plan_bytes(df, -1)
         # Long.MaxValue is Catalyst's "no estimate" sentinel (RDD-backed
         # local relations); unknown size keeps the full-contract text key
         # — scale inputs are file scans, which always carry real stats.

@@ -19,16 +19,10 @@ from __future__ import annotations
 
 import json
 import os
-from typing import Any
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from vscode_parquet_visualizer_spark.functions.serialization import (
-    safe_column_name,
-    serialize_value,
-)
 
 
 def _excel_projection(df: DataFrame) -> DataFrame:
@@ -133,15 +127,6 @@ def export_excel(df: DataFrame, path: str) -> None:
         projected.columns,
         (list(row) for row in projected.toLocalIterator()),
     )
-
-
-def export_rows_json_safe(df: DataFrame, limit: int | None = None) -> list[dict[str, Any]]:
-    """Collected JSON-safe rows (the webview/export row contract)."""
-    rows = df.limit(limit).collect() if limit is not None else df.collect()
-    return [
-        {safe_column_name(k): serialize_value(v) for k, v in r.asDict().items()}
-        for r in rows
-    ]
 
 
 def export_avro(

@@ -46,8 +46,6 @@ distinct-key pass this operator deliberately does not hide).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -73,6 +71,9 @@ _MAP_LITERAL_MAX = 1000
 from vscode_parquet_visualizer_spark.operators.persist import (  # noqa: E402
     persist_salted,
     release_salted,
+)
+from vscode_parquet_visualizer_spark.operators.scale import (  # noqa: E402
+    plan_bytes,
 )
 
 
@@ -562,7 +563,7 @@ def _attach_lag_leads_blocked(
 # at the cap, far under Spark's 8 GiB broadcast limit). Above it the
 # window finish takes over — the cost of finding out is one map-side-
 # aggregated shuffle of partials, paid once.
-_RAGG_BCAST_MAX = int(os.environ.get("SPARK_GRAFT_RAGG_BCAST_MAX", 4_000_000))
+_RAGG_BCAST_MAX = 4_000_000
 
 # NDV pre-probe floor (r15, r14 verdict item 6 + ADVICE medium): below
 # this estimated input size the grouped route builds the group table
@@ -575,9 +576,7 @@ _RAGG_BCAST_MAX = int(os.environ.get("SPARK_GRAFT_RAGG_BCAST_MAX", 4_000_000))
 # an over-budget estimate skips the doomed build entirely. Advisory
 # only: an under-estimate falls through to the exact count gate below,
 # so the route decision stays correct either way.
-_RAGG_PROBE_MIN_BYTES = int(
-    os.environ.get("SPARK_GRAFT_RAGG_PROBE_MIN_BYTES", 4 << 30)
-)
+_RAGG_PROBE_MIN_BYTES = 4 << 30
 
 
 def _attach_running_aggs_grouped(
@@ -653,13 +652,8 @@ def _attach_running_aggs_grouped(
     # is abandoned after a near-data-sized shuffle. The approx pre-probe
     # (gated on estimated input bytes, _RAGG_PROBE_MIN_BYTES) skips the
     # build in exactly that regime.
-    try:
-        est_bytes = int(
-            r._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est_bytes = 0  # unknown: probe would cost a scan; build decides
-    if est_bytes >= _RAGG_PROBE_MIN_BYTES:
+    # unknown size: the probe would cost a scan; the build decides
+    if plan_bytes(r, 0) >= _RAGG_PROBE_MIN_BYTES:
         ndv = r.select(
             F.approx_count_distinct(
                 F.struct(*[F.col(k) for k in keys])
@@ -726,7 +720,6 @@ def _finish_running_aggs_window(
     ops: list[str],
     kinds: list[str],
     carries: dict,
-    overrides_by_pid: dict,
     tie_order: list[Column],
 ) -> DataFrame:
     """JVM finish for running aggregates (r14 optimization round,
@@ -749,11 +742,8 @@ def _finish_running_aggs_window(
        PRECEDING..CURRENT ROW)`` — the RANGE frame's peer rows ARE the
        tie group, so the frame already ends at the tie group's last
        row. ``tie_order`` is the substrate's own order-key sort, so a
-       pure-RANGE clause plans ONE Window and ONE in-task sort. Tie
-       groups spanning a task boundary (driver-detected; see the guard
-       in the caller) arrive as a broadcast-joined override relation on
-       (task, key, tie) whose absolute (count, value) replaces the
-       local result.
+       pure-RANGE clause plans ONE Window and ONE in-task sort. A tie
+       group never spans a task boundary (the caller checks).
 
     Measured at sf10 (OPTIMIZATION_r14.md): rows-frame running sum
     12.66 s (Arrow kernel, interleaved min-of-5) → 7.25 s; the
@@ -796,45 +786,6 @@ def _finish_running_aggs_window(
         s2 = s.withColumns(
             {f.name: F.lit(None).cast(f.dataType) for f in cfields[2:]}
         )
-    # boundary-spanning tie groups: absolute (count, value) overrides,
-    # broadcast-joined on (task, key, tie) — empty in practice (the
-    # range partitioner colocates equal sort keys)
-    has_ov = F.lit(False)
-    if need_tie and overrides_by_pid:
-        ofields = [
-            T.StructField("__rpid", T.IntegerType()),
-            T.StructField("__rwkey", T.StringType()),
-            T.StructField("__rtkey", T.StringType()),
-        ]
-        for j in range(n_meta):
-            ofields.append(T.StructField(f"__oc{j}", T.LongType()))
-            ofields.append(
-                T.StructField(
-                    f"__ov{j}",
-                    T.LongType() if kinds[j] == "int" else T.DoubleType(),
-                )
-            )
-        ofields.append(T.StructField("__ovp", T.BooleanType()))
-        orows = []
-        for pid, entries in overrides_by_pid.items():
-            for wk, tk, entry in entries:
-                row: list = [pid, wk, tk]
-                for j in range(n_meta):
-                    cnt, val = entry[j]
-                    row.append(int(cnt))
-                    if val is None:
-                        row.append(None)
-                    else:
-                        row.append(
-                            int(val) if kinds[j] == "int" else float(val)
-                        )
-                row.append(True)
-                orows.append(tuple(row))
-        odf = spark.createDataFrame(orows, T.StructType(ofields))
-        s2 = s2.join(
-            F.broadcast(odf), ["__rpid", "__rwkey", "__rtkey"], "left"
-        )
-        has_ov = F.coalesce(F.col("__ovp"), F.lit(False))
     w = (
         _W.partitionBy("__rwkey", "__rpid")
         .orderBy("__rmid")
@@ -877,13 +828,6 @@ def _finish_running_aggs_window(
                 .when(in_v.isNull(), cv)
                 .otherwise(pick(cv, in_v))
             )
-        if tie and overrides_by_pid:
-            ov = F.col(f"__ov{j}")
-            if op == "avg":
-                ov = ov.cast("double") / F.col(f"__oc{j}")
-            val = F.when(has_ov, F.when(F.col(f"__oc{j}") > 0, ov)).otherwise(
-                val
-            )
         out_cols[f"__rv{j}"] = val.cast(
             "long" if kind == "int" and op != "avg" else "double"
         )
@@ -897,10 +841,6 @@ def _finish_running_aggs_window(
     drop += [f"__cv{j}" for j in range(n_meta)]
     if need_tie:
         drop.append("__rtkey")
-        if overrides_by_pid:
-            drop.append("__ovp")
-            drop += [f"__oc{j}" for j in range(n_meta)]
-            drop += [f"__ov{j}" for j in range(n_meta)]
     return r2.drop(*drop)
 
 
@@ -951,7 +891,8 @@ def _attach_running_aggs(
        orders by the order-key sort expressions under a RANGE frame, so
        every peer row (same partition + order keys) shares its tie
        group's value. Peers are equal on every sort key, so the range
-       partitioner never splits a tie group across tasks.
+       partitioner never splits a tie group across tasks; the stats
+       pass checks that at each task edge and raises otherwise.
 
     ``__rwkey``/``__rtkey`` are :func:`render_key` strings of the
     partition and order keys. ``count(*)`` rides as a constant-1
@@ -972,10 +913,9 @@ def _attach_running_aggs(
     # GROUP, never on its position — so aggregate per group (map-side
     # partials, tiny shuffle), run the cumulative over the bounded
     # group table, and broadcast-join the values back. No range sort,
-    # no row ids, no boundary-chain machinery. Falls through to the
-    # window finish when any spec is ROWS-frame (needs true positions)
-    # or the group table outgrows the broadcast budget (high-NDV order
-    # keys at scale).
+    # no row ids. Falls through to the window finish when any spec is
+    # ROWS-frame (needs true positions) or the group table outgrows the
+    # broadcast budget (high-NDV order keys at scale).
     if all(not spec[3] for _, spec in specs):
         out = _attach_running_aggs_grouped(
             r, partition_cols, order_cols, specs, measure_specs, sort_cols
@@ -1074,91 +1014,34 @@ def _attach_running_aggs(
                 )
         carries[k] = entry
 
-    # ---- tie groups spanning a task boundary (range frames only): a
-    # peer group split across tasks needs its group-END value pushed
-    # back to every earlier row. The range partitioner colocates equal
-    # sort keys, and peers ARE equal on every sort key (order-only sort:
-    # peers share the order keys; presorted mixed path: partition+order)
-    # — so spans cannot arise from partitioning, and with render_key
-    # injective no rendered-key collision can fake one either: this
-    # block is a GUARD with no known trigger. Cost when no boundary
-    # tkeys match — always, in practice: a few driver comparisons over
-    # the ≤ #tasks-row first/last table, no extra job.
-    overrides_by_pid: dict[int, list[tuple[str, str, list]]] = {}
+    # ---- tie groups never span a task (range frames only): peers are
+    # equal on every sort key (order-only sort: the order keys;
+    # presorted mixed path: partition + order keys), and the range
+    # partitioner colocates equal sort keys — so the finish completes
+    # each tie group inside one task. Checked, not assumed: if two
+    # adjacent tasks meet on one sort key, raise (the gateway turns it
+    # into its loud WindowExec fallback). Cost: a few driver
+    # comparisons over the ≤ #tasks-row first/last table, no extra job.
     if need_tie and stats:
-        first: dict[int, tuple] = {}  # pid -> (mid, tkey)
+        first: dict[int, tuple] = {}  # pid -> (mid, edge sort key)
         last: dict[int, tuple] = {}
         for row in stats:
             p = row["__rpid"]
+            wk = row["__rwkey"] if presorted else None
             if p not in first or row["__amn"] < first[p][0]:
-                first[p] = (row["__amn"], row["__aft"])
+                first[p] = (row["__amn"], (wk, row["__aft"]))
             if p not in last or row["__amx"] > last[p][0]:
-                last[p] = (row["__amx"], row["__alt"])
+                last[p] = (row["__amx"], (wk, row["__alt"]))
         pids = sorted(first)
-        # boundary tkey values whose run crosses a task boundary, with
-        # the contiguous pid chain each touches (tkey runs are globally
-        # contiguous under either sort — order keys are a sort prefix
-        # of neither... of both orders' TAIL — equal tkey ⇒ equal order
-        # keys ⇒ adjacent in the global sort)
-        chains: dict[str, set[int]] = {}
         for a, b in zip(pids, pids[1:]):
-            t = last[a][1]
-            if t != first[b][1]:
-                continue
-            ch = chains.setdefault(t, set())
-            for p in (a, b):
-                if first[p][1] == t or last[p][1] == t:
-                    ch.add(p)
-        if chains:
-            # per-(pid, wkey, tkey) partials of the boundary runs: one
-            # filtered aggregate over the substrate, output bounded by
-            # chain-pids × key NDV
-            keyset = [
-                f"{p}{_SEP}{t}" for t, ch in chains.items() for p in ch
-            ]
-            aggs_b = []
-            for j, (name, op) in enumerate(meta):
-                aggs_b.append(_agg_fn(op)(name).alias(f"__bv{j}"))
-                aggs_b.append(F.count(name).alias(f"__bc{j}"))
-            bkey = F.concat_ws(
-                _SEP, F.col("__rpid").cast("string"), F.col("__rtkey")
-            )
-            brows = (
-                s.filter(bkey.isin(keyset))
-                .groupBy("__rpid", "__rwkey", "__rtkey")
-                .agg(*aggs_b)
-                .collect()
-            )
-            groups: dict[tuple[str, str], dict[int, object]] = {}
-            for row in brows:
-                groups.setdefault(
-                    (row["__rwkey"], row["__rtkey"]), {}
-                )[row["__rpid"]] = row
-            for (w, t), per_pid in groups.items():
-                if len(per_pid) < 2:
-                    continue  # whole group inside one task: finish-local
-                q = max(per_pid)
-                # group-end value = running prefix of wkey w up to the
-                # end of q's t-run: carries(q, w) covers every earlier
-                # task's w-rows (all order keys ≤ t there), q's own
-                # t-run partial completes it
-                carr = carries[(q, w)]
-                brow = per_pid[q]
-                entry = []
-                for j in range(n_meta):
-                    c0, v0 = carr[j]
-                    pc, pv = brow[f"__bc{j}"], brow[f"__bv{j}"]
-                    cnt = c0 + (pc or 0)
-                    val = _combine(ops[j], v0, pv) if pc else v0
-                    entry.append((cnt, val))
-                for p in per_pid:
-                    overrides_by_pid.setdefault(p, []).append(
-                        (w, t, entry)
-                    )
+            if last[a][1] == first[b][1]:
+                raise ValueError(
+                    f"running aggregate: a tie group spans tasks {a} and "
+                    f"{b}; the per-task RANGE finish cannot complete it"
+                )
 
     return _finish_running_aggs_window(
-        spark, s, specs, measure_specs, ops, kinds, carries,
-        overrides_by_pid, sort_cols,
+        spark, s, specs, measure_specs, ops, kinds, carries, sort_cols
     )
 
 

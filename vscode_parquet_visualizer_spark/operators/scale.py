@@ -216,3 +216,17 @@ def has_exchange(df: DataFrame) -> bool:
     # \bExchange\b matches the shuffle node but not BroadcastExchange
     # (no word boundary inside the token)
     return bool(re.search(r"\bExchange\b", plan))
+
+
+def plan_bytes(df: DataFrame, unknown: int) -> int:
+    """Catalyst's optimized-plan size estimate of ``df`` in bytes — a
+    driver-side plan analysis, no job. Every size gate reads this one
+    probe. Returns ``unknown`` when the estimate cannot be read; each
+    gate passes the value that keeps its scale-correct route. A relation
+    without statistics (e.g. ``createDataFrame``) reports Catalyst's
+    ``Long.MaxValue`` sentinel, not ``unknown``."""
+    try:
+        plan = df._jdf.queryExecution().optimizedPlan()
+        return int(plan.stats().sizeInBytes())
+    except Exception:
+        return unknown

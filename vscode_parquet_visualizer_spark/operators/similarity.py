@@ -18,13 +18,14 @@
 from __future__ import annotations
 
 import json
-import os
 from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from vscode_parquet_visualizer_spark.operators.scale import plan_bytes
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -143,6 +144,11 @@ def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
+# Corpus-size floor (estimated bytes) for brute_force_topk's unrolled
+# codegen scorer; below it the single-stage HOF cross join runs.
+_TOPK_UNROLL_MIN_BYTES = 32 * 1024 * 1024
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -178,24 +184,8 @@ def brute_force_topk(
     # ones (where interpreted scoring dominates — sf10 52 MiB measured
     # 2× slower) take the unrolled codegen scorer. Probe failure
     # assumes large: the unrolled path is the scale-correct default.
-    # SPARK_GRAFT_TOPK=unrolled|hof forces either branch (tests).
-    force = os.environ.get("SPARK_GRAFT_TOPK", "").lower()
-    try:
-        corpus_bytes = int(
-            corpus._jdf.queryExecution().optimizedPlan().stats()
-            .sizeInBytes()
-        )
-    except Exception:
-        corpus_bytes = 1 << 60
-    unroll_min = int(
-        os.environ.get(
-            "SPARK_GRAFT_TOPK_UNROLL_MIN_BYTES", 32 * 1024 * 1024
-        )
-    )
-    want_unrolled = (
-        force == "unrolled"
-        or (force != "hof" and corpus_bytes >= unroll_min)
-    )
+    # Tests pin a branch by moving _TOPK_UNROLL_MIN_BYTES (0: unrolled).
+    want_unrolled = plan_bytes(corpus, 1 << 60) >= _TOPK_UNROLL_MIN_BYTES
     qrows = (
         queries.select(
             F.col(query_id_col).alias("query_id"),
@@ -308,29 +298,16 @@ def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42):
     ]
 
 
-def random_hyperplane_bucket(
-    vec: Column, dim: int, bits: int = 12, table: int = 0, seed: int = 42
-) -> Column:
-    """Sign-of-projection LSH bucket id (int in [0, 2^bits))."""
-    planes = _hyperplanes(dim, bits, table, seed)
-    acc = F.lit(0).cast("long")
-    for i, plane in enumerate(planes):
-        proj = dot(vec, F.array(*[F.lit(float(x)) for x in plane]))
-        acc = acc + F.when(proj > 0, F.lit(2 ** i).cast("long")).otherwise(F.lit(0).cast("long"))
-    return acc
-
-
 # Corpus-size ceiling for the JVM bucketization route: below it the
 # interpreted projection (rows × tables·bits·dim lambda frames) is
 # cheaper than an Arrow pass's fixed per-task worker round-trip
 # (~0.2 s/task at gate scale); above it the GEMM pass wins — one BLAS
 # matmul per batch is exactly the guide §4.2 "vectorized native code on
 # whole batches" pattern, and the worker round-trip amortizes over real
-# data. Measured crossover in OPTIMIZATION_r15.md.
-# SPARK_GRAFT_LSH_ROUTE=jvm|gemm forces either branch (tests, A/Bs).
-_LSH_JVM_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_LSH_JVM_MAX_BYTES", 32 * 1024 * 1024)
-)
+# data. Measured crossover in OPTIMIZATION_r15.md. Tests pin a branch by
+# moving the ceiling: 1 << 63 (above even the Long.MaxValue "no
+# estimate" sentinel) always takes the JVM route, -1 always GEMM.
+_LSH_JVM_MAX_BYTES = 32 * 1024 * 1024
 
 
 def _bucketize_all_tables_jvm(
@@ -434,16 +411,8 @@ def _bucketize_all_tables(
     routes emit identical shapes (and identical values on every gated
     input; see the float note on the JVM twin).
     """
-    route = os.environ.get("SPARK_GRAFT_LSH_ROUTE", "").lower()
-    try:
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est_bytes = 1 << 60  # unknown: assume large (GEMM scales)
-    if route == "jvm" or (
-        route != "gemm" and est_bytes <= _LSH_JVM_MAX_BYTES
-    ):
+    # unknown size: assume large (GEMM scales)
+    if plan_bytes(df, 1 << 60) <= _LSH_JVM_MAX_BYTES:
         return _bucketize_all_tables_jvm(
             df, idc, out_id, vec_col, dim, bits, tables, seed
         )
@@ -863,10 +832,10 @@ def ivf_neighbors(
 # 2^bits — no extra job) the self-join formulation takes over: it
 # streams the probe side and is AQE-skew-split eligible. The estimate
 # is an average — a pathologically skewed bucket can exceed it — so the
-# default leaves ~30× headroom to the 2 GiB array/task ceiling.
-_NEARDUP_BUCKET_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_NEARDUP_BUCKET_MAX_BYTES", 64 << 20)
-)
+# default leaves ~30× headroom to the 2 GiB array/task ceiling. Tests
+# pin a route by moving the budget: -1 always joins, 1 << 63 always
+# groups.
+_NEARDUP_BUCKET_MAX_BYTES = 64 << 20
 
 
 def embedding_near_dup_pairs(
@@ -894,21 +863,11 @@ def embedding_near_dup_pairs(
       splitting, no single-array materialization. Costs a second
       evaluation of the bucketization subtree (JVM-cheap since r15) and
       a second corpus shuffle.
-
-    ``SPARK_GRAFT_NEARDUP_ROUTE=grouped|join`` forces either."""
+    """
     if dim is None:
         dim = _vector_dim(df, vec_col)
-    force = os.environ.get("SPARK_GRAFT_NEARDUP_ROUTE", "").lower()
-    try:
-        est_bytes = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        est_bytes = 0  # unknown: grouped (the r14-audited default)
-    use_join = force == "join" or (
-        force != "grouped"
-        and est_bytes // (1 << bits) > _NEARDUP_BUCKET_MAX_BYTES
-    )
+    # unknown size: grouped (the r14-audited default)
+    use_join = plan_bytes(df, 0) // (1 << bits) > _NEARDUP_BUCKET_MAX_BYTES
     b = _bucketize_all_tables(df, id_col, "id", vec_col, dim, bits, tables, seed)
     # Precompute each vector's norm ONCE before the self-join (r11
     # verdict item 4): the interpreted array-HOF norm used to run twice

@@ -4958,22 +4958,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         ),
     )
 
-    # divide(): the function form of `/`, which for DuckDB integers is
-    # TRUNCATING integer division (divide(7,2)=3, divide(-7,2)=-3 —
-    # Spark's div) but plain division once a float is involved. Same
-    # static heuristic as the `//` operator: a decimal literal operand
-    # picks the float path; float-typed columns are not statically
-    # knowable and keep div (documented divergence, batch 28).
-    def divide_x(a):
-        if len(a) != 2:
-            return None
-        if any(re.fullmatch(r"-?\d+\.\d+", x.strip()) for x in a):
-            # DOUBLE like DuckDB — Spark would type a decimal-literal
-            # division DECIMAL
-            return f"CAST(({a[0]}) / ({a[1]}) AS DOUBLE)"
-        return f"(({a[0]}) div ({a[1]}))"
-
-    sql = _rewrite_calls(sql, "divide", divide_x)
     # fdiv/fmod: DuckDB's FLOOR-division pair (fdiv(-7.5,2) = -4,
     # fmod(-7.5,2) = 0.5 — remainder takes the divisor's sign), both
     # DOUBLE. Spark's `%` truncates, so spell the floor identity out.
@@ -6584,18 +6568,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             f"CAST({a[0]} AS DOUBLE), CAST({a[1]} AS DOUBLE)) AS DOUBLE)"
         ) if len(a) == 2 else None,
     )
-    # character-set Jaccard (DuckDB jaccard(s1, s2))
-    def jaccard_x(a):
-        if len(a) != 2:
-            return None
-        cs = lambda s: f"array_distinct(split({s}, ''))"  # noqa: E731
-        return (
-            f"(CAST(size(array_intersect({cs(a[0])}, {cs(a[1])})) AS DOUBLE)"
-            f" / size(array_union({cs(a[0])}, {cs(a[1])})))"
-        )
-
-    sql = _rewrite_calls(sql, "jaccard", jaccard_x)
-
     # list_contains/array_contains: DuckDB returns FALSE (not NULL) when
     # the probe is absent from a list that contains NULLs; NULL only for
     # NULL inputs (probed: list_contains([NULL,3], 7) IS FALSE)

@@ -51,16 +51,15 @@ _current_views: dict[int, str] = {}
 # run-once-read-many shape the reference gets from its CTAS result table.
 _HOT = {"lineitem", "orders", "customer", "events", "documents", "embeddings"}
 
-# ... capped at an on-disk size where caching stops making sense for the
-# deployment (default 32 GiB ≈ this box's RAM after JVM overheads; set
-# SPARK_GRAFT_PERSIST_MAX for other machines). Controlled in-process A/B
-# at the 100×-scale crossover (2.4 GB input, warm cache both ways):
-# persist 39.9 s vs direct pruned scans 44.0 s over the 8 heaviest
-# queries — the full-column in-memory cache beats re-decoding parquet as
-# long as it fits, and MEMORY_AND_DISK degrades gracefully near the cap.
-_PERSIST_MAX_BYTES = int(
-    os.environ.get("SPARK_GRAFT_PERSIST_MAX", 32 * 1024**3)
-)
+# ... capped at an on-disk size where caching stops making sense: a fixed
+# 32 GiB, not derived from RAM (about twice a 16 GB machine's RAM; there
+# MEMORY_AND_DISK spills what the heap cannot hold). Controlled
+# in-process A/B at the 100×-scale crossover (2.4 GB input, warm cache
+# both ways): persist 39.9 s vs direct pruned scans 44.0 s over the 8
+# heaviest queries — the full-column in-memory cache beats re-decoding
+# parquet as long as it fits, and MEMORY_AND_DISK degrades gracefully
+# near the cap.
+_PERSIST_MAX_BYTES = 32 * 1024**3
 
 # Keyed cache partitioning — the in-memory analogue of bucketed storage.
 # Every heavy workload join runs lineitem⋈orders on orderkey and then
@@ -136,9 +135,6 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     cores = spark.sparkContext.defaultParallelism
 
     def _want(path: str) -> int:
-        env = os.environ.get("SPARK_GRAFT_CACHE_PARTS")
-        if env:
-            return int(env)
         return min(cores, max(8, _table_bytes(path) // (8 << 20)))
 
     # Shared count for the keyed trio (see _CACHE_KEYS): exchange-free
@@ -303,30 +299,17 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 
 
-def _stream_mode() -> str:
-    """Execution mode for the streaming-shaped queries whose INPUT here
-    is a static parquet file: 'auto'/'batch' (default) run the identical
-    transformation as a batch plan — window/session_window/interval
-    joins are the same operators and withWatermark is a no-op in batch —
-    because data at rest should not pay Structured Streaming's
-    micro-batch + state-store floor (round-3 verdict: data-proportional
-    state writes, 16.7 s vs 0.12 s batch at sf10). 'stream' forces the
-    incremental plan; tests pin the two modes row-for-row equal. A
-    LIVE source (kafka, a growing directory) takes the stream path
-    regardless — only static file inputs are short-circuited."""
-    return os.environ.get("SPARK_GRAFT_STREAMING", "auto").lower()
-
-
-def _rank_mode() -> str:
-    """Execution mode for the rank-family queries with a size profile:
-    'auto' (default) routes onto the distributed-rank operator
-    (operators/rank.py) only above the 64 MiB wall where Spark's
-    one-task-per-window-partition WindowExec stops scaling; 'distributed'
-    forces the operator path at ANY size so the branch that runs at
-    100 TB is the branch the correctness gates see (mirrors
-    SPARK_GRAFT_STREAMING — round-11 verdict item 2: the scale branch
-    must not be gate-invisible); 'window' forces the plain window plan."""
-    return os.environ.get("SPARK_GRAFT_RANK", "auto").lower()
+# Execution mode for the streaming-shaped queries whose INPUT here is a
+# static parquet file: 'batch' (default) runs the identical
+# transformation as a batch plan — window/session_window/interval joins
+# are the same operators and withWatermark is a no-op in batch — because
+# data at rest should not pay Structured Streaming's micro-batch +
+# state-store floor (round-3 verdict: data-proportional state writes,
+# 16.7 s vs 0.12 s batch at sf10). 'stream' runs the incremental plan;
+# tests patch this constant to pin the two modes row-for-row equal. A
+# LIVE source (kafka, a growing directory) takes the stream path
+# regardless — only static file inputs are short-circuited.
+_STREAM_MODE = "batch"
 
 
 def q(name: str, oracle: str | None = None):
@@ -2113,12 +2096,12 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     from (rn, n). first/nth_value are a 3-row broadcast attach from
     the rn<=2 slice.
 
-    Size profile (the _stream_profile pattern): below 64 MiB of orders
-    the single-task window is FASTER than the distributed machinery's
-    fixed cost (checkpoint + stats job ≈ 1-2 s; window at sf0.1 is
-    0.19 s) — interactive scale keeps the window, the distributed path
-    takes over where the wall starts (sf10: 13.6 s window → 9.2 s
-    distributed, and only the distributed shape runs at 100 TB).
+    Size profile: below 64 MiB of orders the single-task window is
+    FASTER than the distributed machinery's fixed cost (checkpoint +
+    stats job ≈ 1-2 s; window at sf0.1 is 0.19 s) — interactive scale
+    keeps the window, the distributed path takes over where the wall
+    starts (sf10: 13.6 s window → 9.2 s distributed, and only the
+    distributed shape runs at 100 TB).
     SPARK_GRAFT_RANK=distributed forces the operator path at any size
     (tests/test_rank.py pins the full composition row-equal to the
     window oracle at driver-gate scale)."""
@@ -2127,9 +2110,10 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
         percent_rank_from_rn,
         with_row_numbers,
     )
+    from vscode_parquet_visualizer_spark.plans import rank_sql
 
     t = load_tables(spark, sf_dir)
-    mode = _rank_mode()
+    mode = rank_sql._mode()
     small = _table_bytes(f"{sf_dir}/orders.parquet") < 64 * 1024 * 1024
     if mode == "window" or (mode != "distributed" and small):
         return spark.sql(ORACLES["q59_rank_functions"])
@@ -2221,11 +2205,11 @@ def q61(spark, sf_dir):
     STATIC inputs short-circuit to the identical batch plan (the
     transformation is the same operator tree; withWatermark is a no-op in
     batch) — a user asking this question over data already at rest should
-    not pay the micro-batch + state-store floor. Set
-    SPARK_GRAFT_STREAMING=stream to force the incremental plan; the
-    stream↔batch equality is pinned by tests/test_streaming.py."""
+    not pay the micro-batch + state-store floor. ``_STREAM_MODE =
+    "stream"`` runs the incremental plan; the stream↔batch equality is
+    pinned by tests/test_streaming.py."""
     t = load_tables(spark, sf_dir)
-    if _stream_mode() != "stream":
+    if _STREAM_MODE != "stream":
         dup = t["events"].unionByName(t["events"])
         deduped = dup.withWatermark("ts", "1 hour").dropDuplicates(["event_id"])
         return (
@@ -2662,15 +2646,15 @@ def q70(spark, sf_dir):
     streaming plan's state-store writes growing data-proportionally
     (16.7 s vs a 0.12 s batch equivalent at sf10) and called the
     always-streaming choice weak — data at rest gets the batch plan.
-    SPARK_GRAFT_STREAMING=stream forces the incremental plan; equality
-    is pinned by tests/test_streaming.py."""
+    ``_STREAM_MODE = "stream"`` runs the incremental plan; equality is
+    pinned by tests/test_streaming.py."""
     from vscode_parquet_visualizer_spark.streaming import events as stream_ops
     from vscode_parquet_visualizer_spark.streaming.joins import (
         purchases_with_prior_views,
     )
 
     t = load_tables(spark, sf_dir)
-    if _stream_mode() != "stream":
+    if _STREAM_MODE != "stream":
         out = purchases_with_prior_views(t["events"], lookback="30 minutes")
         return out.select("user_id", "purchase_id", "view_id")
     stream = stream_ops.read_events_stream(
@@ -2741,12 +2725,12 @@ def q72(spark, sf_dir):
 
     STATIC inputs short-circuit to the identical batch session_window
     plan through the SAME sessionize() transformation (q71's shape);
-    SPARK_GRAFT_STREAMING=stream forces the incremental plan, pinned
+    ``_STREAM_MODE = "stream"`` runs the incremental plan, pinned
     equal by tests/test_streaming.py."""
     from vscode_parquet_visualizer_spark.streaming import events as stream_ops
 
     t = load_tables(spark, sf_dir)
-    if _stream_mode() != "stream":
+    if _STREAM_MODE != "stream":
         sess = stream_ops.sessionize(
             t["events"], gap="30 minutes", watermark="2 hours"
         )
