@@ -26,3 +26,13 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def rank_route(monkeypatch):
+    """``rank_route("distributed")`` / ``rank_route("window")`` pins the
+    rank gateway's route at any input size until the test ends, by
+    moving its gate constants (tools/rank_fuzz.pin_route)."""
+    from tools.rank_fuzz import pin_route
+
+    return lambda route: pin_route(route, monkeypatch.setattr)

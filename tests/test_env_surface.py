@@ -1,10 +1,10 @@
-"""The package's environment surface: three settings plus SPARK_MASTER.
+"""The package's environment surface: two settings plus SPARK_MASTER.
 
 Routes are chosen by module constants that the code (and a test's
-``monkeypatch.setattr``) can see, not by environment variables nobody
-sets. Only ``session.py`` and ``plans/rank_sql._mode`` read the
-environment, and only the names below. Every size gate reads Catalyst's
-plan-size estimate through ``operators/scale.plan_bytes``.
+``monkeypatch.setattr``) can see, not by environment variables. Only
+``session.py`` reads the environment, and only the names below. Every
+size gate reads Catalyst's plan-size estimate through
+``operators/scale.plan_bytes``.
 """
 
 import ast
@@ -16,10 +16,9 @@ ALLOWED_NAMES = {
     "SPARK_MASTER",
     "SPARK_GRAFT_CPUS",
     "SPARK_GRAFT_DRIVER_MEM",
-    "SPARK_GRAFT_RANK",
 }
-# (file relative to the package, enclosing function or None for any)
-ALLOWED_SITES = {("session.py", None), ("plans/rank_sql.py", "_mode")}
+# files, relative to the package, that may read the environment
+ALLOWED_SITES = {"session.py"}
 
 
 def _is_env(node: ast.AST) -> bool:
@@ -38,8 +37,8 @@ def _literal(node: ast.AST | None):
     return None
 
 
-def env_reads(pkg: Path) -> list[tuple[str, int, str | None, str | None]]:
-    """(file, line, enclosing function, variable name or None) for every
+def env_reads(pkg: Path) -> list[tuple[str, int, str | None]]:
+    """(file, line, variable name or None) for every
     ``os.environ`` / ``os.getenv`` use under ``pkg``."""
     out = []
     for path in sorted(pkg.rglob("*.py")):
@@ -53,7 +52,7 @@ def env_reads(pkg: Path) -> list[tuple[str, int, str | None, str | None]]:
             if isinstance(node, ast.ImportFrom) and node.module == "os":
                 names = {a.name for a in node.names}
                 if names & {"environ", "getenv", "*"}:
-                    out.append((rel, node.lineno, None, None))
+                    out.append((rel, node.lineno, None))
                 continue
             if not _is_env(node):
                 continue
@@ -69,24 +68,15 @@ def env_reads(pkg: Path) -> list[tuple[str, int, str | None, str | None]]:
                     name = _literal(call.args[0])
             elif isinstance(up, ast.Compare):
                 name = _literal(up.left)
-            fn, p = None, up
-            while p is not None:
-                if isinstance(p, (ast.FunctionDef, ast.AsyncFunctionDef)):
-                    fn = p.name
-                    break
-                p = parents.get(p)
-            out.append((rel, node.lineno, fn, name))
+            out.append((rel, node.lineno, name))
     return out
 
 
-def test_env_reads_only_in_session_and_rank_mode():
+def test_env_reads_only_in_session():
     bad = [
         r
         for r in env_reads(PKG)
-        if not (
-            (r[0], None) in ALLOWED_SITES or (r[0], r[2]) in ALLOWED_SITES
-        )
-        or r[3] not in ALLOWED_NAMES
+        if r[0] not in ALLOWED_SITES or r[2] not in ALLOWED_NAMES
     ]
     assert not bad, f"environment reads outside the allowed surface: {bad}"
 

@@ -149,23 +149,23 @@ def test_percent_rank_single_row_partition(spark):
     assert out[("b", 1)] == 0.0 and out[("b", 3)] == 1.0
 
 
-def test_q59_distributed_full_composition(spark, monkeypatch):
+def test_q59_distributed_full_composition(spark, rank_route):
     """Round-11 verdict item 2: the q59 branch that runs at 100 TB must
-    be the branch the gates see. Force SPARK_GRAFT_RANK=distributed at
-    driver-gate scale and pin the FULL composition (rank/dense_rank from
+    be the branch the gates see. Pin the distributed route at
+    driver-gate scale and check the FULL composition (rank/dense_rank from
     the total-order row number, percent_rank fold with rounding, ntile
     fold, first/nth_value broadcast attach) row-equal to the plain
     window oracle."""
     from vscode_parquet_visualizer_spark import workload
 
     sf_dir = "/root/testdata/sf0.01"
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = sorted(
         tuple(r)
         for r in workload.QUERIES["q59_rank_functions"](spark, sf_dir)
         .collect()
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     got_df = workload.QUERIES["q59_rank_functions"](spark, sf_dir)
     plan = got_df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, "forced-distributed q59 must not use WindowExec"

@@ -51,10 +51,10 @@ def _rows(spark, sql):
     return sorted(tuple(r) for r in run_sql(spark, sql).collect())
 
 
-def test_q59_sql_forced_distributed_row_equal(spark, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+def test_q59_sql_forced_distributed_row_equal(spark, rank_route):
+    rank_route("window")
     want = _rows(spark, Q59_SQL)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, Q59_SQL)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan, "lowered q59 SQL must not plan WindowExec"
@@ -62,7 +62,7 @@ def test_q59_sql_forced_distributed_row_equal(spark, monkeypatch):
     assert got == want and len(got) == 15000
 
 
-def test_ties_and_nulls_tie_correct(spark, monkeypatch):
+def test_ties_and_nulls_tie_correct(spark, rank_route):
     # rank/dense_rank/percent_rank/cume_dist under heavy ties and NULL
     # keys — the tie-CORRECT paths (keystats join, distinct-key rank);
     # row_number/ntile excluded: their tie order is engine-arbitrary
@@ -76,15 +76,15 @@ def test_ties_and_nulls_tie_correct(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY k DESC NULLS FIRST)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     assert "Window" not in df._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_default_frame_nth_and_last_value(spark, monkeypatch):
+def test_default_frame_nth_and_last_value(spark, rank_route):
     # default frame: nth_value is NULL until the k-th row; last_value's
     # frame ends at the current row (the row's own value). Total order
     # so the window oracle is deterministic.
@@ -99,14 +99,13 @@ def test_default_frame_nth_and_last_value(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY uid)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     assert _rows(spark, sql) == want
 
 
-def test_auto_mode_small_input_keeps_window_plan(spark, monkeypatch):
-    monkeypatch.delenv("SPARK_GRAFT_RANK", raising=False)
+def test_auto_mode_small_input_keeps_window_plan(spark):
     df = run_sql(
         spark,
         "SELECT o_orderkey, rank() OVER (PARTITION BY o_orderstatus "
@@ -116,11 +115,11 @@ def test_auto_mode_small_input_keeps_window_plan(spark, monkeypatch):
     assert "Window" in plan  # below the 64 MiB gate: plain window plan
 
 
-def test_unsupported_shape_warns_loudly(spark, monkeypatch):
+def test_unsupported_shape_warns_loudly(spark, rank_route):
     # a wall-shaped query the lowering can't cover (rank + a bounded
     # frame on another call sharing the spec) must warn, not silently
     # plan the non-scaling WindowExec
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
         df = run_sql(
@@ -136,19 +135,19 @@ def test_unsupported_shape_warns_loudly(spark, monkeypatch):
     )
 
 
-def test_where_and_tail_survive_lowering(spark, monkeypatch):
+def test_where_and_tail_survive_lowering(spark, rank_route):
     sql = """
         SELECT uid, dense_rank() OVER (PARTITION BY g ORDER BY k, uid) AS dr
         FROM ties WHERE uid >= 100 ORDER BY uid LIMIT 7
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = [tuple(r) for r in run_sql(spark, sql).collect()]
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     got = [tuple(r) for r in run_sql(spark, sql).collect()]
     assert got == want and len(got) == 7 and got[0][0] == 100
 
 
-def test_default_null_order_parity(spark, monkeypatch):
+def test_default_null_order_parity(spark, rank_route):
     # no explicit NULLS modifier: the lowered path must apply the same
     # default null placement as the transpiled window path (DuckDB:
     # NULLS LAST in both directions)
@@ -158,13 +157,13 @@ def test_default_null_order_parity(spark, monkeypatch):
             "AS r, dense_rank() OVER (PARTITION BY g " + spec + ", uid) "
             "AS dr FROM ties"
         )
-        monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+        rank_route("window")
         want = _rows(spark, sql)
-        monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+        rank_route("distributed")
         assert _rows(spark, sql) == want, spec
 
 
-def test_lag_lead_lowering(spark, monkeypatch):
+def test_lag_lead_lowering(spark, rank_route):
     # lag/lead via the ghost-row blocked window; total order so the
     # window oracle is deterministic; includes an explicit offset and a
     # default value
@@ -176,9 +175,9 @@ def test_lag_lead_lowering(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY uid)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     # the distributed lag DOES use a Window node — but only over the
     # blocked high-cardinality (keys, __blk) key, never the raw
@@ -189,7 +188,7 @@ def test_lag_lead_lowering(spark, monkeypatch):
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_whole_partition_aggregates(spark, monkeypatch):
+def test_whole_partition_aggregates(spark, rank_route):
     # sum/avg/min/count(*) OVER (PARTITION BY p) — no ORDER BY: lowered
     # to one groupBy + broadcast attach, no WindowExec
     sql = """
@@ -200,23 +199,23 @@ def test_whole_partition_aggregates(spark, monkeypatch):
                count(*) OVER (PARTITION BY g) AS cnt
         FROM ties
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     assert "Window" not in df._jdf.queryExecution().executedPlan().toString()
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_global_aggregate_over_empty_partition(spark, monkeypatch):
+def test_global_aggregate_over_empty_partition(spark, rank_route):
     sql = "SELECT uid, count(*) OVER () AS n, max(k) OVER () AS mx FROM ties"
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     assert _rows(spark, sql) == want
 
 
-def test_running_avg_lowering(spark, monkeypatch):
+def test_running_avg_lowering(spark, rank_route):
     # running avg = running exact-int sum / running count inside the
     # segmented-prefix kernel; integral measure so the division operands
     # are bit-identical to the window plan's
@@ -224,9 +223,9 @@ def test_running_avg_lowering(spark, monkeypatch):
         "SELECT uid, avg(k) OVER w AS ra, avg(uid) OVER w AS rb "
         "FROM ties WINDOW w AS (PARTITION BY g ORDER BY k, uid)"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     _assert_no_wall_windows(df)
     assert sorted(tuple(r) for r in df.collect()) == want
@@ -248,11 +247,10 @@ def _assert_no_wall_windows(df):
             assert "__gv" in ln or "__gc" in ln or "__rpid" in ln, ln
 
 
-def test_optin_families_keep_window_plan_in_auto_mode(spark, monkeypatch):
-    # lag and running aggregates are opt-in below cluster scale:
-    # auto mode keeps the window plan (the wall warning only fires
+def test_optin_families_keep_window_plan_in_auto_mode(spark):
+    # lag and running aggregates route only past the task budget: the
+    # default gates keep the window plan (the wall warning only fires
     # above the size gate, which no test-scale input reaches).
-    monkeypatch.delenv("SPARK_GRAFT_RANK", raising=False)
     sql = (
         "SELECT uid, lag(uid) OVER (PARTITION BY g ORDER BY uid) AS pv "
         "FROM ties"
@@ -261,7 +259,7 @@ def test_optin_families_keep_window_plan_in_auto_mode(spark, monkeypatch):
     assert "Window" in df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_running_aggregates_lowering(spark, monkeypatch):
+def test_running_aggregates_lowering(spark, rank_route):
     # running sum/min/max/count via the distributed segmented prefix;
     # total order so rows- and range-frames agree and the oracle is
     # deterministic
@@ -277,15 +275,15 @@ def test_running_aggregates_lowering(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY uid)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     _assert_no_wall_windows(df)
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_running_aggregates_tie_inclusive(spark, monkeypatch):
+def test_running_aggregates_tie_inclusive(spark, rank_route):
     # the DEFAULT frame is RANGE ... CURRENT ROW: all peers of the
     # current row are in frame, so tied order keys share one running
     # value — deterministic even though the tie ORDER is not. k is
@@ -298,16 +296,16 @@ def test_running_aggregates_tie_inclusive(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY k)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     assert _rows(spark, sql) == want
 
 
 # ---- round 14 optimization: group-broadcast RANGE running aggregates ----
 
 
-def test_range_running_aggs_use_group_broadcast(spark, monkeypatch):
+def test_range_running_aggs_use_group_broadcast(spark, rank_route):
     # all-RANGE running aggregates route as per-group partials + a
     # Window over the bounded GROUP TABLE + a broadcast join back —
     # no sort substrate, no Python kernel (rank.py
@@ -320,9 +318,9 @@ def test_range_running_aggs_use_group_broadcast(spark, monkeypatch):
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY k)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
@@ -331,7 +329,7 @@ def test_range_running_aggs_use_group_broadcast(spark, monkeypatch):
 
 
 def test_range_running_aggs_group_budget_falls_back_to_window_finish(
-    spark, monkeypatch
+    spark, monkeypatch, rank_route
 ):
     # a group table over _RAGG_BCAST_MAX rows cannot be
     # broadcast: the route must fall back to the positional finish
@@ -349,9 +347,9 @@ def test_range_running_aggs_group_budget_falls_back_to_window_finish(
         FROM ties
         WINDOW w AS (PARTITION BY g ORDER BY k)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" not in plan, "tie-aware JVM finish, not the kernel"
@@ -364,7 +362,7 @@ def test_range_running_aggs_group_budget_falls_back_to_window_finish(
 
 
 def test_range_overbudget_fallback_releases_group_table(
-    spark, monkeypatch
+    spark, monkeypatch, rank_route
 ):
     # r14 ADVICE (medium): the budget fallback must unpersist the
     # abandoned group table immediately, not leave it in the columnar
@@ -380,7 +378,7 @@ def test_range_overbudget_fallback_releases_group_table(
 
     monkeypatch.setattr(rank, "release_salted", spy)
     monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(
         spark,
         "SELECT uid, sum(uid) OVER (PARTITION BY g ORDER BY k) AS rs "
@@ -392,7 +390,9 @@ def test_range_overbudget_fallback_releases_group_table(
     assert src is not None and src not in persist._LIVE
 
 
-def test_range_ndv_preprobe_skips_group_table_build(spark, monkeypatch):
+def test_range_ndv_preprobe_skips_group_table_build(
+    spark, monkeypatch, rank_route
+):
     # r15 (r14 verdict item 6 + ADVICE): above the probe size floor, an
     # obviously over-budget approx NDV skips building (and persisting)
     # the group table entirely; the query still answers row-identically
@@ -413,16 +413,16 @@ def test_range_ndv_preprobe_skips_group_table_build(spark, monkeypatch):
         "SELECT uid, sum(uid) OVER (PARTITION BY g ORDER BY k) AS rs "
         "FROM ties"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     assert _rows(spark, sql) == want
     # nothing persisted: the probe skipped the group-table build, and
     # the window finish re-executes its sort rather than caching it
     assert len(substrates) == 0
 
 
-def test_rows_running_aggs_use_jvm_window_finish(spark, monkeypatch):
+def test_rows_running_aggs_use_jvm_window_finish(spark, rank_route):
     # all-ROWS running aggregates finish JVM-side (rank.py
     # _finish_running_aggs_window; guide §4 "eliminate the Python
     # boundary"): sorted substrate + driver-folded carries as before,
@@ -440,9 +440,9 @@ def test_rows_running_aggs_use_jvm_window_finish(spark, monkeypatch):
         WINDOW w AS (PARTITION BY g ORDER BY k, uid
                      ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "MapInArrow" not in plan, "all-ROWS specs must skip the kernel"
@@ -450,14 +450,20 @@ def test_rows_running_aggs_use_jvm_window_finish(spark, monkeypatch):
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_mixed_rows_range_running_aggs_jvm_finish(spark, monkeypatch):
-    # ROWS and RANGE specs in ONE window clause: the JVM finish computes
-    # ROWS per-row and RANGE through a RANGE-frame window, both over the
-    # same substrate. Tie-heavy NULL-bearing data.
+def test_mixed_rows_range_running_aggs_jvm_finish(
+    spark, monkeypatch, rank_route
+):
+    # ROWS and RANGE frames over ONE (PARTITION BY g ORDER BY k): the
+    # JVM finish computes ROWS per-row and RANGE through a RANGE-frame
+    # window, both over the same substrate. Tie-heavy NULL-bearing
+    # order key; the ROWS aggregates are running min/max of the order
+    # key itself, so their values do not depend on how ties are ordered.
     sql = """
         SELECT uid,
-               sum(k)   OVER (PARTITION BY g ORDER BY k, uid
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rs,
+               max(k)   OVER (PARTITION BY g ORDER BY k
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmx,
+               min(k)   OVER (PARTITION BY g ORDER BY k
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS rmn,
                sum(uid) OVER (PARTITION BY g ORDER BY k) AS ts,
                avg(uid) OVER (PARTITION BY g ORDER BY k) AS ta
         FROM ties
@@ -467,19 +473,37 @@ def test_mixed_rows_range_running_aggs_jvm_finish(spark, monkeypatch):
     # force past the group-broadcast route so the finish itself is on
     # trial even for the all-RANGE members
     monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
-    df = run_sql(spark, sql)
+    assert _lowered_rows(spark, monkeypatch, rank_route, sql) == want
+
+
+def test_in_memory_view_without_estimate_keeps_window_plan(spark):
+    # a createDataFrame view has no statistics: Catalyst sizes it at
+    # Long.MaxValue, which must read as "no estimate" (WindowExec, no
+    # warning) and never as a size past the gate
+    from vscode_parquet_visualizer_spark.plans import rank_sql
+
+    spark.createDataFrame(
+        [(i % 3, i) for i in range(30)], "g int, uid int"
+    ).createOrReplaceTempView("mem_rank")
+    sql = (
+        "SELECT uid, rank() OVER (PARTITION BY g ORDER BY uid) AS r "
+        "FROM mem_rank"
+    )
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", RuntimeWarning)
+        assert rank_sql.try_rewrite_rank(spark, sql, run_sql) is None
+        df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "MapInArrow" not in plan
-    assert sorted(tuple(r) for r in df.collect()) == want
+    assert "Window [" in plan, plan
+    assert df.count() == 30
 
 
 # ---- round 13: subquery guard, bounded NDV probe, size-scaled route ----
 
 
-def test_scalar_subquery_over_falls_back(spark, monkeypatch):
+def test_scalar_subquery_over_falls_back(spark, rank_route):
     # r13 ADVICE item 1: an OVER inside a scalar subquery must not be
     # parsed as a window over the outer child. `other_uid` shares the
     # column NAME uid with ties but different values — the old parse
@@ -492,10 +516,10 @@ def test_scalar_subquery_over_falls_back(spark, monkeypatch):
         "SELECT uid, (SELECT max(uid) OVER () FROM other_uid LIMIT 1) "
         "AS m FROM ties"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
     assert want[0][1] == 1004
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     assert _rows(spark, sql) == want
 
 
@@ -516,20 +540,19 @@ def test_ndv_probe_plan_is_limited(spark):
     assert probe.first()["__ndv"] > 0
 
 
-def test_size_scaled_auto_route_lag(spark, monkeypatch):
-    # r12 verdict item 1a: in AUTO mode, a window partition whose
-    # estimated bytes exceed the single-task budget routes the opt-in
-    # lag family distributed anyway (WindowExec would not finish);
-    # below the budget, auto mode keeps WindowExec and warns.
+def test_size_scaled_auto_route_lag(spark, monkeypatch, rank_route):
+    # r12 verdict item 1a: past the size and NDV gates, a window
+    # partition whose estimated bytes exceed the single-task budget
+    # routes the lag family distributed (WindowExec would not finish);
+    # below the budget the gateway keeps WindowExec and warns.
     from vscode_parquet_visualizer_spark.plans import rank_sql
 
     sql = (
         "SELECT uid, lag(uid) OVER (PARTITION BY g ORDER BY uid) AS p "
         "FROM ties"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "auto")
     monkeypatch.setattr(rank_sql, "_SIZE_GATE", 1)
     monkeypatch.setattr(rank_sql, "_TASK_BUDGET", 1)
     rank_sql.note_catalog_change()
@@ -540,10 +563,10 @@ def test_size_scaled_auto_route_lag(spark, monkeypatch):
     win_lines = [ln for ln in plan.splitlines() if "Window [" in ln]
     assert win_lines and all("__blk" in ln for ln in win_lines), plan
     assert sorted(tuple(r) for r in df.collect()) == want
-    # huge budget: auto keeps the plain window plan, warning loudly
+    # huge budget: the plain window plan stays, warning loudly
     monkeypatch.setattr(rank_sql, "_TASK_BUDGET", 1 << 60)
     rank_sql.note_catalog_change()
-    with pytest.warns(RuntimeWarning, match="opt-in"):
+    with pytest.warns(RuntimeWarning, match="still fits one task"):
         df2 = run_sql(spark, sql)
     plan2 = df2._jdf.queryExecution().executedPlan().toString()
     assert any(
@@ -553,11 +576,11 @@ def test_size_scaled_auto_route_lag(spark, monkeypatch):
     assert sorted(tuple(r) for r in df2.collect()) == want
 
 
-def test_lowering_prunes_child_columns(spark, monkeypatch):
+def test_lowering_prunes_child_columns(spark, rank_route):
     # r13: the lowering prunes the child to referenced + window-key
     # columns (WindowExec gets this from Catalyst for free; the eager
     # child must do it by hand or every shuffle carries the full row)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(
         spark,
         "SELECT o_orderkey, rank() OVER (PARTITION BY o_orderstatus "
@@ -568,10 +591,10 @@ def test_lowering_prunes_child_columns(spark, monkeypatch):
     assert "o_clerk" not in plan
 
 
-def test_lowered_views_do_not_leak(spark, monkeypatch):
+def test_lowered_views_do_not_leak(spark, rank_route):
     # r13 ADVICE item 5a: the lowering's temp view is dropped after the
     # outer select is analyzed — no per-query catalog growth
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(
         spark,
         "SELECT uid, rank() OVER (PARTITION BY g ORDER BY uid) AS r "
@@ -598,7 +621,7 @@ def test_gate_caches_invalidate_on_ddl(spark):
     assert rank_sql._NDV_CACHE == {}
 
 
-def test_quoted_identifier_survives_pruning(spark, monkeypatch):
+def test_quoted_identifier_survives_pruning(spark, rank_route):
     # r14 ADVICE item 2: the r13 column pruning scanned the outer text
     # with a bare-identifier regex, but quoted identifiers travel as
     # \x00IDQn\x00 placeholders at that stage — a child column
@@ -615,16 +638,16 @@ def test_quoted_identifier_survives_pruning(spark, monkeypatch):
         'SELECT "My Col", rank() OVER (PARTITION BY g ORDER BY uid) AS r '
         "FROM r14_quoted"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "Window [" not in plan, "distributed force must lower"
     assert sorted(tuple(r) for r in df.collect()) == want
 
 
-def test_unquoted_columns_still_pruned_alongside_quoted(spark, monkeypatch):
+def test_unquoted_columns_still_pruned_alongside_quoted(spark, rank_route):
     # the quoted-identifier fix must not disable pruning for the rest
     # of the row: an unreferenced wide column still stays out of the
     # lowered plan even when a quoted identifier appears in the SELECT
@@ -636,7 +659,7 @@ def test_unquoted_columns_still_pruned_alongside_quoted(spark, monkeypatch):
         (F.col("id") * 2).alias("My Col"),
         F.lit("x" * 50).alias("wide_unused"),
     ).createOrReplaceTempView("r14_quoted_wide")
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(
         spark,
         'SELECT "My Col", rank() OVER (PARTITION BY g ORDER BY uid) AS r '
@@ -663,20 +686,20 @@ def test_dataset_open_invalidates_gate_caches(spark, tmp_path):
     assert rank_sql._NDV_CACHE == {}
 
 
-def test_large_offset_lag_plans_blocked_shape(spark, monkeypatch):
+def test_large_offset_lag_plans_blocked_shape(spark, rank_route):
     # r14 verdict item 5: offsets >= 65536 used to fall back to a keyed
     # self-join (the last data-sized build side in the window family);
     # the block size now scales with the offset, so the ghost-row
     # blocked window handles ANY offset — plan shows a __blk window and
     # no join.
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     sql = (
         "SELECT uid, lag(uid, 70000, -1) OVER "
         "(PARTITION BY g ORDER BY uid) AS pv FROM ties"
     )
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     df = run_sql(spark, sql)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "__blk" in plan, "large offset must use the blocked window"
@@ -722,21 +745,23 @@ _RN_RANK = (
          "separator_in_value", "negative_zero", "separator_in_array",
          "negative_zero_in_array", "negative_zero_in_struct"],
 )
-def test_partition_keys_never_merge_or_split(spark, monkeypatch, ddl, keys,
-                                             select):
+def test_partition_keys_never_merge_or_split(
+    spark, monkeypatch, ddl, keys, select, rank_route
+):
     # the lowered routes must neither merge nor split window partitions
     rows = [(uid, *keys[uid // 10 % 2]) for uid in range(40)]
     spark.createDataFrame(
         rows, f"uid int, {ddl}"
     ).createOrReplaceTempView("keyt")
     sql = f"SELECT uid, {select} FROM keyt"
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
-    assert _lowered_rows(spark, monkeypatch, sql) == want
+    assert _lowered_rows(spark, monkeypatch, rank_route, sql) == want
 
 
-def _lowered_rows(spark, monkeypatch, sql):
-    """``_rows`` in distributed mode, asserting the query lowered."""
+def _lowered_rows(spark, monkeypatch, rank_route, sql):
+    """``_rows`` on the pinned distributed route, asserting the query
+    lowered."""
     from vscode_parquet_visualizer_spark.plans import rank_sql
 
     lowered = []
@@ -748,7 +773,7 @@ def _lowered_rows(spark, monkeypatch, sql):
         return out
 
     monkeypatch.setattr(rank_sql, "try_rewrite_rank", spy)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    rank_route("distributed")
     rows = _rows(spark, sql)
     assert any(lowered), "the query must take the distributed route"
     return rows
@@ -772,7 +797,9 @@ def _lowered_rows(spark, monkeypatch, sql):
     ],
     ids=["all_tie", "negative_zero", "nan", "null"],
 )
-def test_range_running_sum_adversarial_ties(spark, monkeypatch, keys, extra):
+def test_range_running_sum_adversarial_ties(
+    spark, monkeypatch, keys, extra, rank_route
+):
     # the window finish (no group-broadcast route) over 4 range
     # partitions must complete every tie group inside one task. With
     # rank() beside it the finish runs on with_row_numbers' (partition,
@@ -791,11 +818,11 @@ def test_range_running_sum_adversarial_ties(spark, monkeypatch, keys, extra):
         "count(*) OVER (PARTITION BY g ORDER BY k) AS tc FROM tiet"
     )
     monkeypatch.setattr(rank, "_RAGG_BCAST_MAX", 1)
-    monkeypatch.setenv("SPARK_GRAFT_RANK", "window")
+    rank_route("window")
     want = _rows(spark, sql)
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)  # no fallback
-        assert _lowered_rows(spark, monkeypatch, sql) == want
+        assert _lowered_rows(spark, monkeypatch, rank_route, sql) == want
 
 
 def test_running_aggs_tie_group_spanning_tasks_raises(spark, monkeypatch):

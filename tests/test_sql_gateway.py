@@ -1826,8 +1826,8 @@ class TestRound14FractionalLagDefault:
         assert got == want
         assert any(r[1] == 2.5 for r in got)  # default NOT rounded
 
-    def test_lowered_path_rounds_too(self, monkeypatch):
-        monkeypatch.setenv("SPARK_GRAFT_RANK", "distributed")
+    def test_lowered_path_rounds_too(self, rank_route):
+        rank_route("distributed")
         sql = (
             "SELECT big, lag(big, 1, 2.5) OVER "
             "(PARTITION BY g ORDER BY big) AS d FROM ll_frac"

@@ -8,7 +8,7 @@ Usage:
 Runs the query with the noop sink (cold + ``reps`` warm), then prints
 every Spark job of the LAST warm rep with its duration and the dominant
 stages (duration, tasks, shuffle read/write, input bytes) from the UI
-REST API. SPARK_GRAFT_RANK / other env routing applies as usual.
+REST API.
 """
 
 from __future__ import annotations

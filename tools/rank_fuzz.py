@@ -1,8 +1,8 @@
 """Differential fuzz for the window-family lowering (plans/rank_sql.py):
-random window queries over a ties/NULL-heavy table, executed FORCED
-onto the distributed operators (SPARK_GRAFT_RANK=distributed) vs the
-plain WindowExec plan, sorted rows compared exactly. Spark's own
-WindowExec is the reference implementation.
+random window queries over a ties/NULL-heavy table, executed with the
+route pinned to the distributed operators vs pinned to the plain
+WindowExec plan (``pin_route``), sorted rows compared exactly. Spark's
+own WindowExec is the reference implementation.
 
 The string partition column ``h`` carries NUL, \x1e, \x1f and
 sentinel-looking values, so any lossy window-partition key rendering
@@ -25,6 +25,7 @@ Usage: python tools/rank_fuzz.py N_QUERIES SEED
 import os
 import random
 import sys
+import warnings
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
@@ -44,6 +45,27 @@ INTS = ["uid", "k"]             # Spark 4.1's TimeType surface
 # might use as a separator or NULL sentinel
 H_VALS = ["0", "1", "2", "a\x00b", "a\x1eb", "a\x1fb", "\x1eNULL",
           "\x00NULL"]
+
+
+# Gate constants of plans.rank_sql that pin one route at any input size.
+# A missing size estimate reads 0, which still passes a size gate of 0.
+ROUTE_PINS = {
+    "distributed": {"_SIZE_GATE": 0, "_NDV_PER_CORE": 1 << 40,
+                    "_TASK_BUDGET": -1},
+    "window": {"_SIZE_GATE": 1 << 63},
+}
+
+
+def pin_route(route: str, setattr=setattr) -> None:
+    """Move plans.rank_sql's gate constants so every rank-family query
+    takes ``route`` ('distributed' or 'window'). Pass a test's
+    ``monkeypatch.setattr`` to have them restored. The gateway's
+    "auto-routing ... exceeds the single-task budget" warning is
+    silenced too: under a -1-byte budget it reports the pin, not the
+    data."""
+    for name, value in ROUTE_PINS[route].items():
+        setattr(rank_sql, name, value)
+    warnings.filterwarnings("ignore", "auto-routing", RuntimeWarning)
 
 
 def gen_query(rng: random.Random) -> str:
@@ -174,16 +196,20 @@ def fuzz(spark, n: int, seed: int, log=print) -> dict:
         returned.append(out is not None)
         return out
 
-    prev_mode = os.environ.get("SPARK_GRAFT_RANK")
+    saved = {
+        name: getattr(rank_sql, name)
+        for pin in ROUTE_PINS.values()
+        for name in pin
+    }
     rank_sql.try_rewrite_rank = spy
     counts = {"bad": 0, "lowered": 0, "fell_back": 0}
     try:
         for i in range(n):
             sql = gen_query(rng)
             try:
-                os.environ["SPARK_GRAFT_RANK"] = "window"
+                pin_route("window")
                 want = sorted(tuple(r) for r in run_sql(spark, sql).collect())
-                os.environ["SPARK_GRAFT_RANK"] = "distributed"
+                pin_route("distributed")
                 returned.clear()
                 got = sorted(tuple(r) for r in run_sql(spark, sql).collect())
             except Exception as exc:
@@ -197,10 +223,8 @@ def fuzz(spark, n: int, seed: int, log=print) -> dict:
                 log(f"[{i}] MISMATCH ({len(diff)} shown) {diff}\n  {sql}")
     finally:
         rank_sql.try_rewrite_rank = real
-        if prev_mode is None:
-            os.environ.pop("SPARK_GRAFT_RANK", None)
-        else:
-            os.environ["SPARK_GRAFT_RANK"] = prev_mode
+        for name, value in saved.items():
+            setattr(rank_sql, name, value)
     return counts
 
 

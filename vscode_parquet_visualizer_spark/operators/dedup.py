@@ -549,16 +549,9 @@ def segment_dedup(
     if key not in ("auto", "segment", "hash"):
         raise ValueError(f"segment_dedup: unknown key mode {key!r}")
     if key == "auto":
+        # unknown size keeps the full-contract text key
         size = plan_bytes(df, -1)
-        # Long.MaxValue is Catalyst's "no estimate" sentinel (RDD-backed
-        # local relations); unknown size keeps the full-contract text key
-        # — scale inputs are file scans, which always carry real stats.
-        if size < 0 or size >= (1 << 63) - 1:
-            key = "segment"
-        else:
-            key = (
-                "hash" if size > _SEGMENT_HASH_THRESHOLD_BYTES else "segment"
-            )
+        key = "hash" if size > _SEGMENT_HASH_THRESHOLD_BYTES else "segment"
     wl = F.split(F.col(text_col), " ")
     n_seg = F.ceil(F.size(wl) / F.lit(words_per_segment)).cast("int")
     segs = (

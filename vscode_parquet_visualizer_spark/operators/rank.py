@@ -514,10 +514,10 @@ def _attach_lag_leads_blocked(
     min-of-4 quiet box), bounded task memory, no data-sized build side.
     Still above local WindowExec's 2.6 s on the same shape — the
     with_row_numbers range-sort + checkpoint alone costs more than the
-    whole single-node window — so lag/lead remain opt-in at local
-    scale; plans/rank_sql.py auto-routes them anyway when the estimated
+    whole single-node window (r14 measured the reverse, 11.3 → 7.5 s)
+    — so plans/rank_sql.py routes lag/lead here only when the estimated
     bytes-per-window-partition exceeds a single-task budget (PERF.md
-    route-policy table).
+    route-policy tables).
     """
     from pyspark.sql.window import Window
 

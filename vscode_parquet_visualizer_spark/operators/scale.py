@@ -218,15 +218,23 @@ def has_exchange(df: DataFrame) -> bool:
     return bool(re.search(r"\bExchange\b", plan))
 
 
+# Catalyst's size for a relation without statistics (``createDataFrame``,
+# RDD-backed views) is Long.MaxValue; a join or union over one multiplies
+# it further. Either way it is "no estimate", never a real size.
+_NO_ESTIMATE = (1 << 63) - 1
+
+
 def plan_bytes(df: DataFrame, unknown: int) -> int:
     """Catalyst's optimized-plan size estimate of ``df`` in bytes — a
     driver-side plan analysis, no job. Every size gate reads this one
-    probe. Returns ``unknown`` when the estimate cannot be read; each
-    gate passes the value that keeps its scale-correct route. A relation
-    without statistics (e.g. ``createDataFrame``) reports Catalyst's
-    ``Long.MaxValue`` sentinel, not ``unknown``."""
+    probe. Returns ``unknown`` when there is no estimate: it cannot be
+    read, or Catalyst has no statistics for the input (any value at or
+    above ``Long.MaxValue``). Each gate passes the value that keeps its
+    scale-correct route; scale inputs are file scans, which always carry
+    real statistics."""
     try:
         plan = df._jdf.queryExecution().optimizedPlan()
-        return int(plan.stats().sizeInBytes())
+        size = int(plan.stats().sizeInBytes())
     except Exception:
         return unknown
+    return unknown if size >= _NO_ESTIMATE else size

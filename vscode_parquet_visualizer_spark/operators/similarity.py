@@ -182,8 +182,8 @@ def brute_force_topk(
     # PERF.md). Route on Catalyst's driver-side plan-size estimate (no
     # job): small corpora take the single-stage HOF cross join, large
     # ones (where interpreted scoring dominates — sf10 52 MiB measured
-    # 2× slower) take the unrolled codegen scorer. Probe failure
-    # assumes large: the unrolled path is the scale-correct default.
+    # 2× slower) take the unrolled codegen scorer. No estimate assumes
+    # large: the unrolled path is the scale-correct default.
     # Tests pin a branch by moving _TOPK_UNROLL_MIN_BYTES (0: unrolled).
     want_unrolled = plan_bytes(corpus, 1 << 60) >= _TOPK_UNROLL_MIN_BYTES
     qrows = (
@@ -305,8 +305,8 @@ def _hyperplanes(dim: int, bits: int, table: int, seed: int = 42):
 # matmul per batch is exactly the guide §4.2 "vectorized native code on
 # whole batches" pattern, and the worker round-trip amortizes over real
 # data. Measured crossover in OPTIMIZATION_r15.md. Tests pin a branch by
-# moving the ceiling: 1 << 63 (above even the Long.MaxValue "no
-# estimate" sentinel) always takes the JVM route, -1 always GEMM.
+# moving the ceiling: 1 << 63 (above any estimate, and above the
+# assumed-large unknown) always takes the JVM route, -1 always GEMM.
 _LSH_JVM_MAX_BYTES = 32 * 1024 * 1024
 
 

@@ -17,19 +17,19 @@ in the gateway and lowers it onto the distributed rank operator:
   window, operators/rank.py), and whole-partition sum/avg/min/max/
   count (no ORDER BY or unbounded frame) — and share ONE
   (PARTITION BY, ORDER BY) over plain column references;
-- gate: the child input must be above ``_SIZE_GATE`` AND the
-  partition key's NDV (measured over a bounded, limit-pushed probe) at
-  most ``4 × parallelism`` (a high-NDV key gives WindowExec plenty of
-  parallel tasks — the wall only exists when key cardinality < cores).
-  Families whose distributed shape measures SLOWER at local scale
-  (lag/lead, running aggregates) additionally require either
-  ``SPARK_GRAFT_RANK=distributed`` or an estimated
+- gate: Catalyst's size estimate of the child input must be at least
+  ``_SIZE_GATE`` AND the partition key's NDV (measured over a bounded,
+  limit-pushed probe) at most ``_NDV_PER_CORE × parallelism`` (a
+  high-NDV key gives WindowExec plenty of parallel tasks — the wall
+  only exists when key cardinality < cores). An input without an
+  estimate (``createDataFrame``, RDD-backed views) keeps WindowExec.
+  Lag/lead and running aggregates additionally require an estimated
   bytes-per-window-partition above the single-task budget
   (``_TASK_BUDGET``, 8 GiB) — at that size the WindowExec plan would
-  not finish at all, so auto mode routes regardless of the local-scale
-  measurement.
-  ``SPARK_GRAFT_RANK=distributed`` forces the route at any size (how
-  the tests pin it); ``=window`` disables it.
+  not finish at all (the reasons they wait for it are at the gate).
+  These three constants are the only route inputs; tests and
+  tools/rank_fuzz.py pin a route at any size by moving them to an
+  extreme.
 - otherwise: when the gate would fire but the shape has something the
   lowering doesn't cover, emit a loud RuntimeWarning naming the wall
   instead of silently planning a query that won't finish.
@@ -46,7 +46,6 @@ or ``round(percent_rank() OVER w, 6)`` keep working unchanged.
 from __future__ import annotations
 
 import itertools
-import os
 import re
 import warnings
 
@@ -62,12 +61,18 @@ from vscode_parquet_visualizer_spark.plans.dialect import (
 
 # Child-size floor below which the plain WindowExec plan is kept (small
 # interactive inputs); routing tests patch it to exercise the scale
-# behavior on small fixtures.
+# behavior on small fixtures. workload.q59 compares its file bytes
+# against it too.
 _SIZE_GATE = 64 * 1024 * 1024
 
+# Partition-key NDV per core (at least 64 in all) above which WindowExec
+# keeps the window: it already spreads the window partitions over every
+# task.
+_NDV_PER_CORE = 4
+
 # Bytes one task is assumed able to hold for a WindowExec window
-# partition (sort buffer + spill churn). Above this, the opt-in families
-# route distributed regardless of local-scale measurement.
+# partition (sort buffer + spill churn). Lag/lead and running aggregates
+# route distributed only above it (policy at the gate in _try_rewrite).
 _TASK_BUDGET = 8 * 1024**3
 
 _RANK_FNS = {
@@ -132,17 +137,6 @@ def note_catalog_change() -> None:
     the engine whenever a relation is (re)registered."""
     _SIZE_CACHE.clear()
     _NDV_CACHE.clear()
-
-
-def _mode() -> str:
-    """``SPARK_GRAFT_RANK``, the one rank-route setting (the gateway
-    lowering and workload q59 both read it here): 'auto' (default)
-    routes onto the distributed operators only past the size and NDV
-    gates; 'distributed' forces them at any size, so the branch that
-    runs at 100 TB is the branch the correctness gates see; 'window'
-    keeps the plain WindowExec plan. Read per call, so a test or tool
-    can switch it in-process."""
-    return os.environ.get("SPARK_GRAFT_RANK", "auto").lower()
 
 
 def _top_level_clauses(s: str) -> list[tuple[str, int]]:
@@ -468,15 +462,12 @@ def rewrite_fractional_lag_defaults(spark, sql: str, analyze) -> str:
 def try_rewrite_rank(
     spark: SparkSession, sql: str, run_sql, **kw
 ) -> DataFrame | None:
-    mode = _mode()
-    if mode == "window":
-        return None
     if not re.search(r"\bOVER\b", sql, re.IGNORECASE) or not _QUICK.search(
         sql
     ):
         return None
     try:
-        return _try_rewrite(spark, sql, run_sql, mode, kw)
+        return _try_rewrite(spark, sql, run_sql, kw)
     except Exception as exc:  # any lowering failure → normal path
         warnings.warn(
             f"distributed-rank lowering failed ({exc}); falling back to "
@@ -498,7 +489,7 @@ def _warn_wall(reason: str) -> None:
 
 
 def _try_rewrite(
-    spark: SparkSession, sql: str, run_sql, mode: str, kw: dict
+    spark: SparkSession, sql: str, run_sql, kw: dict
 ) -> DataFrame | None:
     from vscode_parquet_visualizer_spark.operators.rank import (
         attach_window_columns,
@@ -532,6 +523,7 @@ def _try_rewrite(
     from_text = prot[f_span[0] + 4 : f_span[1]].strip()
     w_span = _clause("WHERE")
     where_text = prot[w_span[0] + 5 : w_span[1]].strip() if w_span else None
+    child_sql = _child_sql(from_text, where_text, stash)
     win_span = _clause("WINDOW")
     # the trailing ORDER BY / LIMIT / OFFSET / FETCH text, kept verbatim
     tail_start = None
@@ -570,14 +562,14 @@ def _try_rewrite(
             return None
         parsed = _parse_spec(spec_text)
         if parsed is None:
-            _maybe_warn_gated(spark, run_sql, from_text, where_text, stash,
-                              kw, mode, "unsupported window spec")
+            _maybe_warn_gated(spark, run_sql, child_sql, kw,
+                              "unsupported window spec")
             return None
         if shared is None:
             shared = parsed[:2]
         elif parsed[:2] != shared:
-            _maybe_warn_gated(spark, run_sql, from_text, where_text, stash,
-                              kw, mode, "multiple distinct window specs")
+            _maybe_warn_gated(spark, run_sql, child_sql, kw,
+                              "multiple distinct window specs")
             return None
         specs_parsed.append(parsed)
 
@@ -592,8 +584,8 @@ def _try_rewrite(
         if fn not in (_RANK_FNS | _PAGG_FNS) or re.search(
             r"\b(IGNORE|RESPECT)\s+NULLS\b", args, re.IGNORECASE
         ):
-            _maybe_warn_gated(spark, run_sql, from_text, where_text, stash,
-                              kw, mode, f"unsupported function {fn}")
+            _maybe_warn_gated(spark, run_sql, child_sql, kw,
+                              f"unsupported function {fn}")
             return None
         if fn in _PAGG_FNS:
             if fn == "count" and args.strip() == "*":
@@ -602,8 +594,7 @@ def _try_rewrite(
                 items = _split_top_level(args)
                 ref = items[0].strip() if items else ""
                 if len(items) != 1 or not _COLREF.fullmatch(ref):
-                    _maybe_warn_gated(spark, run_sql, from_text,
-                                      where_text, stash, kw, mode,
+                    _maybe_warn_gated(spark, run_sql, child_sql, kw,
                                       f"non-column argument to {fn}")
                     return None
             if not has_order or unbounded:
@@ -627,8 +618,7 @@ def _try_rewrite(
             items = _split_top_level(args)
             ref = items[0].strip() if items else ""
             if not (1 <= len(items) <= 3) or not _COLREF.fullmatch(ref):
-                _maybe_warn_gated(spark, run_sql, from_text, where_text,
-                                  stash, kw, mode,
+                _maybe_warn_gated(spark, run_sql, child_sql, kw,
                                   f"non-column argument to {fn}")
                 return None
             off = 1
@@ -646,8 +636,7 @@ def _try_rewrite(
             items = _split_top_level(args)
             ref = items[0].strip() if items else ""
             if not _COLREF.fullmatch(ref):
-                _maybe_warn_gated(spark, run_sql, from_text, where_text,
-                                  stash, kw, mode,
+                _maybe_warn_gated(spark, run_sql, child_sql, kw,
                                   f"non-column argument to {fn}")
                 return None
             if fn == "first_value":
@@ -672,67 +661,58 @@ def _try_rewrite(
         call_out.append(keyed[key])
 
     part_refs, order_refs = shared
-    child_sql = _child_sql(from_text, where_text, stash)
-    child_df = None
-    if mode != "distributed":
-        size = _SIZE_CACHE.get(child_sql)
-        if size is None:
+    size, child_df = _child_bytes(spark, run_sql, child_sql, kw)
+    if size < _SIZE_GATE:
+        return None
+    ndv = _NDV_CACHE.get((child_sql, part_refs))
+    if ndv is None:
+        if child_df is None:
             child_df = _run_child(spark, run_sql, child_sql, kw)
-            size = plan_bytes(child_df, 0)  # unknown: keep WindowExec
-            if len(_SIZE_CACHE) < _CACHE_MAX:
-                _SIZE_CACHE[child_sql] = size
-        if size < _SIZE_GATE:
-            return None
-        ndv = _NDV_CACHE.get((child_sql, part_refs))
-        if ndv is None:
-            if child_df is None:
-                child_df = _run_child(spark, run_sql, child_sql, kw)
-            ndv = _measure_ndv(child_df, part_refs)
-            if ndv is not None and len(_NDV_CACHE) < _CACHE_MAX:
-                _NDV_CACHE[(child_sql, part_refs)] = ndv
-        if ndv is None or ndv > max(
-            64, 4 * spark.sparkContext.defaultParallelism
-        ):
-            # a high-NDV key gives WindowExec plenty of parallel tasks —
-            # the wall only exists when key cardinality < cores
-            return None
-        # auto-route policy, measured at sf10 (15 M rows, 3-value key,
-        # local[32]; PERF.md): rank-family 13.5→1.3 s and
-        # whole-partition aggregates 3.8→1.1 s WIN and route
-        # automatically; lag/lead (2.6 s WindowExec vs 7.2 s ghost-row
-        # blocked window — down from the r12 self-join's 10.7 s) and
-        # running aggregates (4.1→24 s) still lose at single-node
-        # scale, because with_row_numbers' range-sort + checkpoint
-        # alone costs more than the whole local WindowExec — so they
-        # are OPT-IN (SPARK_GRAFT_RANK=distributed) — UNLESS the
-        # estimated bytes-per-window-partition exceeds what one task
-        # can hold at all (size ÷ NDV > _TASK_BUDGET, 8 GiB): then
-        # WindowExec does not finish regardless of the local-scale
-        # measurement, and auto mode routes anyway (round-12 verdict
-        # item 1a).
-        optin = sorted(
-            {s[0] for s in outputs.values()} & {"lag", "lead", "ragg"}
-        )
-        if optin:
-            bpp = size / max(ndv, 1)
-            if bpp <= _TASK_BUDGET:
-                _warn_wall(
-                    f"{'/'.join(optin)} lowering is opt-in "
-                    "(SPARK_GRAFT_RANK=distributed) — slower than "
-                    "WindowExec below cluster scale, and the estimated "
-                    f"{bpp / 1e6:.0f} MB per window partition still fits "
-                    "one task"
-                )
-                return None
-            warnings.warn(
-                "auto-routing the distributed "
-                f"{'/'.join(optin)} lowering: estimated "
-                f"{bpp / 1e9:.1f} GB per window partition exceeds the "
-                f"single-task budget ({_TASK_BUDGET / 1e9:.1f} GB) — "
-                "the WindowExec plan would not finish",
-                RuntimeWarning,
-                stacklevel=4,
+        ndv = _measure_ndv(child_df, part_refs)
+        if ndv is not None and len(_NDV_CACHE) < _CACHE_MAX:
+            _NDV_CACHE[(child_sql, part_refs)] = ndv
+    if ndv is None or ndv > max(
+        64, _NDV_PER_CORE * spark.sparkContext.defaultParallelism
+    ):
+        # a high-NDV key gives WindowExec plenty of parallel tasks —
+        # the wall only exists when key cardinality < cores
+        return None
+    # Route policy, from two sf10 tables in PERF.md (15 M rows, 3-value
+    # key, WindowExec → distributed). Rank-family (13.5 → 1.3 s) and
+    # whole-partition aggregates (3.8 → 1.1 s) win, so they route on
+    # the gates above. Lag/lead and running aggregates also need the
+    # estimated bytes per window partition (size ÷ NDV) above
+    # _TASK_BUDGET, past which one WindowExec task cannot hold the
+    # partition at all. The first table (local[32], r12/r13 shapes)
+    # has them losing: lag/lead 2.6 → 7.2 s, running sum 4.1 → 24 s.
+    # The r14 table (another box, current shapes) has them winning:
+    # lag/lead 11.3 → 7.5 s, running sum 10.2 → 3.4 s (RANGE frame;
+    # ROWS 8.7 → 7.25 s). They stay behind the budget because the lag
+    # measurements conflict, and because below it WindowExec keeps
+    # float sums bit-identical to the oracle's addition order, where
+    # the distributed shapes may differ in the last ulp.
+    budgeted = sorted(
+        {s[0] for s in outputs.values()} & {"lag", "lead", "ragg"}
+    )
+    if budgeted:
+        bpp = size / max(ndv, 1)
+        if bpp <= _TASK_BUDGET:
+            _warn_wall(
+                f"the {'/'.join(budgeted)} lowering routes only past the "
+                f"single-task budget ({_TASK_BUDGET / 1e9:.1f} GB per "
+                f"window partition), and the estimated {bpp / 1e6:.0f} MB "
+                "per window partition still fits one task"
             )
+            return None
+        warnings.warn(
+            "auto-routing the distributed "
+            f"{'/'.join(budgeted)} lowering: estimated "
+            f"{bpp / 1e9:.1f} GB per window partition exceeds the "
+            f"single-task budget ({_TASK_BUDGET / 1e9:.1f} GB) — "
+            "the WindowExec plan would not finish",
+            RuntimeWarning,
+            stacklevel=4,
+        )
     if child_df is None:
         child_df = _run_child(spark, run_sql, child_sql, kw)
 
@@ -903,25 +883,27 @@ def _measure_ndv(df: DataFrame, part_refs) -> int | None:
     return _ndv_probe_df(df, cols).first()[0]
 
 
-def _maybe_warn_gated(
-    spark, run_sql, from_text, where_text, stash, kw, mode, reason
-) -> None:
-    """Warn about the WindowExec wall only when the routing gate would
-    actually have fired (forced mode, or a large child input) — small
-    interactive inputs take the plain window plan by design."""
-    if mode == "distributed":
-        _warn_wall(reason)
-        return
+def _child_bytes(spark, run_sql, child_sql, kw):
+    """(Catalyst's size estimate of the child, the child frame when this
+    call had to analyze it, else None), cached per child text. No
+    estimate reads 0: below any real size gate, so WindowExec stays."""
+    size = _SIZE_CACHE.get(child_sql)
+    if size is not None:
+        return size, None
+    child_df = _run_child(spark, run_sql, child_sql, kw)
+    size = plan_bytes(child_df, 0)
+    if len(_SIZE_CACHE) < _CACHE_MAX:
+        _SIZE_CACHE[child_sql] = size
+    return size, child_df
+
+
+def _maybe_warn_gated(spark, run_sql, child_sql, kw, reason) -> None:
+    """Warn about the WindowExec wall only when the size gate would
+    actually have fired — small interactive inputs take the plain window
+    plan by design."""
     try:
-        child_sql = _child_sql(from_text, where_text, stash)
-        size = _SIZE_CACHE.get(child_sql)
-        if size is None:
-            size = plan_bytes(
-                _run_child(spark, run_sql, child_sql, kw), 0
-            )
-            if len(_SIZE_CACHE) < _CACHE_MAX:
-                _SIZE_CACHE[child_sql] = size
-        if size >= _SIZE_GATE:
-            _warn_wall(reason)
+        size, _ = _child_bytes(spark, run_sql, child_sql, kw)
     except Exception:
-        pass
+        return
+    if size >= _SIZE_GATE:
+        _warn_wall(reason)

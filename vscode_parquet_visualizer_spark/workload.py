@@ -2096,13 +2096,13 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     from (rn, n). first/nth_value are a 3-row broadcast attach from
     the rn<=2 slice.
 
-    Size profile: below 64 MiB of orders the single-task window is
-    FASTER than the distributed machinery's fixed cost (checkpoint +
-    stats job ≈ 1-2 s; window at sf0.1 is 0.19 s) — interactive scale
-    keeps the window, the distributed path takes over where the wall
-    starts (sf10: 13.6 s window → 9.2 s distributed, and only the
-    distributed shape runs at 100 TB).
-    SPARK_GRAFT_RANK=distributed forces the operator path at any size
+    Size profile: below ``rank_sql._SIZE_GATE`` (64 MiB) of orders
+    file bytes the single-task window is FASTER than the distributed
+    machinery's fixed cost (checkpoint + stats job ≈ 1-2 s; window at
+    sf0.1 is 0.19 s) — interactive scale keeps the window, the
+    distributed path takes over where the wall starts (sf10: 13.6 s
+    window → 9.2 s distributed, and only the distributed shape runs at
+    100 TB). A gate of 0 takes the operator path at any size
     (tests/test_rank.py pins the full composition row-equal to the
     window oracle at driver-gate scale)."""
     from vscode_parquet_visualizer_spark.operators.rank import (
@@ -2113,9 +2113,7 @@ def q59(spark: SparkSession, sf_dir: str) -> DataFrame:
     from vscode_parquet_visualizer_spark.plans import rank_sql
 
     t = load_tables(spark, sf_dir)
-    mode = rank_sql._mode()
-    small = _table_bytes(f"{sf_dir}/orders.parquet") < 64 * 1024 * 1024
-    if mode == "window" or (mode != "distributed" and small):
+    if _table_bytes(f"{sf_dir}/orders.parquet") < rank_sql._SIZE_GATE:
         return spark.sql(ORACLES["q59_rank_functions"])
     d = t["orders"].select("o_orderkey", "o_orderstatus", "o_totalprice")
     r = with_row_numbers(
