@@ -29,6 +29,11 @@ def _gen(seed, n):
     return [cf.gen_script(rng, 1000 + i) for i in range(n)]
 
 
+def _null_first(row):
+    # NULL cells sort first without comparing None to a value
+    return tuple((v is not None, 0 if v is None else v) for v in row)
+
+
 @pytest.mark.parametrize("seed", [101, 202])
 def test_composite_scripts_match_duckdb(spark, seed):
     import composite_fuzz as cf
@@ -50,9 +55,11 @@ def test_composite_scripts_match_duckdb(spark, seed):
         df = run_sql(spark, script)
         assert df.columns == want_cols, script
         got = sorted(
-            tuple(tp._fuzz_norm(v) for v in r) for r in df.collect()
+            (tuple(tp._fuzz_norm(v) for v in r) for r in df.collect()),
+            key=_null_first,
         )
         want = sorted(
-            tuple(tp._fuzz_norm(v) for v in r) for r in want_rows
+            (tuple(tp._fuzz_norm(v) for v in r) for r in want_rows),
+            key=_null_first,
         )
         assert got == want, script

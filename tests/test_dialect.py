@@ -895,3 +895,90 @@ def test_columns_list_of_names_form():
     assert "columns" in transpile(
         "SELECT columns(['nope']) FROM t", columns=["x"]
     ).lower()
+
+
+# --- one lowering per DuckDB name -------------------------------------
+
+# xform factories whose loop applies ONE rule across a family of regexp
+# names; each name's own lowering lives at its single site elsewhere
+_FAMILY_PASSES = {
+    "posix_fn": "POSIX character classes translated in literal patterns",
+    "regexp_flags_x": "literal regex flags folded into the pattern",
+}
+# name -> why it needs a second site (none today)
+_SECOND_SITE_OK: dict[str, str] = {}
+
+
+def _rewrite_sites() -> dict[str, list[int]]:
+    """{lower-cased name: [line, …]} for every ``_rewrite_calls`` site in
+    ``rewrite_function_shapes``. A name bound by a ``for`` loop over a
+    literal tuple counts once per element; family passes are skipped."""
+    import ast
+    import inspect
+
+    from vscode_parquet_visualizer_spark.plans import dialect
+
+    lines, start = inspect.getsourcelines(dialect.rewrite_function_shapes)
+    tree = ast.parse("".join(lines))
+    ast.increment_lineno(tree, start - 1)
+    sites: dict[str, list[int]] = {}
+
+    def names(node, env):
+        if isinstance(node, ast.Constant) and isinstance(node.value, str):
+            return [node.value]
+        if isinstance(node, ast.Name):
+            return env.get(node.id)
+        if isinstance(node, ast.JoinedStr):
+            out = [""]
+            for v in node.values:
+                part = (
+                    [v.value] if isinstance(v, ast.Constant)
+                    else names(v.value, env)
+                )
+                if part is None:
+                    return None
+                out = [o + str(p) for o in out for p in part]
+            return out
+        return None
+
+    def visit(node, env):
+        if isinstance(node, ast.For) and isinstance(
+            node.iter, (ast.Tuple, ast.List)
+        ):
+            env = dict(env)
+            values = [ast.literal_eval(e) for e in node.iter.elts]
+            if isinstance(node.target, ast.Name):
+                env[node.target.id] = values
+            else:
+                for i, t in enumerate(node.target.elts):
+                    env[t.id] = [v[i] for v in values]
+        if isinstance(node, ast.Call) and getattr(
+            node.func, "id", None
+        ) == "_rewrite_calls":
+            xf = node.args[2]
+            if not (
+                isinstance(xf, ast.Call)
+                and getattr(xf.func, "id", None) in _FAMILY_PASSES
+            ):
+                found = names(node.args[1], env)
+                assert found is not None, f"unresolved name, line {node.lineno}"
+                for n in found:
+                    sites.setdefault(n.lower(), []).append(node.lineno)
+        for child in ast.iter_child_nodes(node):
+            visit(child, env)
+
+    visit(tree, {})
+    return sites
+
+
+def test_one_rewrite_site_per_name():
+    # _rewrite_calls lowers nested same-name calls innermost-first, so a
+    # second site for a name is only ever reached by accident (an inner
+    # call the first site already lowered, or a shape split in two)
+    sites = _rewrite_sites()
+    assert len(sites) > 150  # the scan sees the whole function
+    dup = {
+        n: ls for n, ls in sites.items()
+        if len(ls) > 1 and n not in _SECOND_SITE_OK
+    }
+    assert not dup, f"names lowered at more than one site: {dup}"

@@ -244,7 +244,7 @@ def test_differential_arithmetic(engines, sql):
     assert _rowset(spark_rows) == _rowset(duck_rows)
 
 
-CORPUS_SEMANTICS = [
+CORPUS_SEMANTICS_BASICS = [
     # single-arg log is base-10 in DuckDB
     """SELECT round(log(100.0), 6) AS l10, round(log(2, 8.0), 6) AS l2""",
     # concat skips NULLs and stringifies
@@ -258,8 +258,10 @@ CORPUS_SEMANTICS = [
 ]
 
 
-@pytest.mark.parametrize("sql", CORPUS_SEMANTICS, ids=range(len(CORPUS_SEMANTICS)))
-def test_differential_semantics(engines, sql):
+@pytest.mark.parametrize(
+    "sql", CORPUS_SEMANTICS_BASICS, ids=range(len(CORPUS_SEMANTICS_BASICS))
+)
+def test_differential_semantics_basics(engines, sql):
     spark, con = engines
     spark_rows = [tuple(r) for r in spark.sql(transpile(sql)).collect()]
     duck_rows = con.execute(sql).fetchall()
@@ -378,6 +380,10 @@ ARRAY_SUBSCRIPT_CORPUS = [
     # chained subscripts: the whole chain nests (1-based at every level)
     """SELECT l[1][2] AS a, l[2][1] AS b, l[1][0] AS z, l[3][1] AS oob
        FROM (SELECT [[1,2],[3,4]] AS l)""",
+    # a top-level || inside the subscripted parens: string and list
+    # concatenation both slice 1-based
+    """SELECT ('ab' || 'cd')[2:3] AS s""",
+    """SELECT ([1, 2] || [3])[2:3] AS l""",
 ]
 
 
@@ -3175,6 +3181,16 @@ CORPUS_R10_BATCH48 = [
           AND n_nationkey > 20) ORDER BY 1""",
     """SELECT array_to_string([1,2,3], '-') AS s,
               list_aggregate(['x','y'], 'string_agg', ',') AS l""",
+    # nested same-name calls: every level gets the one lowering
+    # (floored fmod/fdiv with a negative divisor, DuckDB's trim
+    # argument order, NULL-skipping concat, first-element-seeded fold)
+    """SELECT fmod(fmod(7, -2), 3) AS f""",
+    """SELECT fdiv(fdiv(fdiv(7, 3), 3), -2) AS f""",
+    """SELECT trim(trim('abcba', 'a'), 'b') AS t""",
+    """SELECT concat(upper(concat(CAST(NULL AS VARCHAR), 'a')), 'b') AS c""",
+    """SELECT list_reduce([list_reduce([list_reduce([1, 2],
+              (x, y) -> x + y), 3], (x, y) -> x * y), 4],
+              (x, y) -> x - y) AS r""",
 ]
 
 

@@ -8,6 +8,7 @@ size gate reads Catalyst's plan-size estimate through
 """
 
 import ast
+import os
 from pathlib import Path
 
 PKG = Path(__file__).resolve().parents[1] / "vscode_parquet_visualizer_spark"
@@ -88,3 +89,38 @@ def test_every_size_gate_reads_plan_bytes():
             if isinstance(node, ast.Attribute) and node.attr == "sizeInBytes":
                 sites.append(path.relative_to(PKG).as_posix())
     assert sites == ["operators/scale.py"], sites
+
+
+def _is_checkout(d: str) -> bool:
+    return os.path.isfile(
+        os.path.join(d, "vscode_parquet_visualizer_spark", "__init__.py")
+    )
+
+
+def checkout_literals(roots: list[Path]) -> list[tuple[str, int, str]]:
+    """(file, line, literal) for every string literal under ``roots``
+    that is an absolute path at or inside a checkout of this project.
+    Such a literal pins the code to one checkout: run from a second
+    one, it imports or writes the first checkout's tree instead."""
+    out = []
+    for root in roots:
+        for path in sorted(root.rglob("*.py")):
+            for node in ast.walk(ast.parse(path.read_text())):
+                text = _literal(node)
+                if text is None or not text.startswith("/"):
+                    continue
+                d = os.path.normpath(text)
+                while d != os.path.dirname(d):
+                    if _is_checkout(d):
+                        rel = path.relative_to(PKG.parent).as_posix()
+                        out.append((rel, node.lineno, text))
+                        break
+                    d = os.path.dirname(d)
+    return out
+
+
+def test_no_literal_checkout_paths():
+    # tools locate the checkout from __file__ (tools/composite_fuzz.py)
+    assert _is_checkout(str(PKG.parent))
+    bad = checkout_literals([PKG, PKG.parent / "tools"])
+    assert not bad, f"hard-coded checkout paths: {bad}"

@@ -295,8 +295,12 @@ def _gen_num(rng, depth):
         op = rng.choice(["+", "-", "*", "//", "%"])
         return f"({a} {op} {b})"
     if pick < 0.6:
+        # fmod/fdiv floor toward -inf, so a negative divisor flips the
+        # remainder's sign; literal divisors keep zero out
+        d = rng.choice(["-2", "3", "-0.75", "2.5"])
         return rng.choice(
-            [f"abs({a})", f"floor({a})", f"ceil({a})", f"round({a}, 1)"]
+            [f"abs({a})", f"floor({a})", f"ceil({a})", f"round({a}, 1)",
+             f"fmod({a}, {d})", f"fdiv({a}, {d})"]
         )
     if pick < 0.7:
         return f"greatest({a}, {b})" if rng.random() < 0.5 else f"least({a}, {b})"
@@ -309,12 +313,16 @@ def _gen_num(rng, depth):
 
 def _gen_str(rng, depth):
     if depth <= 0 or rng.random() < 0.35:
-        s = rng.choice(_FUZZ_STRS)
+        s = rng.choice(_FUZZ_STRS + [None])
+        if s is None:  # concat skips NULL where || propagates it
+            return "CAST(NULL AS VARCHAR)"
         return "'" + s.replace("'", "''") + "'"
     pick = rng.random()
     a = _gen_str(rng, depth - 1)
     if pick < 0.4:
-        fn = rng.choice(["upper", "lower", "reverse", "trim"])
+        fn = rng.choice(["upper", "lower", "reverse", "trim", "trim2"])
+        if fn == "trim2":  # DuckDB's (string, chars) order
+            return f"trim({a}, '{rng.choice(['a', 'b', 'ab'])}')"
         return f"{fn}({a})"
     if pick < 0.55:
         return f"({a} || {_gen_str(rng, depth - 1)})"

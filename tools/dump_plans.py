@@ -20,7 +20,8 @@ import os
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 # streaming constructors execute a micro-batch at build time; their
 # "plan" is the batch-equivalent pipeline, audited separately
@@ -47,7 +48,7 @@ def main() -> None:
     spark = get_spark(app_name="dump_plans")
     spark.sparkContext.setLogLevel("ERROR")
 
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(REPO, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 
     selected = sorted(

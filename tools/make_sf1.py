@@ -24,6 +24,7 @@ import sys
 import duckdb
 
 SRC = "/root/testdata/sf0.1"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 # per-copy key offsets: copy i adds i*offset to the column, keeping each
 # copy's foreign keys pointing at its own copy's rows
@@ -49,7 +50,7 @@ def main() -> None:
     dst = (
         sys.argv[2]
         if len(sys.argv) > 2
-        else f"/root/repo/.bench/sf{copies // 10}"
+        else os.path.join(REPO, ".bench", f"sf{copies // 10}")
     )
     os.makedirs(dst, exist_ok=True)
     con = duckdb.connect()

@@ -23,7 +23,8 @@ import time
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from vscode_parquet_visualizer_spark import workload
 from vscode_parquet_visualizer_spark.session import get_spark

@@ -14,11 +14,13 @@ REST API.
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 import urllib.request
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from vscode_parquet_visualizer_spark.session import get_spark  # noqa: E402
 

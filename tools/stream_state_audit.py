@@ -27,7 +27,8 @@ import shutil
 import sys
 import tempfile
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from pyspark.sql import Window  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
@@ -40,7 +41,9 @@ from vscode_parquet_visualizer_spark.streaming.joins import (  # noqa: E402
 
 
 def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.bench/sf10"
+    sf_dir = (
+        sys.argv[1] if len(sys.argv) > 1 else os.path.join(REPO, ".bench", "sf10")
+    )
     chunks = int(sys.argv[2]) if len(sys.argv) > 2 else 20
     spark = get_spark(app_name="stream_state_audit")
     spark.sparkContext.setLogLevel("ERROR")
@@ -152,7 +155,7 @@ def main() -> None:
         for r in rows:
             print("   ", r, flush=True)
 
-    out = "/root/repo/STREAM_STATE_r15.json"
+    out = os.path.join(REPO, "STREAM_STATE_r15.json")
     with open(out, "w") as fh:
         json.dump(report, fh, indent=1)
     print(f"wrote {out}")

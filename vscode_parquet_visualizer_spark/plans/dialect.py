@@ -1721,12 +1721,12 @@ def rewrite_arithmetic_operators(sql: str) -> str:
         # integer-typed; any float/decimal operand makes it PLAIN
         # division (probed: -15.5 // 100 = -0.155, 7.0 // 2 = 3.5).
         # Float markers visible textually: a decimal-point literal, a
-        # DOUBLE/FLOAT cast, or ceil/floor/round (DOUBLE- or DECIMAL-
-        # typed in DuckDB for every input). String literals are
+        # DOUBLE/FLOAT cast, or ceil/floor/round/fmod/fdiv (DOUBLE- or
+        # DECIMAL-typed in DuckDB for every input). String literals are
         # placeholders at this pass, so the digit scan can't false-hit.
         floatish = (
             r"\d+\.\d+|\bDOUBLE\b|\bFLOAT\b|\bceil(?:ing)?\s*\("
-            r"|\bfloor\s*\(|\bround\s*\("
+            r"|\bfloor\s*\(|\bround\s*\(|\bf(?:mod|div)\s*\("
         )
         if re.search(floatish, a + " " + b, re.IGNORECASE):
             # DOUBLE division like DuckDB. The operand (not just the
@@ -3252,46 +3252,36 @@ def _rewrite_from_table_fn(sql: str, name: str, render) -> str:
         pos = close_idx + 1
 
 
-def _rewrite_calls(sql: str, name: str, xform, rescan: bool = False) -> str:
+def _rewrite_calls(sql: str, name: str, xform) -> str:
     """Rewrite every call ``name( <balanced args> )`` with
     ``xform(list_of_top_level_args) -> replacement_text`` (return None to
     leave a call unchanged). Word-boundary on the name; literal-protected
     text expected.
 
-    Scan discipline (expression fuzz, wave 49): a None/unchanged result
-    advances past the NAME only, so same-named calls nested in an
-    UNMATCHED outer call's arguments are still visited (the old
-    close-paren skip was the round-9 EXECUTE-args defect family). A
-    replacement advances past the replacement text by default — many
-    transforms WRAP their own call (``date_trunc(x)`` →
-    ``CAST(date_trunc(x) AS DATE)``) and rescanning would wrap forever.
-    ``rescan=True`` opts a NAME-ELIMINATING transform into rescanning
-    its replacement, so self-nested calls (``list_sort(list_sort(x))``,
-    whose inner call the default discipline leaves for dead) are
-    transformed too; callers must guarantee the name never survives in
-    the output."""
+    Innermost-first: a call's argument text is rewritten by this same
+    pass before ``xform`` sees the call, so a same-named call at any
+    nesting depth (``fmod(fmod(7, -2), 3)``, ``'x'::UUID::TEXT``) is
+    lowered exactly once. ``xform`` is applied to each call once and its
+    replacement is never rescanned — transforms may wrap or re-emit
+    their own name (``date_trunc(x)`` → ``CAST(date_trunc(x) AS
+    DATE)``) without looping. The scan always resumes past the call's
+    closing paren and recurses only into strictly shorter text."""
     pat = re.compile(rf"(?<![\w.]){name}\s*\(", re.IGNORECASE)
-    pos = 0
-    for _guard in range(100_000):
-        m = pat.search(sql, pos)
-        if m is None:
-            return sql
+    out, pos = [], 0
+    while (m := pat.search(sql, pos)) is not None:
         open_idx = m.end() - 1
         close_idx = _balanced_span(sql, open_idx)
         if close_idx == -1:
-            return sql
-        args = [a.strip() for a in _split_top_level(sql[open_idx + 1 : close_idx])]
-        repl = xform(args)
-        if repl is None or repl == sql[m.start() : close_idx + 1]:
-            # unchanged output counts as None — normalizing transforms
-            # (AS VARCHAR → AS STRING) reach a fixpoint, not a loop
-            pos = m.end()
-            continue
-        sql = sql[: m.start()] + repl + sql[close_idx + 1 :]
-        pos = m.start() if rescan else m.start() + len(repl)
-    raise RuntimeError(
-        f"_rewrite_calls({name!r}): non-convergent transform"
-    )
+            break
+        inner = _rewrite_calls(sql[open_idx + 1 : close_idx], name, xform)
+        repl = xform([a.strip() for a in _split_top_level(inner)])
+        if repl is None:
+            repl = f"{sql[m.start() : open_idx + 1]}{inner})"
+        out.append(sql[pos : m.start()])
+        out.append(repl)
+        pos = close_idx + 1
+    out.append(sql[pos:])
+    return "".join(out)
 
 
 _TIME_BUCKET_UNITS = {
@@ -3582,25 +3572,38 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
       ``slice(l, a, (b)-(a)+1)`` (start+length)
     - ``regexp_extract_all(s, re)`` → ``…(s, re, 0)`` (Spark defaults to
       capture group 1; DuckDB to the full match)
-    - ``date_diff(part, a, b)`` → ``timestampdiff(PART, a, b)``
+    - ``date_diff(part, a, b)`` → ``timestampdiff(PART,
+      date_trunc(part, a), date_trunc(part, b))`` (DuckDB counts unit
+      boundaries crossed)
     - ``date_add(a, INTERVAL …)`` → ``(a + INTERVAL …)`` (Spark's
       date_add is integer-days only)
-    - ``age(a, b)`` → ``(a - b)`` (interval difference)
+    - ``age(a, b)`` → the calendar decomposition (whole months, then
+      days borrowed from the earlier operand's month, then time) as a
+      day-time interval with 30-day months; ``date_part(p, age(a, b))``
+      reads field ``p`` of that decomposition directly
     - ``to_base(n, b)`` → ``conv(n, 10, b)``
     - ``format('{}-{}', …)`` (python-style braces) →
       ``format_string('%s-%s', …)``
     - ``string_agg(x, d ORDER BY k)`` → ``listagg(x, d) WITHIN GROUP
-      (ORDER BY k)``; plain ``string_agg`` → ``listagg``
+      (ORDER BY k)``; plain ``string_agg`` → ``listagg``; the separator
+      defaults to ``','`` (Spark's listagg defaults to ``''``)
     - ``quantile_disc(x, q)`` → ``percentile_disc(q) WITHIN GROUP
       (ORDER BY x)``
     - ``time_bucket(INTERVAL n unit, ts)`` → epoch-floor expression for
       second/minute/hour widths (and 1 day, where the origins align);
       wider buckets differ from DuckDB's 2000-01-01 origin → left
       unrewritten to fail loudly rather than shift silently.
+
+    Each name reaches ``_rewrite_calls`` at one site, whose transform
+    dispatches on the argument shape; only the two regexp family
+    passes (POSIX classes, flag folding) revisit names. Nested calls of
+    one name are lowered innermost-first by ``_rewrite_calls`` itself.
     """
     stash = stash if stash is not None else []
 
     def slice_x(a):
+        if len(a) == 4:
+            return slice_step_x(a)
         if len(a) != 3:
             return None
         # DuckDB array_slice also slices STRINGS — literal sources get
@@ -3609,19 +3612,50 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             return f"substring({a[0]}, {a[1]}, ({a[2]})-({a[1]})+1)"
         return f"slice({a[0]}, {a[1]}, ({a[2]})-({a[1]})+1)"
 
-    sql = _rewrite_calls(sql, "array_slice", slice_x)
-    sql = _rewrite_calls(sql, "list_slice", slice_x)
+    # 4-arg stepped form (1-based inclusive, positive literal step):
+    # positions a, a+c, … ≤ min(b, len)
+    def slice_step_x(a):
+        if not (re.fullmatch(r"\d+", a[1]) and re.fullmatch(r"\d+", a[2])
+                and re.fullmatch(r"\d+", a[3])):
+            return None
+        lo, hi, st = int(a[1]), int(a[2]), int(a[3])
+        if lo < 1 or st < 1:
+            return None
+        if hi < lo:
+            return "array()"
+        l = a[0]
+        return (
+            f"(CASE WHEN size({l}) >= {lo} THEN "
+            f"transform(sequence({lo}, least({hi}, size({l})), {st}), "
+            f"__ss -> try_element_at({l}, __ss)) ELSE array() END)"
+        )
+
+    for _sl in ("array_slice", "list_slice"):
+        sql = _rewrite_calls(sql, _sl, slice_x)
     sql = _rewrite_calls(
         sql,
         "regexp_extract_all",
         lambda a: f"regexp_extract_all({a[0]}, {a[1]}, 0)" if len(a) == 2 else None,
     )
     # same default-group divergence for the scalar form
-    sql = _rewrite_calls(
-        sql,
-        "regexp_extract",
-        lambda a: f"regexp_extract({a[0]}, {a[1]}, 0)" if len(a) == 2 else None,
-    )
+    def regexp_extract_x(a):
+        if len(a) == 2:
+            return f"regexp_extract({a[0]}, {a[1]}, 0)"
+        # regexp_extract(s, p, ['name', ...]) → STRUCT of the capture
+        # groups, keyed by the given names (DuckDB's named-groups form)
+        if len(a) != 3 or not a[2].startswith("array("):
+            return None
+        ids = re.findall(r"\x00LIT(\d+)\x00", a[2])
+        if not ids:
+            return None
+        fields = []
+        for i, lid in enumerate(ids, 1):
+            name = _lit_text(stash, lid)
+            ph = _stash_add(stash, "'" + name.replace("'", "''") + "'")
+            fields.append(f"{ph}, regexp_extract({a[0]}, {a[1]}, {i})")
+        return f"named_struct({', '.join(fields)})"
+
+    sql = _rewrite_calls(sql, "regexp_extract", regexp_extract_x)
 
     # POSIX character classes ([[:alpha:]] …) are RE2-only — translate
     # them inside LITERAL patterns of the regexp functions (Java regex
@@ -3873,26 +3907,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             return None
         return _age_part_expr(part, args[0].strip(), args[1].strip())
 
-    sql = _rewrite_calls(sql, "date_part", _age_datepart_x)
-    sql = _rewrite_calls(sql, "datepart", _age_datepart_x)
-    # bare age(a, b) (wave 46 — was the plain (a - b) timestamp diff,
-    # a silently different value whenever the span crosses uneven month
-    # lengths): the same calendar decomposition as date_part(age(…)),
-    # flattened to a day-time interval with 30-day months — the exact
-    # convention DuckDB's Python client uses to render its mixed
-    # INTERVAL as a timedelta, so client-observed values agree. The
-    # remaining divergence is rendering-side only (DuckDB SQL text says
-    # '1 year 1 month 17 days'; Spark has no mixed-unit interval type).
-    def _age_x(a):
-        if len(a) != 2:
-            return None
-        sgn, months, days, tus = _age_fields(a[0], a[1])
-        return (
-            f"(make_dt_interval({months} * 30 + {days}, 0, 0, "
-            f"{tus} / CAST(1e6 AS DOUBLE)) * {sgn})"
-        )
-
-    sql = _rewrite_calls(sql, "age", _age_x)
     sql = _rewrite_calls(
         sql,
         "to_base",
@@ -3924,10 +3938,8 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
     # left/right with NEGATIVE n: all-but-|n|-from-the-other-end
     # (Spark returns ''). Non-negative literal counts stay untouched.
     def _lr(fn):
-        # fully substring-based: the THEN branch must not re-emit the
-        # function's own name (convergence contract of _rewrite_calls'
-        # wave-49 rescan; probed: substring(s, -(n), n) ≡ right(s, n)
-        # for n ≥ 0 including 0 and overshoot)
+        # both branches are substring() (probed: substring(s, -(n), n)
+        # ≡ right(s, n) for n ≥ 0 including 0 and overshoot)
         def x(a):
             if len(a) != 2 or re.fullmatch(r"\d+", a[1].strip()):
                 return None
@@ -3943,8 +3955,8 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             )
         return x
 
-    sql = _rewrite_calls(sql, "left", _lr("left"), rescan=True)
-    sql = _rewrite_calls(sql, "right", _lr("right"), rescan=True)
+    sql = _rewrite_calls(sql, "left", _lr("left"))
+    sql = _rewrite_calls(sql, "right", _lr("right"))
     # fdiv = floor division, fmod = FLOORED modulo, both DOUBLE (probed:
     # fdiv(-7,2) = -4.0, fmod(-7,2) = 1.0 — not C fmod)
     sql = _rewrite_calls(
@@ -4061,9 +4073,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             for pt in parts
         )
         return f"named_struct({fields})"
-
-    sql = _rewrite_calls(sql, "datepart", datepart_list_x)
-    sql = _rewrite_calls(sql, "date_part", datepart_list_x)
 
     # --- round-7 hunt batch 12 ---
     # string predicates: DuckDB spellings -> Spark's
@@ -4452,9 +4461,9 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
     # In-call ORDER BY on the quantile family is a no-op (the statistic
     # is over the value multiset; probed batch 40: quantile_cont(x, 0.5
     # ORDER BY x) ≡ quantile_cont(x, 0.5)) — strip it so the shape
-    # rewrites below (and the quantile_cont→percentile rename) see the
-    # plain form instead of failing to parse.
-    def _strip_agg_order(fn_name):
+    # rewrites (``then``, and the quantile_cont→percentile rename) see
+    # the plain form instead of failing to parse.
+    def _strip_agg_order(fn_name, then=lambda a: None):
         def x(a):
             joined = ", ".join(a)
             m = next(
@@ -4468,13 +4477,14 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
                 None,
             )
             if m is None:
-                return None
-            return f"{fn_name}({joined[: m.start()].strip().rstrip(',')})"
+                return then(a)
+            plain = joined[: m.start()].strip().rstrip(",")
+            out = then([p.strip() for p in _split_top_level(plain)])
+            return f"{fn_name}({plain})" if out is None else out
 
         return x
 
-    for _qfn in ("quantile_cont", "quantile_disc", "quantile", "median",
-                 "mad", "mode"):
+    for _qfn in ("quantile_cont", "median", "mode"):
         sql = _rewrite_calls(sql, _qfn, _strip_agg_order(_qfn))
 
     def quantile_disc_x(a):
@@ -4492,7 +4502,7 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         return f"percentile_disc({q}) WITHIN GROUP (ORDER BY {a[0]})"
 
     for _qd in ("quantile_disc", "quantile"):  # quantile = disc alias
-        sql = _rewrite_calls(sql, _qd, quantile_disc_x)
+        sql = _rewrite_calls(sql, _qd, _strip_agg_order(_qd, quantile_disc_x))
 
     def time_bucket_x(a):
         if len(a) not in (2, 3):
@@ -4753,26 +4763,46 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             return f"(unix_micros(CAST({x} AS TIMESTAMP)) / CAST(1e6 AS DOUBLE))"
         return None
 
+    # date_part(part, x) by argument shape: a part LIST, a part of
+    # age(…), or a single part Spark lacks or bases differently. After
+    # the weekday/dayofweek/isodow passes, whose DuckDB bases must not
+    # re-apply to the Spark spellings _part_expr emits; before the age
+    # pass, whose lowering would hide the age(…) shape.
     def datepart_x(a):
         if len(a) != 2:
             return None
+        out = datepart_list_x(a) or _age_datepart_x(a)
+        if out is not None:
+            return out
         m = re.fullmatch(r"\x00LIT(\d+)\x00", a[0])
         part = _lit_text(stash, m.group(1)).lower() if m else None
         if part is None:
             return None
         return _part_expr(part, a[1])  # None: parts agree, leave native
 
-    sql = _rewrite_calls(sql, "datepart", datepart_x)
-    sql = _rewrite_calls(sql, "date_part", datepart_x)
+    for _dp in ("datepart", "date_part"):
+        sql = _rewrite_calls(sql, _dp, datepart_x)
 
-    # fmod follows the divisor's sign in DuckDB (floored mod) — pmod
-    # matches for the positive divisors in practical use; xor()/to_hex
-    # are operator/name maps
-    sql = _rewrite_calls(
-        sql,
-        "fmod",
-        lambda a: f"pmod({a[0]}, {a[1]})" if len(a) == 2 else None,
-    )
+    # bare age(a, b) (wave 46 — was the plain (a - b) timestamp diff,
+    # a silently different value whenever the span crosses uneven month
+    # lengths): the same calendar decomposition as date_part(age(…)),
+    # flattened to a day-time interval with 30-day months — the exact
+    # convention DuckDB's Python client uses to render its mixed
+    # INTERVAL as a timedelta, so client-observed values agree. The
+    # remaining divergence is rendering-side only (DuckDB SQL text says
+    # '1 year 1 month 17 days'; Spark has no mixed-unit interval type).
+    def _age_x(a):
+        if len(a) != 2:
+            return None
+        sgn, months, days, tus = _age_fields(a[0], a[1])
+        return (
+            f"(make_dt_interval({months} * 30 + {days}, 0, 0, "
+            f"{tus} / CAST(1e6 AS DOUBLE)) * {sgn})"
+        )
+
+    sql = _rewrite_calls(sql, "age", _age_x)
+
+    # xor()/to_hex are operator/name maps
     sql = _rewrite_calls(
         sql,
         "xor",
@@ -4954,29 +4984,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
                 else f"(abs({a[0]}) = double('Infinity'))"
             )
             if len(a) == 1
-            else None
-        ),
-    )
-
-    # fdiv/fmod: DuckDB's FLOOR-division pair (fdiv(-7.5,2) = -4,
-    # fmod(-7.5,2) = 0.5 — remainder takes the divisor's sign), both
-    # DOUBLE. Spark's `%` truncates, so spell the floor identity out.
-    sql = _rewrite_calls(
-        sql,
-        "fdiv",
-        lambda a: (
-            f"CAST(floor(({a[0]}) / ({a[1]})) AS DOUBLE)"
-            if len(a) == 2
-            else None
-        ),
-    )
-    sql = _rewrite_calls(
-        sql,
-        "fmod",
-        lambda a: (
-            f"CAST(({a[0]}) - floor(({a[0]}) / ({a[1]})) * ({a[1]})"
-            f" AS DOUBLE)"
-            if len(a) == 2
             else None
         ),
     )
@@ -5424,8 +5431,8 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             return f"substr({a[0]}, 1)"
         return None
 
-    sql = _rewrite_calls(sql, "substr", substr_zero_x, rescan=True)
-    sql = _rewrite_calls(sql, "substring", substr_zero_x, rescan=True)
+    sql = _rewrite_calls(sql, "substr", substr_zero_x)
+    sql = _rewrite_calls(sql, "substring", substr_zero_x)
 
     # monthname/dayname return FULL names in DuckDB; Spark 4's
     # same-named builtins return abbreviations
@@ -5550,7 +5557,7 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             return f"array_sort({a[0]})"  # asc + nulls last: the default
         return _cmp_sort(a[0], desc, nulls_first)
 
-    sql = _rewrite_calls(sql, "list_sort", list_sort_x, rescan=True)
+    sql = _rewrite_calls(sql, "list_sort", list_sort_x)
     for _rs in ("list_reverse_sort", "array_reverse_sort"):
         sql = _rewrite_calls(
             sql,
@@ -5706,9 +5713,14 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         ) if len(a) == 1 else None,
     )
 
-    # CAST('90 minutes' AS INTERVAL) with a literal operand → a typed
-    # interval literal (Spark's CalendarIntervalType can't be collected;
-    # a day-time/year-month literal can)
+    # CAST of a string literal:
+    # - '90 minutes' AS INTERVAL → a typed interval literal (Spark's
+    #   CalendarIntervalType can't be collected; a day-time/year-month
+    #   literal can);
+    # - '<json list>' AS ARRAY<…>: DuckDB parses list syntax out of
+    #   strings; Spark's CAST rejects string→array — route through
+    #   from_json (malformed text yields NULL instead of an error:
+    #   documented softening).
     _IVL_UNITS = {
         "year": "YEAR", "years": "YEAR", "month": "MONTH",
         "months": "MONTH", "day": "DAY", "days": "DAY", "hour": "HOUR",
@@ -5717,9 +5729,19 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         "sec": "SECOND",
     }
 
-    def interval_cast_x(a):
+    def literal_cast_x(a):
         if len(a) != 1:
             return None
+        m = re.fullmatch(
+            r"(\x00LIT\d+\x00)\s+AS\s+(ARRAY\s*<.+>)\s*",
+            a[0],
+            re.IGNORECASE | re.DOTALL,
+        )
+        if m is not None:
+            schema = _stash_add(
+                stash, "'" + m.group(2).replace("'", "''") + "'"
+            )
+            return f"from_json({m.group(1)}, {schema})"
         m = re.fullmatch(
             r"(\x00LIT(\d+)\x00)\s+AS\s+INTERVAL", a[0].strip(),
             re.IGNORECASE,
@@ -5734,7 +5756,7 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         joined = " + ".join(terms)
         return f"({joined})" if len(terms) > 1 else joined
 
-    sql = _rewrite_calls(sql, "CAST", interval_cast_x)
+    sql = _rewrite_calls(sql, "CAST", literal_cast_x)
 
     # json_extract / json_extract_path: the '->' semantics (JSON out —
     # documented string-quoting divergence shared with the arrow
@@ -6501,25 +6523,8 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         )
         return f"try_element_at(transform(array({src}), __s -> {body}), 1)"
 
-    sql = _rewrite_calls(sql, "mad", mad_x)
+    sql = _rewrite_calls(sql, "mad", _strip_agg_order("mad", mad_x))
     sql = _rewrite_calls(sql, "list_median", list_median_x)
-
-    def regexp_extract_named_x(a):
-        # regexp_extract(s, p, ['name', ...]) → STRUCT of the capture
-        # groups, keyed by the given names (DuckDB's named-groups form)
-        if len(a) != 3 or not a[2].startswith("array("):
-            return None
-        ids = re.findall(r"\x00LIT(\d+)\x00", a[2])
-        if not ids:
-            return None
-        fields = []
-        for i, lid in enumerate(ids, 1):
-            name = _lit_text(stash, lid)
-            ph = _stash_add(stash, "'" + name.replace("'", "''") + "'")
-            fields.append(f"{ph}, regexp_extract({a[0]}, {a[1]}, {i})")
-        return f"named_struct({', '.join(fields)})"
-
-    sql = _rewrite_calls(sql, "regexp_extract", regexp_extract_named_x)
 
     # ---- round-7 hunt batch 13 ------------------------------------
     # make_timestamp(µs) single-arg form (6-arg form is Spark-native)
@@ -6601,9 +6606,10 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             f"array_distinct(filter({a[0]}, __ld -> __ld IS NOT NULL))"
         ) if len(a) == 1 else None,
     )
-    # list_reduce has no init arg: seed with the first element. DuckDB
-    # errors on an empty list; this lowering yields NULL instead
-    # (documented softening). get() is 0-based and rename-proof.
+    # reduce (DuckDB's alias of list_reduce) has no init arg: seed with
+    # the first element. DuckDB errors on an empty list; this lowering
+    # yields NULL instead (documented softening). get() is 0-based and
+    # rename-proof. Spark's own 3-arg reduce passes through.
     def list_reduce_x(a):
         if len(a) != 2:
             return None
@@ -6613,56 +6619,40 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             f"get({lst}, 0), {lam})"
         )
 
-    sql = _rewrite_calls(sql, "list_reduce", list_reduce_x)
-    sql = _rewrite_calls(
-        sql, "reduce",
-        lambda a: list_reduce_x(a) if len(a) == 2 else None,
-    )
+    sql = _rewrite_calls(sql, "reduce", list_reduce_x)
 
     # any_value with an ORDER BY modifier → min_by/max_by (single sort
-    # key; first/last get the same lowering earlier in this function)
-    def ordered_first_x(invert):
-        def x(a):
-            if len(a) != 1:
-                return None
-            m = re.match(
-                r"(?s)(.*?)\s+ORDER\s+BY\s+(.+?)\s*(ASC|DESC)?\s*$",
-                a[0],
-                re.IGNORECASE,
-            )
-            if m is None:
-                return None
-            val, key, direction = m.group(1), m.group(2), m.group(3)
-            if re.search(r"\bNULLS\b|,", key, re.IGNORECASE):
-                return None  # multi-key / NULLS order: stay unresolved
-            desc = (direction or "ASC").upper() == "DESC"
-            if invert:
-                desc = not desc
-            fn = "max_by" if desc else "min_by"
-            # DuckDB's any_value(x ORDER BY y) returns the first
-            # NON-NULL x in y order; min_by/max_by would return a NULL
-            # x sitting at the extreme key. Null the key for NULL
-            # values so those rows can never win (min_by ignores
-            # NULL-key rows).
-            return (
-                f"{fn}({val}, CASE WHEN ({val}) IS NULL "
-                f"THEN NULL ELSE ({key}) END)"
-            )
-
-        return x
-
-    sql = _rewrite_calls(sql, "any_value", ordered_first_x(False))
-
-    # plain any_value(x) (wave 47): DuckDB skips NULLs (first NON-NULL
+    # key; first/last get the same lowering earlier in this function).
+    # Plain any_value(x) (wave 47): DuckDB skips NULLs (first NON-NULL
     # value); Spark's default any_value respects them — any_value of
     # (NULL, 3, 4) silently returned NULL. Spark's 2-arg ignoreNulls
     # form matches.
-    sql = _rewrite_calls(
-        sql, "any_value",
-        lambda a: f"any_value({a[0]}, true)"
-        if len(a) == 1 and not re.search(r"\bORDER\s+BY\b", a[0], re.IGNORECASE)
-        else None,
-    )
+    def any_value_x(a):
+        if len(a) != 1:
+            return None
+        if not re.search(r"\bORDER\s+BY\b", a[0], re.IGNORECASE):
+            return f"any_value({a[0]}, true)"
+        m = re.match(
+            r"(?s)(.*?)\s+ORDER\s+BY\s+(.+?)\s*(ASC|DESC)?\s*$",
+            a[0],
+            re.IGNORECASE,
+        )
+        if m is None:
+            return None
+        val, key, direction = m.group(1), m.group(2), m.group(3)
+        if re.search(r"\bNULLS\b|,", key, re.IGNORECASE):
+            return None  # multi-key / NULLS order: stay unresolved
+        fn = "max_by" if (direction or "ASC").upper() == "DESC" else "min_by"
+        # DuckDB's any_value(x ORDER BY y) returns the first NON-NULL x
+        # in y order; min_by/max_by would return a NULL x sitting at the
+        # extreme key. Null the key for NULL values so those rows can
+        # never win (min_by ignores NULL-key rows).
+        return (
+            f"{fn}({val}, CASE WHEN ({val}) IS NULL "
+            f"THEN NULL ELSE ({key}) END)"
+        )
+
+    sql = _rewrite_calls(sql, "any_value", any_value_x)
 
     # struct_insert: append fields to a struct. Literal structs merge
     # textually; column references splat via struct(col.*, …)
@@ -6729,46 +6719,34 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
 
         return x
 
-    for _fn in ("regexp_matches", "regexp_like"):
-        sql = _rewrite_calls(sql, _fn, regexp_flags_x(_fn, 3))
-    sql = _rewrite_calls(
-        sql, "regexp_extract", regexp_flags_x("regexp_extract", 4)
-    )
-    sql = _rewrite_calls(
-        sql, "regexp_extract_all", regexp_flags_x("regexp_extract_all", 4)
-    )
+    for _fn, _nargs in (
+        ("regexp_matches", 3), ("regexp_like", 3),
+        ("regexp_extract", 4), ("regexp_extract_all", 4),
+    ):
+        sql = _rewrite_calls(sql, _fn, regexp_flags_x(_fn, _nargs))
 
     # unnest(STRUCT) emits one column per field — Spark's inline over a
-    # one-element array does exactly that
-    sql = _rewrite_calls(
-        sql, "unnest",
-        lambda a: (
-            f"inline(array({a[0]}))"
-            if len(a) == 1
-            and re.match(r"named_struct\s*\(", a[0].strip(), re.IGNORECASE)
-            else None
-        ),
-    )
+    # one-element array does exactly that. unnest(x, recursive := true):
+    # DuckDB fully flattens nested lists; one flatten level covers the
+    # list<list<T>> case (deeper nesting or struct spreading stays loud)
+    def unnest_x(a):
+        if len(a) == 1 and re.match(
+            r"named_struct\s*\(", a[0].strip(), re.IGNORECASE
+        ):
+            return f"inline(array({a[0]}))"
+        if len(a) == 2 and re.fullmatch(
+            r"recursive\s*:=\s*true", a[1].strip(), re.IGNORECASE
+        ):
+            return f"explode(flatten({a[0]}))"
+        return None
+
+    sql = _rewrite_calls(sql, "unnest", unnest_x)
     # generate_subscripts(arr, 1): one row per 1-based index
     sql = _rewrite_calls(
         sql, "generate_subscripts",
         lambda a: (
             f"explode(sequence(1, size({a[0]})))"
             if len(a) == 2 and a[1].strip() == "1"
-            else None
-        ),
-    )
-    # unnest(x, recursive := true): DuckDB fully flattens nested lists;
-    # one flatten level covers the list<list<T>> case (deeper nesting
-    # or struct spreading stays loud)
-    sql = _rewrite_calls(
-        sql, "unnest",
-        lambda a: (
-            f"explode(flatten({a[0]}))"
-            if len(a) == 2
-            and re.fullmatch(
-                r"recursive\s*:=\s*true", a[1].strip(), re.IGNORECASE
-            )
             else None
         ),
     )
@@ -6818,49 +6796,7 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
         lambda a: f"lpad({a[0]}, {a[1]}, '0')" if len(a) == 2 else None,
     )
 
-    # CAST('<json list>' AS ARRAY<…>): DuckDB parses list syntax out of
-    # strings; Spark's CAST rejects string→array — route through
-    # from_json (malformed text yields NULL instead of an error:
-    # documented softening). Literal sources only.
-    def cast_str_array_x(a):
-        if len(a) != 1:
-            return None
-        m = re.fullmatch(
-            r"(\x00LIT\d+\x00)\s+AS\s+(ARRAY\s*<.+>)\s*",
-            a[0],
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m is None:
-            return None
-        schema = _stash_add(
-            stash, "'" + m.group(2).replace("'", "''") + "'"
-        )
-        return f"from_json({m.group(1)}, {schema})"
 
-    sql = _rewrite_calls(sql, "CAST", cast_str_array_x)
-
-    # list_slice/array_slice 4-arg stepped form (1-based inclusive,
-    # positive literal step): positions a, a+c, … ≤ min(b, len)
-    def slice_step_x(a):
-        if len(a) != 4:
-            return None
-        if not (re.fullmatch(r"\d+", a[1]) and re.fullmatch(r"\d+", a[2])
-                and re.fullmatch(r"\d+", a[3])):
-            return None
-        lo, hi, st = int(a[1]), int(a[2]), int(a[3])
-        if lo < 1 or st < 1:
-            return None
-        if hi < lo:
-            return "array()"
-        l = a[0]
-        return (
-            f"(CASE WHEN size({l}) >= {lo} THEN "
-            f"transform(sequence({lo}, least({hi}, size({l})), {st}), "
-            f"__ss -> try_element_at({l}, __ss)) ELSE array() END)"
-        )
-
-    sql = _rewrite_calls(sql, "list_slice", slice_step_x)
-    sql = _rewrite_calls(sql, "array_slice", slice_step_x)
     return sql
 
 
@@ -8279,7 +8215,8 @@ def transpile(
 ) -> str:
     """Memoizing front door for :func:`_transpile_uncached` (r14
     optimization round). The rewrite chain is a PURE function of its
-    arguments (245 regex passes over module-level constants, no session
+    arguments (about 70 top-level text passes, 186 call rewrites among
+    them, over module-level constants, no session
     state — ENUM/DDL-dependent rewrites live in ddl_sql, schema
     dependence arrives explicitly via columns/array_columns/…), and a
     big query text costs 65-85 ms per call — paid on EVERY run of a
@@ -8414,14 +8351,8 @@ def _transpile_uncached(
             return f"lower({fn}({m.group(1)} AS STRING))"
         return x
 
-    # fixpoint: a UUID cast nested inside another cast ('x'::UUID::TEXT)
-    # is skipped by _rewrite_calls' outer-first scan on the first pass
-    while re.search(r"\bAS\s+UUID\b", sql, re.IGNORECASE):
-        prev = sql
-        sql = _rewrite_calls(sql, "cast", _uuid_cast("CAST"))
-        sql = _rewrite_calls(sql, "try_cast", _uuid_cast("TRY_CAST"))
-        if sql == prev:
-            break
+    sql = _rewrite_calls(sql, "cast", _uuid_cast("CAST"))
+    sql = _rewrite_calls(sql, "try_cast", _uuid_cast("TRY_CAST"))
     sql = rewrite_string_int_cast_literals(sql, stash)
     sql = rewrite_special_date_literals(sql, stash)
     sql = rewrite_cast_type_names(sql)
