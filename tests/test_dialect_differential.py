@@ -3191,6 +3191,19 @@ CORPUS_R10_BATCH48 = [
     """SELECT list_reduce([list_reduce([list_reduce([1, 2],
               (x, y) -> x + y), 3], (x, y) -> x * y), 4],
               (x, y) -> x - y) AS r""",
+    # list_reduce and reduce share one lowering: NULL elements reach the
+    # lambda, the fold is seeded with the first element, row-dependent
+    # lists come from a table
+    """SELECT r_regionkey,
+              list_reduce([r_regionkey, NULL, 2],
+                          (x, y) -> coalesce(x, 10) * coalesce(y, 3)) AS a,
+              list_reduce(split(r_name, 'A'), (x, y) -> y || '|' || x) AS b
+       FROM region""",
+    """SELECT r_regionkey,
+              reduce([r_regionkey, r_regionkey + 1, NULL],
+                     (x, y) -> coalesce(y, x) - x) AS a,
+              reduce(['x', r_name, NULL], (x, y) -> concat(x, lower(y))) AS b
+       FROM region""",
 ]
 
 

@@ -1,6 +1,8 @@
 """Engine lifecycle tests mirroring the reference's observable contract
 (SURVEY.md §3: open → default query → page → sort → search → export)."""
 
+import itertools
+
 import pytest
 from pyspark import StorageLevel
 from pyspark.sql import functions as F
@@ -11,6 +13,7 @@ from vscode_parquet_visualizer_spark.engine import (
     ResultSet,
     _with_row_id,
 )
+from vscode_parquet_visualizer_spark.functions.serialization import serialize_rows
 from vscode_parquet_visualizer_spark.operators import search as search_ops
 from vscode_parquet_visualizer_spark.operators.pagination import ROW_ID
 
@@ -233,6 +236,148 @@ def test_concurrent_page_reads_match_serial_reads(spark):
             assert not any(t.is_alive() for t in threads)
             assert errors == []
             assert got == [want, want]
+    finally:
+        rs.unpersist()
+
+
+_probe_ids = itertools.count()
+
+
+def _jobs(spark, fn):
+    """``(fn(), number of Spark jobs it fired)``, counted by job group."""
+    sc = spark.sparkContext
+    group = f"local_view_probe_{next(_probe_ids)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _last_plan(spark) -> str:
+    executions = spark._jsparkSession.sharedState().statusStore().executionsList()
+    return executions.last().physicalPlanDescription()
+
+
+def test_small_view_pages_and_csv_fire_no_job_once_copied(dataset, spark, tmp_path):
+    rs = dataset.query("SELECT * FROM data")  # 1500 orders: under the gate
+    assert rs._base_small
+    rs.sort("o_totalprice", "desc")
+    first, jobs = _jobs(spark, lambda: rs.page(1, 10))
+    assert jobs == 1 and len(rs._local) == rs.current_count == 1500
+    prices = [r["o_totalprice"] for r in first]
+    assert prices == sorted(prices, reverse=True)
+    deep, jobs = _jobs(spark, lambda: rs.page(150, 10))
+    assert jobs == 0 and len(deep) == 10
+    _, jobs = _jobs(spark, lambda: rs.export(str(tmp_path / "o.csv"), "csv"))
+    assert jobs == 0
+    with open(tmp_path / "o.csv") as fh:
+        assert sum(1 for _ in fh) == 1501
+    with pytest.raises(IndexError):
+        rs.page(151, 10)
+
+
+@pytest.mark.parametrize("fmt", ["json", "ndjson", "parquet", "excel"])
+def test_small_view_export_is_one_job(dataset, spark, tmp_path, fmt):
+    rs = dataset.query("SELECT * FROM data")
+    rs.sort("o_orderdate", "asc")
+    rs.search("URGENT")
+    assert rs._filtered_small
+    _, jobs = _jobs(spark, lambda: rs.export(str(tmp_path / f"o.{fmt}"), fmt))
+    assert jobs == 1
+    assert rs._local is None  # only pages and CSV read the copy
+
+
+def test_view_above_the_gate_builds_no_copy(dataset, spark, monkeypatch, tmp_path):
+    import vscode_parquet_visualizer_spark.engine as engine_mod
+
+    monkeypatch.setattr(engine_mod, "_LOCAL_VIEW_MAX_BYTES", -1)
+    rs = dataset.query("SELECT * FROM data")
+    assert not rs._base_small
+    rows, jobs = _jobs(spark, lambda: rs.page(3, 10))
+    assert jobs == 1 and len(rows) == 10 and rs._local is None
+    plan = _last_plan(spark)
+    assert "(__row_id#" in plan and "Coalesce" not in plan  # the position index
+    rs.sort("o_totalprice", "desc")
+    rs.page(2, 10)
+    plan = _last_plan(spark)
+    assert "TakeOrderedAndProject" in plan and "Coalesce" not in plan
+    rs.export(str(tmp_path / "o.parquet"), "parquet")
+    plan = _last_plan(spark)
+    assert "rangepartitioning" in plan and "Coalesce" not in plan  # a global sort
+    assert rs._local is None
+
+
+def test_state_changes_drop_the_driver_copy(dataset, spark):
+    rs = dataset.query("SELECT * FROM data")
+    for change in (
+        lambda: rs.sort("o_custkey", "asc"),
+        lambda: rs.search("URGENT"),
+        lambda: rs.search("1996"),
+        lambda: rs.search(""),
+        lambda: rs.sort(None),
+    ):
+        rs.page(1, 10)
+        assert rs._local is not None
+        change()
+        assert rs._local is None
+        rows, jobs = _jobs(spark, lambda: rs.page(1, 10))
+        assert jobs == 1 and len(rs._local) == rs.current_count
+        assert rows == serialize_rows(rs.page_df(1, 10).collect(), settings=rs.settings)
+    rs.unpersist(keep_base=True)
+    assert rs._local is None
+
+
+def test_sorts_racing_page_reads_keep_one_order(spark):
+    # the driver copy is built and dropped under one lock: while two
+    # threads flip the sort, six read pages (more threads than cores, a
+    # short switch interval); each page comes from one whole copy, and
+    # once all stop, the copy left behind is in the last sort's order
+    import sys
+    import threading
+
+    frame = spark.range(0, 300, 1, 3).select("id", (F.col("id") % 7).alias("k"))
+    rs = ResultSet(frame, name="racing_sorts")
+    try:
+        assert rs._base_small
+        want = {}
+        for way in ("asc", "desc"):
+            rs.sort("k", way)
+            want[way] = {p: rs.page(p, 40) for p in range(1, 9)}
+        errors = []
+
+        def read(k):
+            try:
+                for i in range(12):
+                    p = 1 + (k + i) % 8
+                    if rs.page(p, 40) not in (want["asc"][p], want["desc"][p]):
+                        errors.append(f"page {p} mixes two orders")
+            except Exception as e:  # surfaced by the assert below
+                errors.append(e)
+
+        def flip(k):
+            try:
+                for i in range(12):
+                    rs.sort("k", ("asc", "desc")[(k + i) % 2])
+            except Exception as e:
+                errors.append(e)
+
+        threads = [threading.Thread(target=read, args=(k,)) for k in range(6)]
+        threads += [threading.Thread(target=flip, args=(k,)) for k in range(2)]
+        interval = sys.getswitchinterval()
+        sys.setswitchinterval(1e-5)
+        try:
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=300)
+        finally:
+            sys.setswitchinterval(interval)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert rs.page(1, 40) == want[rs._sort_dir][1]
     finally:
         rs.unpersist()
 

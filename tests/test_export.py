@@ -168,3 +168,28 @@ def test_excel_via_engine_dispatch(spark, sf_dir, tmp_path):
     p = str(tmp_path / "region.xlsx")
     export(df, p, "excel")
     assert zipfile.is_zipfile(p)
+
+
+@pytest.mark.parametrize("gate", [-1, 1 << 62], ids=["spark", "local"])
+def test_parquet_export_of_null_struct_rows(spark, tmp_path, monkeypatch, gate):
+    # a NULL struct row (top level, as an array element, as a map value)
+    # over non-nullable fields: both ResultSet routes reach export_parquet
+    import pyarrow.parquet as pq
+
+    from vscode_parquet_visualizer_spark import engine
+
+    monkeypatch.setattr(engine, "_LOCAL_VIEW_MAX_BYTES", gate)
+    row = "CASE WHEN i = 2 THEN NULL ELSE named_struct('{0}', i) END"
+    rs = engine.ResultSet(spark.sql(
+        f"SELECT i, {row.format('x')} AS s, array({row.format('y')}) AS a, "
+        f"map('k', {row.format('z')}) AS m FROM range(1, 3) AS r(i)"
+    ), name="null_struct_rows")
+    p = str(tmp_path / "out.parquet")
+    try:
+        rs.export(p, "parquet")
+    finally:
+        rs.unpersist()
+    assert pq.read_table(p).to_pylist() == [
+        {"i": 1, "s": {"x": 1}, "a": [{"y": 1}], "m": [("k", {"z": 1})]},
+        {"i": 2, "s": None, "a": [None], "m": [("k", None)]},
+    ]

@@ -882,11 +882,13 @@ def test_indexed_data_pages_match_offset_pages(spark, sizes, size, fmt, data):
 
 
 # Result-cache differential: everything a user reads from a ResultSet —
-# page 1, a deep unsorted page, a sorted page, a search and a CSV export —
-# equals the same read computed from the uncached frame, on every atomic
-# type plus nested and binary columns, NULL, NaN, -0.0, unicode, and 1-8
-# partitions with empty ones. Rows are compared by ``repr`` so NaN and the
-# sign of zero count.
+# page 1, a deep and the last unsorted page, sorted pages in both
+# directions, a search and the five exports — equals the same read
+# computed from the uncached frame, and is the same whether the view is
+# served from the driver copy or from Spark (the small-view gate pinned
+# both ways), on every atomic type plus nested and binary columns, NULL,
+# NaN, -0.0, unicode, and 1-8 partitions with empty ones. Rows are
+# compared by ``repr`` so NaN and the sign of zero count.
 
 
 def _nullable(values):
@@ -919,10 +921,29 @@ _CACHE_COLUMNS = [
 _CACHE_SCHEMA = ", ".join(f"{name} {ddl}" for name, ddl, _ in _CACHE_COLUMNS)
 _CACHE_ROWS = st.lists(st.tuples(*[_nullable(v) for _, _, v in _CACHE_COLUMNS]), max_size=40)
 _SORTABLE = [name for name, ddl, _ in _CACHE_COLUMNS if not ddl.startswith("map")]
+_EXPORTS = {"csv": "csv", "json": "json", "ndjson": "ndjson", "parquet": "parquet", "excel": "xlsx"}
 
 
 def _read_csv(path):
     with open(path, encoding="utf-8") as fh:
+        return fh.read()
+
+
+def _read_export(path, fmt):
+    """An export's content, comparable across runs: text formats as
+    bytes, Parquet as its Arrow schema and rows (``repr``, so NaN equals
+    NaN), Excel as its sheet XML (zip entry timestamps differ)."""
+    import zipfile
+
+    import pyarrow.parquet as pq
+
+    if fmt == "parquet":
+        table = pq.read_table(path)
+        return table.schema, repr(table.to_pylist())
+    if fmt == "excel":
+        with zipfile.ZipFile(path) as z:
+            return z.read("xl/worksheets/sheet1.xml")
+    with open(path, "rb") as fh:
         return fh.read()
 
 
@@ -931,6 +952,9 @@ def _read_csv(path):
 def test_result_cache_reads_match_the_uncached_frame(spark, rows, parts, data):
     import tempfile
 
+    import pytest
+
+    from vscode_parquet_visualizer_spark import engine
     from vscode_parquet_visualizer_spark.engine import ResultSet, _with_row_id
     from vscode_parquet_visualizer_spark.operators import export as export_ops
     from vscode_parquet_visualizer_spark.operators import search as search_ops
@@ -941,26 +965,47 @@ def test_result_cache_reads_match_the_uncached_frame(spark, rows, parts, data):
     field = data.draw(st.sampled_from(_SORTABLE), label="sort field")
     direction = data.draw(st.sampled_from([sort_ops.ASC, sort_ops.DESC]), label="direction")
     term = data.draw(st.text(alphabet="0159-.:aZé€ ", min_size=1, max_size=2), label="term")
+    deep = data.draw(st.floats(min_value=0, max_value=1), label="deep page fraction")
+    orders = [(None, sort_ops.ASC), (field, sort_ops.ASC), (field, sort_ops.DESC)]
+    exported = {orders[0], (field, direction)}  # pages read all three
 
     def page(df, n, count):
         return repr(Paginator(df, count, size).goto(n).drop(ROW_ID).collect())
 
-    rs = ResultSet(frame, name="prop_cache")
-    try:
-        with tempfile.TemporaryDirectory() as tmp:
-            for searched in ("", term):  # the base result, then a searched one
-                count = rs.search(searched)
-                plain = _with_row_id(search_ops.search(frame, searched))
-                assert count == plain.count() == rs.current_count
-                pages = page_count(count, size)
-                deep = data.draw(st.integers(min_value=1, max_value=pages), label="deep page")
-                for order in (None, field):
-                    rs.sort(order, direction)
-                    ordered = sort_ops.sort(plain, order, direction)
-                    for n in sorted({1, deep}):
-                        assert repr(rs.page_df(n, size).collect()) == page(ordered, n, count)
-                    rs.export(f"{tmp}/cached.csv", "csv")
-                    export_ops.export(ordered.drop(ROW_ID), f"{tmp}/plain.csv", "csv")
-                    assert _read_csv(f"{tmp}/cached.csv") == _read_csv(f"{tmp}/plain.csv")
-    finally:
-        rs.unpersist()
+    def reads(gate, tmp):
+        """Every read of the ResultSet with the gate at ``gate``; the
+        Spark route (gate -1) is also checked against the uncached frame."""
+        out = []
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(engine, "_LOCAL_VIEW_MAX_BYTES", gate)
+            rs = ResultSet(frame, name="prop_cache")
+            try:
+                for searched in ("", term):  # the base result, then a searched one
+                    count = rs.search(searched)
+                    assert rs._current_small() == (gate > 0)
+                    plain = _with_row_id(search_ops.search(frame, searched))
+                    assert count == plain.count() == rs.current_count
+                    pages = page_count(count, size)
+                    for order, way in orders:
+                        rs.sort(order, way)
+                        ordered = sort_ops.sort(plain, order, way)
+                        for n in sorted({1, 1 + int(deep * (pages - 1)), pages}):
+                            out.append(repr(rs.page(n, size)))
+                            if gate < 0:
+                                want = page(ordered, n, count)
+                                assert repr(rs.page_df(n, size).collect()) == want
+                        if (order, way) not in exported:
+                            continue
+                        for fmt, ext in _EXPORTS.items():
+                            rs.export(f"{tmp}/cached.{ext}", fmt)
+                            out.append(_read_export(f"{tmp}/cached.{ext}", fmt))
+                        if gate < 0:
+                            export_ops.export(ordered.drop(ROW_ID), f"{tmp}/plain.csv", "csv")
+                            assert _read_csv(f"{tmp}/cached.csv") == _read_csv(f"{tmp}/plain.csv")
+            finally:
+                rs.unpersist()
+        return out
+
+    with tempfile.TemporaryDirectory() as tmp:
+        spark_reads = reads(-1, tmp)
+        assert reads(1 << 62, tmp) == spark_reads

@@ -37,8 +37,24 @@ long as the heap fits the machine (session.get_spark sizes the local
 heap to a quarter of RAM); on a cluster you'd swap persist() for a
 checkpoint to a scratch table, the same orchestration shape. Every
 other cache in the session stays MEMORY_AND_DISK with the session's
-compression setting. Pages collect ≤ page_size rows to the driver;
-everything else stays distributed.
+compression setting.
+
+Small views are read from the driver. When the current view's cache
+(Catalyst's size of the cached frame, read once per materialization) is
+at or below ``_LOCAL_VIEW_MAX_BYTES``, the first page or CSV export after
+a state change (query, search, sort, clear) collects the whole view once,
+in page order, from one partition: one job. Later pages and CSV exports
+of that view slice the copy and fire no job, until the next state
+change, ``unpersist`` or ``close`` drops it. JSON, ndJSON, Parquet, Excel
+and Avro exports of a small view run their exporter over the same
+one-partition ordered frame: one job instead of a global sort's 3-6,
+and every byte still comes from Spark. The driver holds at most one copy
+per ``ResultSet``, of a view under the gate: at the gate, ~4.3 MB of
+Python heap for ~8k lineitem rows (PERF.md). Views above the gate,
+``page_df``, and ``distributed``/``partition_by`` exports keep the Spark
+path: a page collects at most page_size rows, and everything else stays
+distributed, except a single-file export, which the driver writes
+(operators/export.py states what each format holds there).
 """
 
 from __future__ import annotations
@@ -49,7 +65,7 @@ from contextlib import contextmanager
 from typing import Any
 
 from pyspark import StorageLevel
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 from vscode_parquet_visualizer_spark.functions.completions import completions
@@ -70,8 +86,10 @@ from vscode_parquet_visualizer_spark.operators.pagination import (
     PAGE_ALL,
     ROW_ID,
     Paginator,
+    page_span,
     partition_rows,
 )
+from vscode_parquet_visualizer_spark.operators.scale import plan_bytes
 from vscode_parquet_visualizer_spark.plans import dialect
 from vscode_parquet_visualizer_spark.session import get_spark
 from vscode_parquet_visualizer_spark.sources import registry
@@ -102,6 +120,14 @@ def scheduler_pool(spark: SparkSession, name: str):
         sc.setLocalProperty("spark.scheduler.pool", prev)
 
 
+# A view whose cache is at most this many bytes is served from one
+# ordered driver copy (module docstring). It sits at the measured
+# crossover (PERF.md, tools/local_view_crossover.py): past ~700 kB of
+# cache (~8k lineitem rows), collecting the copy costs more than the two
+# Spark pages it replaces. At the gate the copy holds ~4.3 MB of Python
+# heap on the driver.
+_LOCAL_VIEW_MAX_BYTES = 700_000
+
 _COMPRESSED = "spark.sql.inMemoryColumnarStorage.compressed"
 _persist_lock = threading.Lock()
 
@@ -129,20 +155,23 @@ def _persist_result(df: DataFrame) -> DataFrame:
                 conf.set(_COMPRESSED, prev)
 
 
-def _materialize(df: DataFrame, pool: str) -> list[tuple[int, int]]:
+def _materialize(df: DataFrame, pool: str) -> tuple[list[tuple[int, int]], bool]:
     """Cache ``df`` and build its position index in one eager action —
-    the CTAS moment. A failing action drops the cache entry this call
-    registered; an entry the plan already had (the same SQL re-run) is
-    its owner's to drop."""
+    the CTAS moment. Returns the index and whether the view is small:
+    its cache, as Catalyst sizes it once built, at or below
+    ``_LOCAL_VIEW_MAX_BYTES`` (no estimate keeps the Spark path). A
+    failing action drops the cache entry this call registered; an entry
+    the plan already had (the same SQL re-run) is its owner's to drop."""
     fresh = df.storageLevel == StorageLevel.NONE
     _persist_result(df)
     try:
         with scheduler_pool(df.sparkSession, pool):
-            return partition_rows(df)
+            parts = partition_rows(df)
     except BaseException:
         if fresh:
             df.unpersist()
         raise
+    return parts, 0 <= plan_bytes(df, unknown=-1) <= _LOCAL_VIEW_MAX_BYTES
 
 
 def _with_row_id(df: DataFrame) -> DataFrame:
@@ -158,18 +187,23 @@ class ResultSet:
     Mirrors the reference's ``query_result`` table plus its
     ``filtered_query_result`` derivative (search) — both live here as
     cached DataFrames; sort and page state mirror the paginator protocol.
+    A small view is also held as one ordered list of rows (``_local``,
+    module docstring), built and dropped under ``_local_lock``.
     """
 
     def __init__(self, df: DataFrame, name: str = "query_result", settings: Settings | None = None):
         self.settings = settings or Settings()
         self._base = _with_row_id(df)
-        self._base_parts = _materialize(self._base, POOL_QUERY)
+        self._base_parts, self._base_small = _materialize(self._base, POOL_QUERY)
         self.row_count = sum(rows for _, rows in self._base_parts)
         self.name = name
         self._filtered: DataFrame | None = None
         self._filtered_parts: list[tuple[int, int]] | None = None
+        self._filtered_small = False
         self._sort_field: str | None = None
         self._sort_dir: str = sort_ops.ASC
+        self._local: list[Row] | None = None
+        self._local_lock = threading.Lock()
         self.query_ms: float | None = None
         self._base.drop(ROW_ID).createOrReplaceTempView(name)
         from vscode_parquet_visualizer_spark.plans.rank_sql import (
@@ -197,13 +231,36 @@ class ResultSet:
             return self._filtered_parts  # type: ignore[return-value]
         return self._base_parts
 
+    def _current_small(self) -> bool:
+        return self._filtered_small if self._filtered is not None else self._base_small
+
     @property
     def current_count(self) -> int:
         return sum(rows for _, rows in self._current_parts())
 
+    def _local_rows(self) -> list[Row] | None:
+        """The current view's rows in page order, ``__row_id`` dropped:
+        collected by one job on the first call after a state change and
+        kept until the next; None for a view above the gate."""
+        with self._local_lock:
+            small = self._current_small()
+            if small and self._local is None:
+                with scheduler_pool(self._base.sparkSession, POOL_INTERACTIVE):
+                    self._local = self._one_partition().collect()
+            return self._local if small else None
+
+    def _one_partition(self) -> DataFrame:
+        """The current view in page order in one partition: any action on
+        it is one job (no range-partitioning sample, no shuffle)."""
+        view = self._current()
+        keys = sort_ops.sort_keys(view, self._sort_field, self._sort_dir)
+        return view.coalesce(1).sortWithinPartitions(*keys).drop(ROW_ID)
+
     # -- interaction (A7-A9) --------------------------------------------
     def sort(self, field: str | None, direction: str = sort_ops.ASC) -> None:
-        self._sort_field, self._sort_dir = field, direction
+        with self._local_lock:
+            self._sort_field, self._sort_dir = field, direction
+            self._local = None
 
     def search(self, term: str) -> int:
         """Materialize the filtered result (reference CTAS to
@@ -213,12 +270,14 @@ class ResultSet:
         the old relative order. Atomic like ``Dataset.query``: the new
         matches are cached and counted before the old ones are dropped, so
         a search that fails keeps the previous search result."""
-        flt, parts = None, None
+        flt, parts, small = None, None, False
         if term != "":
             flt = _with_row_id(search_ops.search(self._base.drop(ROW_ID), term))
-            parts = _materialize(flt, POOL_INTERACTIVE)
+            parts, small = _materialize(flt, POOL_INTERACTIVE)
         old = self._filtered
-        self._filtered, self._filtered_parts = flt, parts
+        with self._local_lock:
+            self._filtered, self._filtered_parts = flt, parts
+            self._filtered_small, self._local = small, None
         # the same term re-searched shares the old cache entry: keep it
         if old is not None and not (flt is not None and flt.sameSemantics(old)):
             old.unpersist()
@@ -235,7 +294,12 @@ class ResultSet:
         )
 
     def page(self, page_number: int = 1, page_size: int = 20) -> list[dict[str, Any]]:
-        """One page of JSON-safe rows — the webview row contract."""
+        """One page of JSON-safe rows — the webview row contract. A small
+        view's page is a slice of its driver copy."""
+        rows = self._local_rows()
+        if rows is not None:
+            offset, n = page_span(len(rows), page_size, page_number)
+            return serialize_rows(rows[offset : offset + n], settings=self.settings)
         pager = self.paginator(page_size)
         with scheduler_pool(self._base.sparkSession, POOL_INTERACTIVE):
             rows = pager.goto(page_number).drop(ROW_ID).collect()
@@ -253,13 +317,24 @@ class ResultSet:
 
     # -- export (A13-A18): search+sort applied, like the reference --------
     def export(self, path: str, fmt: str, **kwargs) -> None:
+        """A small view's single-file export reads the one-partition
+        ordered frame, CSV rows coming from the driver copy (module
+        docstring); anything else exports the globally sorted view."""
+        spread = kwargs.get("distributed") or kwargs.get("partition_by")
         with scheduler_pool(self._base.sparkSession, POOL_INTERACTIVE):
-            export_ops.export(self._ordered().drop(ROW_ID), path, fmt, **kwargs)
+            if spread or not self._current_small():
+                export_ops.export(self._ordered().drop(ROW_ID), path, fmt, **kwargs)
+                return
+            if fmt.lower() == "csv":
+                kwargs["rows"] = self._local_rows()
+            export_ops.export(self._one_partition(), path, fmt, **kwargs)
 
     def unpersist(self, keep_base: bool = False) -> None:
-        """Drop the cached result; ``keep_base`` drops only the search
-        result (the base cache entry is shared with a successor whose plan
-        is the same — re-running the same SQL)."""
+        """Drop the cached result and the driver copy; ``keep_base`` drops
+        only the search result (the base cache entry is shared with a
+        successor whose plan is the same — re-running the same SQL)."""
+        with self._local_lock:
+            self._local = None
         if self._filtered is not None:
             self._filtered.unpersist()
         if not keep_base:

@@ -78,6 +78,17 @@ def row_id_span(
     return _row_id_at(parts, offset), _row_id_at(parts, last) + 1
 
 
+def page_span(total_rows: int, page_size: int, page_number: int) -> tuple[int, int]:
+    """``(offset, n)`` of one page; the reference raises on page < 1 or
+    page > pageCount (src/paginator.ts:66-79), and so does this."""
+    pages = page_count(total_rows, page_size)
+    if page_number < 1 or page_number > pages:
+        raise IndexError(f"page {page_number} out of range 1..{pages}")
+    if page_size == PAGE_ALL:
+        return 0, total_rows
+    return (page_number - 1) * page_size, page_size
+
+
 @dataclass
 class Paginator:
     """Stateful page navigation mirroring src/paginator.ts:31-79.
@@ -98,27 +109,18 @@ class Paginator:
     def total_pages(self) -> int:
         return page_count(self.total_rows, self.page_size)
 
-    def _slice(self) -> DataFrame:
+    def goto(self, page_number: int) -> DataFrame:
+        offset, n = page_span(self.total_rows, self.page_size, page_number)
+        self.page_number = page_number
         if self.page_size == PAGE_ALL:
             return self.df
-        offset = (self.page_number - 1) * self.page_size
         if self.partition_rows is None:
             if not offset:
-                return self.df.limit(self.page_size)
-            return self.df.offset(offset).limit(self.page_size)
-        lo, hi = row_id_span(self.partition_rows, offset, self.page_size)
+                return self.df.limit(n)
+            return self.df.offset(offset).limit(n)
+        lo, hi = row_id_span(self.partition_rows, offset, n)
         row_id = F.col(ROW_ID)
-        return self.df.filter((row_id >= lo) & (row_id < hi)).limit(self.page_size)
-
-    def goto(self, page_number: int) -> DataFrame:
-        # Reference raises on page < 1 or page > pageCount
-        # (src/paginator.ts:66-79); we clamp-or-raise identically.
-        if page_number < 1 or page_number > self.total_pages:
-            raise IndexError(
-                f"page {page_number} out of range 1..{self.total_pages}"
-            )
-        self.page_number = page_number
-        return self._slice()
+        return self.df.filter((row_id >= lo) & (row_id < hi)).limit(n)
 
     def first(self) -> DataFrame:
         return self.goto(1)

@@ -19,11 +19,14 @@ ASC = "asc"
 DESC = "desc"
 
 
-def sort(df: DataFrame, field: str | None, direction: str = ASC) -> DataFrame:
-    """Order by one column, tiebroken by __row_id when present. DuckDB —
-    the engine whose injected ``ORDER BY "<field>" ASC|DESC`` this mirrors
-    — defaults to NULLS LAST in *both* directions (its
-    ``default_null_order`` setting), so both branches pin nulls last."""
+def sort_keys(df: DataFrame, field: str | None, direction: str = ASC) -> list:
+    """The one key list of a sorted view: the field, then __row_id when
+    present. DuckDB — the engine whose injected ``ORDER BY "<field>"
+    ASC|DESC`` this mirrors — defaults to NULLS LAST in *both*
+    directions (its ``default_null_order`` setting), so both branches
+    pin nulls last. ``sort`` orders a frame globally by these keys; the
+    engine's one-partition driver copy sorts within its one partition by
+    the same keys, so both give one order."""
     keys = []
     if field is not None:
         col = F.col(f"`{field}`")
@@ -33,6 +36,10 @@ def sort(df: DataFrame, field: str | None, direction: str = ASC) -> DataFrame:
             keys.append(col.asc_nulls_last())
     if ROW_ID in df.columns:
         keys.append(F.col(ROW_ID).asc())
-    if not keys:
-        return df
-    return df.orderBy(*keys)
+    return keys
+
+
+def sort(df: DataFrame, field: str | None, direction: str = ASC) -> DataFrame:
+    """Order by one column, tiebroken by __row_id when present."""
+    keys = sort_keys(df, field, direction)
+    return df.orderBy(*keys) if keys else df

@@ -5656,17 +5656,21 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
 
     sql = _rewrite_calls(sql, "entropy", entropy_x)
 
-    # list_reduce: DuckDB seeds the fold with the FIRST element
-    sql = _rewrite_calls(
-        sql,
-        "list_reduce",
-        lambda a: (
-            f"reduce(slice({a[0]}, 2, greatest(size({a[0]}) - 1, 0)), "
-            f"try_element_at({a[0]}, 1), {a[1]})"
+    # list_reduce and its alias reduce have no init arg: DuckDB seeds the
+    # fold with the first element. DuckDB errors on an empty list; this
+    # lowering yields NULL instead (documented softening). get() is
+    # 0-based and rename-proof. Spark's own 3-arg reduce passes through.
+    def list_reduce_x(a):
+        if len(a) != 2:
+            return None
+        lst, lam = a[0], a[1]
+        return (
+            f"aggregate(slice({lst}, 2, greatest(size({lst}) - 1, 0)), "
+            f"get({lst}, 0), {lam})"
         )
-        if len(a) == 2
-        else None,
-    )
+
+    for _red in ("list_reduce", "reduce"):
+        sql = _rewrite_calls(sql, _red, list_reduce_x)
     # list_aggregate 3-arg string_agg form (2-arg min/max/count are
     # lowered earlier by rewrite_list_aggregate; sum stays loud — DuckDB
     # promotes to HUGEINT, Spark would silently overflow)
@@ -6606,21 +6610,6 @@ def rewrite_function_shapes(sql: str, stash: list[str] | None = None) -> str:
             f"array_distinct(filter({a[0]}, __ld -> __ld IS NOT NULL))"
         ) if len(a) == 1 else None,
     )
-    # reduce (DuckDB's alias of list_reduce) has no init arg: seed with
-    # the first element. DuckDB errors on an empty list; this lowering
-    # yields NULL instead (documented softening). get() is 0-based and
-    # rename-proof. Spark's own 3-arg reduce passes through.
-    def list_reduce_x(a):
-        if len(a) != 2:
-            return None
-        lst, lam = a[0], a[1]
-        return (
-            f"aggregate(slice({lst}, 2, greatest(size({lst}) - 1, 0)), "
-            f"get({lst}, 0), {lam})"
-        )
-
-    sql = _rewrite_calls(sql, "reduce", list_reduce_x)
-
     # any_value with an ORDER BY modifier → min_by/max_by (single sort
     # key; first/last get the same lowering earlier in this function).
     # Plain any_value(x) (wave 47): DuckDB skips NULLs (first NON-NULL
